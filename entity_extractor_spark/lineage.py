@@ -1,48 +1,94 @@
-"""Per-partition lineage rows, run metrics, and idempotent stage writes
+"""Per-file lineage rows, run metrics, and idempotent stage writes
 (north rule: "resumable from checkpoint with per-partition lineage +
 metrics"; replaces the reference's resume flags at
 `run_extraction.py:253-260` and its driver-RAM result collection at
 `extraction_engine.py:276-278`).
 
 Design:
-* lineage is computed RELATIONALLY — ``spark_partition_id()`` + a
-  groupBy — never by collecting rows to the driver; at 10^12 rows the
-  lineage table is ~one row per task;
+* lineage is read from the parquet FOOTERS of a stage's output files —
+  one row per file, with the record count and, for a keyed stage, the
+  key's min/max from the row-group statistics the writer already kept.
+  No Spark job runs and no data page is read, so bookkeeping cost is
+  per file, not per row. These are the fields an Iceberg manifest keeps
+  per data file (``record_count``, ``lower_bounds``, ``upper_bounds``);
 * stage idempotence is marker-file based: a stage directory whose
   ``_STAGE_META.json`` matches the requested (stage, params) fingerprint
   is trusted and skipped, so a re-run after failure resumes at the first
   incomplete stage (the parquet `_SUCCESS` marker guards partial
-  writes). On a cluster the same protocol rides on Iceberg snapshots;
-* metrics come from the same lineage aggregation (row counts per stage)
-  plus simple wall-clock stamps in the manifest.
+  writes). The marker also stores the stage's schema, so neither a fresh
+  nor a resumed stage is reloaded through schema inference. On a cluster
+  the same protocol rides on Iceberg snapshots;
+* metrics come from the same lineage rows (row counts per stage) plus
+  simple wall-clock stamps in the manifest.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
 STAGE_META = "_STAGE_META.json"
+LINEAGE_FILE = "lineage.parquet"
 
 
-def lineage_rows(df: DataFrame, stage: str, key_col: str | None = None) -> DataFrame:
-    """One row per physical partition: row count (+ key range if given)."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
+def _key_bounds(md: pq.FileMetaData, col: int) -> tuple[object, object]:
+    """Min/max of leaf column ``col`` over a file's row groups; (None,
+    None) when the file has no non-null key or a row group holding
+    values has no statistics."""
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(col).statistics
+        if st is None or not st.has_min_max:
+            if st is not None and st.num_values == 0:  # all-null row group
+                continue
+            return None, None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi
+
+
+def lineage_rows(df: DataFrame, stage: str, key_col: str | None = None) -> pa.Table:
+    """One row per parquet file behind ``df``, read from its footer:
+    ``partition_id`` (the writing task's number, from the ``part-NNNNN``
+    file name), ``n_rows``, and with ``key_col`` the key's ``min_key`` /
+    ``max_key``, typed like the key. Runs no Spark job."""
+    names, pids, counts, lows, highs = [], [], [], [], []
+    for uri in sorted(df.inputFiles()):
+        filesystem, path = pafs.FileSystem.from_uri(uri)
+        with filesystem.open_input_file(path) as f:
+            md = pq.read_metadata(f)
+        name = os.path.basename(path)
+        names.append(name)
+        pids.append(int(name.split("-")[1]))
+        counts.append(md.num_rows)
+        if key_col is not None:
+            leaves = [md.schema.column(i).path for i in range(md.num_columns)]
+            lo, hi = _key_bounds(md, leaves.index(key_col))
+            lows.append(lo)
+            highs.append(hi)
+    cols = {
+        "stage": pa.array([stage] * len(names), pa.string()),
+        "file_name": pa.array(names, pa.string()),
+        "partition_id": pa.array(pids, pa.int32()),
+        "n_rows": pa.array(counts, pa.int64()),
+    }
     if key_col is not None:
-        aggs += [F.min(key_col).alias("min_key"), F.max(key_col).alias("max_key")]
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(*aggs)
-        .select(F.lit(stage).alias("stage"), F.col("_pid").alias("partition_id"), *[
-            F.col(c) for c in (["n_rows", "min_key", "max_key"] if key_col else ["n_rows"])
-        ])
-    )
+        key_type = to_arrow_type(df.schema[key_col].dataType)
+        cols["min_key"] = pa.array(lows, key_type)
+        cols["max_key"] = pa.array(highs, key_type)
+    return pa.table(cols)
 
 
 def _fingerprint(stage: str, params: dict) -> str:
@@ -63,14 +109,24 @@ class StageRunner:
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
 
-    def is_done(self, stage: str, params: dict | None = None) -> bool:
+    def _lineage_dir(self, stage: str) -> str:
+        return os.path.join(self.root, "_lineage", stage)
+
+    def _done_meta(self, stage: str, params: dict | None) -> dict | None:
+        """The stage's marker when a completed run with this fingerprint
+        (and a stored schema) exists, else None."""
         meta_path = os.path.join(self._dir(stage), STAGE_META)
         success = os.path.join(self._dir(stage), "_SUCCESS")
         if not (os.path.exists(meta_path) and os.path.exists(success)):
-            return False
+            return None
         with open(meta_path) as f:
             meta = json.load(f)
-        return meta.get("fingerprint") == _fingerprint(stage, params or {})
+        if meta.get("fingerprint") != _fingerprint(stage, params or {}) or "schema" not in meta:
+            return None
+        return meta
+
+    def is_done(self, stage: str, params: dict | None = None) -> bool:
+        return self._done_meta(stage, params) is not None
 
     def run(
         self,
@@ -85,28 +141,22 @@ class StageRunner:
         so downstream stages read the materialized, lineage-truncated
         table (the checkpoint that makes the whole job resumable)."""
         out = self._dir(stage)
-        if self.is_done(stage, params):
+        meta = self._done_meta(stage, params)
+        if meta is not None:
             self.run_metrics.append({"stage": stage, "skipped": True})
-            return self.spark.read.parquet(out)
+            return self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(out)
         t0 = time.perf_counter()
         df = build()
-        writer = df.write.mode("overwrite")
         if partition_by:
             df = df.repartition(F.col(partition_by))
-            writer = df.write.mode("overwrite")
-        writer.parquet(out)
-        loaded = self.spark.read.parquet(out)
+        df.write.mode("overwrite").parquet(out)
+        loaded = self.spark.read.schema(df.schema).parquet(out)
         lin = lineage_rows(loaded, stage, key_col)
-        lin_dir = os.path.join(self.root, "_lineage", stage)
-        lin.write.mode("overwrite").parquet(lin_dir)
-        # row count from the (tiny) lineage table, not a second full scan
-        # of the stage output — at 10^12 rows the saved scan is the
-        # difference between one and two passes over every stage's bytes
-        n = int(
-            self.spark.read.parquet(lin_dir)
-            .agg(F.coalesce(F.sum("n_rows"), F.lit(0)))
-            .first()[0]
-        )
+        lin_dir = self._lineage_dir(stage)
+        shutil.rmtree(lin_dir, ignore_errors=True)
+        os.makedirs(lin_dir)
+        pq.write_table(lin, os.path.join(lin_dir, LINEAGE_FILE))
+        n = pc.sum(lin["n_rows"]).as_py() or 0
         self.run_metrics.append(
             {
                 "stage": stage,
@@ -115,8 +165,16 @@ class StageRunner:
                 "wall_s": round(time.perf_counter() - t0, 3),
             }
         )
-        with open(os.path.join(out, STAGE_META), "w") as f:
-            json.dump({"fingerprint": _fingerprint(stage, params or {}), "rows": n}, f)
+        meta = {
+            "fingerprint": _fingerprint(stage, params or {}),
+            "rows": n,
+            "schema": df.schema.jsonValue(),
+        }
+        # the marker makes the stage count as done: write it whole or not at all
+        tmp = os.path.join(out, STAGE_META + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+        os.replace(tmp, os.path.join(out, STAGE_META))
         return loaded
 
     def write_manifest(self) -> str:
@@ -127,4 +185,9 @@ class StageRunner:
         return path
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_lineage", "*"))
+        """The lineage rows of the stages this runner ran or skipped."""
+        tables = [
+            pq.read_table(os.path.join(self._lineage_dir(m["stage"]), LINEAGE_FILE))
+            for m in self.run_metrics
+        ]
+        return self.spark.createDataFrame(pa.concat_tables(tables, promote_options="default"))

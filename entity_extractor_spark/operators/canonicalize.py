@@ -1,14 +1,25 @@
-"""Surface-form canonicalization via connected components over alias edges.
+"""Surface-form canonicalization: union-find over alias edges.
 
 The reference's canonicalization is implicit (colon-split canonical name,
 `extraction_engine.py:51`, plus alias lists); the north rule promotes it
 to an explicit union-find over alias edges so that case/hyphen/phrase
 variants of one entity collapse to a single canonical ``entity_id``.
 
-Algorithm: iterative min-label propagation expressed as DataFrame joins —
-each round every node adopts ``min(own label, min(neighbor labels))``.
-Convergence in O(component diameter) rounds (alias graphs are stars:
-2-3 rounds). Scale notes:
+Two engines, one rule set:
+
+* :func:`canonical_entities` runs the union-find on the driver. The
+  gazetteer is the broadcast side of the whole job (10^3-10^5 terms, and
+  the pipeline already holds it in memory to build the matcher), so a
+  partitioned plan has no work to spread: the Spark loop would spend
+  ~30 jobs of fixed cost labelling a few hundred nodes. Its only Spark
+  job is the write of the (term_id, entity_id) map.
+* :func:`connected_components` is the distributed form, for edge sets
+  that do not fit the driver (near-duplicate pair graphs) and the
+  reference that the driver union-find is tested against.
+
+Distributed algorithm: iterative min-label propagation expressed as
+DataFrame joins — each round every node adopts ``min(own label,
+min(neighbor labels))``, with pointer jumping. Scale notes:
 
 * the per-round aggregation is ``groupBy(node).agg(min(label))`` — an
   associative agg, so Catalyst's partial/final HashAggregate gives
@@ -20,13 +31,14 @@ Convergence in O(component diameter) rounds (alias graphs are stars:
 * convergence is detected with an aggregate over the label delta, not a
   driver-side collect of labels.
 
-Returns (node, component) where component = lexicographic min node id of
-the component — deterministic, seedless.
+Both return component = lexicographic min node id of the component —
+deterministic, seedless.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -213,14 +225,60 @@ def alias_edges(gazetteer: DataFrame) -> DataFrame:
     return via_alias.unionByName(via_term)
 
 
-def canonical_entities(gazetteer: DataFrame) -> DataFrame:
+def _text(v: object) -> str | None:
+    # pandas holds a missing string as None or NaN; either is SQL null
+    return v if isinstance(v, str) else None
+
+
+def canonical_entities(gazetteer: DataFrame | pd.DataFrame) -> DataFrame:
     """(term_id, entity_id): every gazetteer term mapped to the canonical
-    component representative of its alias cluster."""
-    comp = connected_components(alias_edges(gazetteer))
-    return (
-        comp.filter(F.col("node").startswith("term:"))
-        .select(
-            F.expr("substring(node, 6)").alias("term_id"),
-            F.col("component").alias("entity_id"),
-        )
-    )
+    component representative of its alias cluster.
+
+    A union-find on the driver over the edges :func:`alias_edges` defines,
+    with the same string rules: Spark ``trim`` strips U+0020 only, the
+    colon split keeps the untrimmed title when there is no colon, null or
+    empty aliases add no edge, and a null title adds none (its term stays
+    out of the map). Union by minimum keeps every root at its component's
+    lexicographic min node, ``term:`` nodes included, which is the
+    representative :func:`connected_components` picks. A Spark frame is
+    collected first, as the matcher build already does.
+    """
+    if isinstance(gazetteer, DataFrame):
+        spark = gazetteer.sparkSession
+        pdf = gazetteer.select("term_id", "title", "aliases").toPandas()
+    else:
+        spark = SparkSession.active()
+        pdf = gazetteer
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    def union(a: str, b: str) -> None:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+
+    for term_id, title, aliases in pdf[["term_id", "title", "aliases"]].itertuples(
+        index=False, name=None
+    ):
+        title, term_id = _text(title), _text(term_id)
+        if title is None:
+            continue
+        canonical = (title.split(":")[0].strip(" ") if ":" in title else title).lower()
+        if term_id is not None:
+            union(f"term:{term_id}", canonical)
+        for raw in aliases if aliases is not None else ():
+            alias = (_text(raw) or "").strip(" ").lower()
+            if alias:
+                union(canonical, alias)
+    rows = sorted((n[5:], find(n)) for n in list(parent) if n.startswith("term:"))
+    # one partition: a driver-built map is one small file, not one per core
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["term_id", "entity_id"], dtype=object),
+        "term_id string, entity_id string",
+    ).coalesce(1)

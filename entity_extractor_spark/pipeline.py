@@ -14,8 +14,9 @@ Scale shape (the plan you'd want at 10^12 turns):
   * the flag window + triple dedup shuffle on conv_id — the SAME key, so
     AQE reuses the partitioning; entity-keyed aggregations are salted
     (operators/graph.salted_count) against hot entities
-  * the gazetteer/alias side is always broadcast; the CC loop runs on the
-    (tiny) alias edge set, never on the corpus.
+  * the gazetteer/alias side is always broadcast; the alias union-find
+    runs on the driver over the gazetteer the job already holds, never
+    on the corpus.
 """
 
 from __future__ import annotations
@@ -74,9 +75,8 @@ def run_pipeline(
         out["scored"] = scored
 
     if "aliases" in gazetteer.columns:
-        gaz_alias = spark.createDataFrame(gazetteer[["term_id", "title", "aliases"]])
         entity_map = runner.run(
-            "entity_map", lambda: canonical_entities(gaz_alias), params=params
+            "entity_map", lambda: canonical_entities(gazetteer), params=params
         )
     else:
         entity_map = None

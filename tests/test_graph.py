@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entity_extractor_spark.operators.canonicalize import (
@@ -44,6 +49,54 @@ def test_canonical_entities_groups_variants(spark):
     # t1 and t2 share the alias surface "zorplex" -> same component; t3 separate
     assert m["t1"] == m["t2"]
     assert m["t3"] != m["t1"]
+
+
+# Surfaces from a small alphabet so canonicals and aliases collide and
+# chain terms together; spaces, tabs and newlines at both ends, inside,
+# and next to the colon, several or leading colons, case variants, and
+# aliases that spell a ``term:`` node. Letters are limited to ones whose
+# lowercase is the same in Java and Python.
+_surface = st.one_of(
+    st.text(alphabet=" \t\naAbB:Ää-", max_size=7),
+    st.sampled_from(
+        ["", " ", ":", " a : b", "A", "a", "a:", "\ta\n", "a\t:b", "B \n:", " a:", "term:t1"]
+    ),
+)
+_gazetteer = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.sampled_from(["t0", "t1", "t2", "t3", "t4"])),
+        st.one_of(st.none(), _surface),
+        st.one_of(st.none(), st.lists(st.one_of(st.none(), _surface), max_size=4)),
+    ),
+    min_size=1,
+    max_size=8,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(batch=st.lists(_gazetteer, min_size=10, max_size=30))
+def test_canonical_entities_matches_spark_components(spark, batch):
+    """The driver union-find equals the distributed reference: Spark
+    connected components over ``alias_edges``, restricted to term nodes.
+
+    One reference run checks the whole batch: gazetteer ``k``'s nodes are
+    prefixed ``k|``, which keeps its components apart from the others'
+    and leaves the order of nodes inside a component unchanged."""
+    pdfs = [pd.DataFrame(rows, columns=["term_id", "title", "aliases"]) for rows in batch]
+    edges = [
+        alias_edges(
+            spark.createDataFrame(pdf, "term_id string, title string, aliases array<string>")
+        ).select(*(F.concat(F.lit(f"{k}|"), F.col(c)).alias(c) for c in ("src", "dst")))
+        for k, pdf in enumerate(pdfs)
+    ]
+    want: dict[int, list] = {k: [] for k in range(len(pdfs))}
+    for r in connected_components(functools.reduce(DataFrame.union, edges)).collect():
+        k, node = r["node"].split("|", 1)
+        if node.startswith("term:"):
+            want[int(k)].append((node[5:], r["component"].split("|", 1)[1]))
+    for k, pdf in enumerate(pdfs):
+        got = sorted(tuple(r) for r in canonical_entities(pdf).collect())
+        assert got == sorted(want[k]), batch[k]
 
 
 def test_predicate_triples(spark):

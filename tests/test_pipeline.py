@@ -5,15 +5,44 @@ from __future__ import annotations
 import glob
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from entity_extractor_spark import lineage
 from entity_extractor_spark.io import sinks
 from entity_extractor_spark.pipeline import run_pipeline
 from entity_extractor_spark.synth import SynthConfig, make_gazetteer, make_transcripts, to_spark
 
 CFG = SynthConfig(seed=7, n_terms=24, n_convs=40, hot_conv_factor=10)
+PIPELINE_KEYS = {
+    "mentions": "conv_id", "scored": "conv_id", "entity_map": None,
+    "triples": "conv_id", "edges": None, "nodes": None,
+}
+
+
+def _assert_lineage_matches_files(spark, root, lin, keys):
+    """Every stage's footer lineage equals a Spark scan of its files: the
+    row counts sum to the stage's count, and each file's row count and
+    key bounds equal a per-file groupBy over ``_metadata.file_name``."""
+    rows = lin.collect()
+    for stage, key in keys.items():
+        df = spark.read.parquet(os.path.join(root, stage))
+        got = {r["file_name"]: r for r in rows if r["stage"] == stage}
+        assert sum(r["n_rows"] for r in got.values()) == df.count(), stage
+        aggs = [F.count(F.lit(1)).alias("n")]
+        if key:
+            aggs += [F.min(key).alias("lo"), F.max(key).alias("hi")]
+        scan = {
+            r["f"]: r
+            for r in df.groupBy(F.col("_metadata.file_name").alias("f")).agg(*aggs).collect()
+        }
+        assert {f for f, r in got.items() if r["n_rows"]} == set(scan), stage
+        for f, r in scan.items():
+            assert got[f]["n_rows"] == r["n"], (stage, f)
+            if key:
+                assert (got[f]["min_key"], got[f]["max_key"]) == (r["lo"], r["hi"]), (stage, f)
 
 
 @pytest.fixture(scope="module")
@@ -34,9 +63,10 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path_factory):
     # node kinds are classified
     kinds = {r["kind"] for r in out["nodes"].select("kind").distinct().collect()}
     assert "entity" in kinds and "turn" in kinds
-    # lineage has rows for every stage
+    # lineage has rows for every stage, and they match the written files
     stages = {r["stage"] for r in out["lineage"].select("stage").distinct().collect()}
     assert {"mentions", "triples", "edges", "nodes"} <= stages
+    _assert_lineage_matches_files(spark, root, out["lineage"], PIPELINE_KEYS)
     # manifest exists
     with open(os.path.join(root, "_RUN_MANIFEST.json")) as f:
         manifest = json.load(f)
@@ -47,6 +77,7 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path_factory):
     with open(os.path.join(root, "_RUN_MANIFEST.json")) as f:
         manifest2 = json.load(f)
     assert all(m["skipped"] for m in manifest2["metrics"])
+    assert sorted(out2["lineage"].collect()) == sorted(out["lineage"].collect())
     assert out2["mentions"].count() == n_mentions
     assert out2["triples"].count() == n_triples
 
@@ -78,6 +109,50 @@ def test_pipeline_resume_after_mid_run_crash(spark, corpus, tmp_path_factory):
     assert by["mentions"] is True  # completed upstream work not redone
     assert by["triples"] is False  # incomplete stage recomputed
     assert out2["triples"].count() == n_triples  # identical result
+
+
+def test_pipeline_bookkeeping_runs_no_spark_jobs(spark, corpus, tmp_path, monkeypatch):
+    """Job-count pins: the entity_map stage runs at most one Spark job
+    (its write), lineage bookkeeping runs none, and a resumed stage runs
+    none (its schema comes from the stage marker)."""
+    transcripts, gaz = corpus
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    run, rows = lineage.StageRunner.run, lineage.lineage_rows
+
+    def grouped_run(runner, stage, *args, **kwargs):
+        sc.setJobGroup(f"{tag}:{stage}", stage)
+        try:
+            return run(runner, stage, *args, **kwargs)
+        finally:
+            sc.setJobGroup(f"{tag}:between", "between stages")
+
+    def grouped_rows(df, stage, key_col=None):
+        # stays set for the rest of the stage: the lineage and marker writes
+        sc.setJobGroup(f"{tag}:{stage}.lineage", stage)
+        return rows(df, stage, key_col)
+
+    monkeypatch.setattr(lineage.StageRunner, "run", grouped_run)
+    monkeypatch.setattr(lineage, "lineage_rows", grouped_rows)
+    root = str(tmp_path / "jobs")
+    try:
+        run_pipeline(spark, transcripts, gaz, root)
+        jobs = {s: sc.statusTracker().getJobIdsForGroup(f"{tag}:{s}") for s in PIPELINE_KEYS}
+        lineage_jobs = {
+            s: sc.statusTracker().getJobIdsForGroup(f"{tag}:{s}.lineage") for s in PIPELINE_KEYS
+        }
+        tag = uuid.uuid4().hex  # the wrappers read it per call: fresh groups for the resume
+        run_pipeline(spark, transcripts, gaz, root)
+        resume_jobs = {
+            s: sc.statusTracker().getJobIdsForGroup(f"{tag}:{s}") for s in PIPELINE_KEYS
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs["entity_map"]) <= 1, jobs
+    assert all(len(j) > 0 for s, j in jobs.items() if s != "entity_map"), jobs
+    assert not any(lineage_jobs.values()), lineage_jobs
+    assert not any(resume_jobs.values()), resume_jobs
 
 
 def test_sinks(spark, corpus, tmp_path):
@@ -155,9 +230,10 @@ def test_curate_documents_end_to_end(spark, tmp_path):
     # packed: only train docs, valid per-shard bins
     assert out["packed"].count() == split_counts["train"]
     assert out["packed"].filter(F.col("bin") < 0).count() == 0
-    # lineage covers every stage
+    # lineage covers every stage, and matches the written files
     stages = {r["stage"] for r in out["lineage"].select("stage").distinct().collect()}
     assert {"exact_dedup", "near_dedup", "quality_filter", "split", "packed"} <= stages
+    _assert_lineage_matches_files(spark, root, out["lineage"], dict.fromkeys(stages, "doc_id"))
     # resume: identical params -> every stage skipped, same outputs
     out2 = curate_documents(spark, docs, root, quality_min=0.3)
     assert out2["filtered"].count() == n_filt

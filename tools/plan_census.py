@@ -2,7 +2,9 @@
 """One-shot physical-plan census over every contract query: per key, the
 shuffle-exchange count, join strategies, Python-eval node kinds, and the
 two anti-patterns that must never appear (cartesian/broadcast-nested-loop
-joins in the engine path, row-at-a-time BatchEvalPython anywhere).
+joins in the engine path, row-at-a-time BatchEvalPython anywhere). It
+exits 1 when either anti-pattern appears or a query's plan fails to
+build.
 
 This makes the per-round "plan audit of the expensive queries" a
 reproducible artifact instead of a hand-run .explain session: run it at
@@ -61,6 +63,7 @@ def main() -> None:
     rows = []
     bad_cartesian: list[str] = []
     bad_batch_eval: list[str] = []
+    errors: list[str] = []
     for name, fn in sorted(entry_mod.queries().items()):
         if name.endswith("_stream_parity"):
             rows.append((name, "-", "-", "-", "-", "streaming (see tests)"))
@@ -69,6 +72,7 @@ def main() -> None:
             plan = P.formatted_plan(fn(spark, SF_DIR))
         except Exception as exc:  # pragma: no cover - census must finish
             rows.append((name, "?", "?", "?", "?", f"ERROR {type(exc).__name__}"))
+            errors.append(name)
             continue
         ex = P.count_exchanges(plan)
         joins = []
@@ -126,7 +130,8 @@ def main() -> None:
         f" keys {bad_cartesian if bad_cartesian else ''} (by-design bounded"
         f" cartesians are annotated per-row above); row-at-a-time"
         f" BatchEvalPython in {len(bad_batch_eval)} keys"
-        f" {bad_batch_eval if bad_batch_eval else ''}.",
+        f" {bad_batch_eval if bad_batch_eval else ''}; plan failed to build in"
+        f" {len(errors)} keys {errors if errors else ''}.",
         "",
     ]
     out = "\n".join(lines)
@@ -138,7 +143,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(out)
         print(f"wrote {os.path.normpath(path)}")
-    if bad_cartesian or bad_batch_eval:
+    if bad_cartesian or bad_batch_eval or errors:
         sys.exit(1)
 
 
