@@ -17,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -116,6 +117,11 @@ HEADLINE = [
 ]
 
 
+# the timings main() adds from the synthetic corpus; the last-resort
+# _emit line keeps exactly these, so a rename fails loudly
+SYNTH_KEYS = ("transcript_extraction", "turns_per_sec", "kg_pipeline")
+
+
 def _q_context_window_100(spark, sf_dir):
     """Bench-only: the contract `context_window` query at the reference's
     ±100-word window (`extraction_engine.py:69-92`) instead of ±5, so a
@@ -196,11 +202,7 @@ def _emit(timings: dict, cold: dict, n_turns) -> None:
     if len(line) > 1900:
         # last resort: the headline totals must always parse; per-query
         # detail survives in BENCH_DETAIL_LAST.json
-        payload["queries"] = {
-            k: round(timings[k], 1)
-            for k in ("turns_per_sec", "kg_pipeline", "transcript_extraction")
-            if k in timings
-        }
+        payload["queries"] = {k: round(timings[k], 1) for k in SYNTH_KEYS}
         payload["detail"] = "BENCH_DETAIL_LAST.json"
         line = json.dumps(payload, separators=(",", ":"))
     print(line)
@@ -270,36 +272,24 @@ def main() -> None:
         t0 = time.perf_counter()
         _materialize(extract_mentions(transcripts, gaz))
         dt = min(dt, time.perf_counter() - t0)
-    timings["transcript_extraction"] = round(dt, 3)
-    timings["turns_per_sec"] = round(n_turns / dt, 1)
+    synth = {"transcript_extraction": round(dt, 3), "turns_per_sec": round(n_turns / dt, 1)}
 
-    # full KG build: mentions -> dedup -> triples -> salted edges (one plan)
-    from entity_extractor_spark.operators.graph import build_edges
-    from entity_extractor_spark.operators.mentions import dedup_mentions
-    from entity_extractor_spark.operators.predicates import all_triples
+    # full KG job: the production plan itself, each sample into a fresh
+    # root (StageRunner would otherwise skip every stage whose
+    # fingerprint matches), deleted outside the timed interval. Times the
+    # warm-up pass too and takes the best of >= 4 samples like the
+    # headline queries.
+    from entity_extractor_spark.pipeline import run_pipeline
 
-    def kg():
-        # materialize mentions once (the real pipeline checkpoints this
-        # stage too) — all_triples references it from three subtrees and
-        # would otherwise re-run the Python scan per branch. Checkpoint
-        # only the triple-relevant key columns: the ~1 KB context blobs
-        # never transit this barrier (measured small here, decisive at
-        # corpus scale).
-        m = (
-            dedup_mentions(extract_mentions(transcripts, gaz))
-            .select("conv_id", "turn_idx", "term_id")
-            .localCheckpoint(eager=True)
-        )
-        return build_edges(all_triples(transcripts, m))
-
-    # kg_pipeline had no clean settle record in round 3 — time the warm-up
-    # pass too and take the best of >= 4 samples like the headline queries
     dt = float("inf")
     for _ in range(max(4, REPEATS + 1)):
-        t0 = time.perf_counter()
-        _materialize(kg())
-        dt = min(dt, time.perf_counter() - t0)
-    timings["kg_pipeline"] = round(dt, 3)
+        with tempfile.TemporaryDirectory(prefix="bench_kg_") as root:
+            t0 = time.perf_counter()
+            run_pipeline(spark, transcripts, gaz, root)
+            dt = min(dt, time.perf_counter() - t0)
+    synth["kg_pipeline"] = round(dt, 3)
+    assert set(synth) == set(SYNTH_KEYS), sorted(synth)
+    timings.update(synth)
 
     _emit(timings, cold, n_turns)
     spark.stop()

@@ -125,9 +125,6 @@ class StageRunner:
             return None
         return meta
 
-    def is_done(self, stage: str, params: dict | None = None) -> bool:
-        return self._done_meta(stage, params) is not None
-
     def run(
         self,
         stage: str,

@@ -12,32 +12,33 @@ Semantics mirror the reference exactly:
 
 Scale design (SURVEY R4/R5/R7, J9): the naive reference plan is a
 nested-loop theta join (docs x terms regex scans). Here each text is
-scanned once: a C-speed tokenizer builds the token set, hash intersection
-against the single-word surface dictionary selects candidate terms, and
-phrase surfaces are prefiltered before any regex runs. In
-``word_boundary`` mode the phrase prefilter is FIRST-WORD indexed: a
-``\\b``-delimited occurrence of a phrase necessarily realizes the
-phrase's leading ``\\w+`` run as a maximal token of the text (the run is
-preceded by a word boundary and ends at the phrase's first non-word
-char), so candidate phrases come from the SAME token-set intersection as
-single words — O(distinct tokens) dict hits, no per-char scan — each
-confirmed by a C-speed substring check. (Round 3: this replaced the
-per-char Python Aho-Corasick walk. Measured on the synth corpus at
-4,000 terms the two tie — the synth vocabulary has only 12 name heads,
-so 3,890 phrases collapse onto 110 first words, the worst case for this
-index — while on realistic gazetteers whose phrase first-words are
-distinctive the token-set path does no per-char work at all. The
-automaton is kept for ``exact`` mode, where a leading token can be
-extended by adjacent ``[\\w\\-]`` chars and the first-word argument does
-not hold.) Exact-mode phrases use per-pattern ``in`` checks below
-``AC_MIN_PHRASES`` and one Aho-Corasick pass (`matching/aho.py`) above
-it. Per-text cost is O(len(text) + hits) INDEPENDENT of gazetteer size
-on every path. Only surfaces that pass the prefilter run their (cached,
+scanned once. A C-speed tokenizer builds the ``\\w+`` token set of the
+haystack (the lowered text in ``word_boundary`` mode, the text itself in
+``exact`` mode), and hash intersections against two dictionaries select
+the candidate terms:
+
+* single-word surfaces, keyed by the surface itself. ``exact`` mode
+  gates them on the reference's ``[\\w\\-]+`` token set instead; that is
+  its one extra tokenization.
+* phrase surfaces, keyed by their leading ``\\w+`` run. An occurrence of
+  a phrase in either mode has no word char before it (``\\b`` or
+  ``(?<!\\w)``), and inside the phrase its leading run is followed by a
+  non-word char, so the run is a maximal ``\\w+`` token of the text.
+  Each candidate phrase is confirmed by a C-speed substring check;
+  phrases that start with a non-word char get that check
+  unconditionally.
+
+Per-text cost is one tokenizer pass plus one dict probe per distinct
+token, with no per-char Python work. The first-word index has one
+measured worst case: the synth 4,000-term gazetteer, whose 12 name
+heads collapse 1,945 phrase keys onto 110 first words. Even there it
+runs within 10% of a per-char Aho-Corasick automaton (BENCH.md
+§Headline). Only surfaces that pass the prefilter run their (cached,
 compiled) occurrence regex on the original text to recover exact spans.
-All prefilters are exact (no recall loss): an IGNORECASE match of any
+The prefilter is exact (no recall loss): an IGNORECASE match of any
 surface implies lowered-substring containment (ASCII; documented limit).
-The hypothesis property suite pins both prefilter paths to the naive
-per-term regex oracle.
+The hypothesis property suite pins both modes to the naive per-term
+regex oracle.
 
 The matcher is a plain picklable object: built once on the driver from
 the gazetteer DataFrame and shipped to executors via
@@ -50,15 +51,9 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from entity_extractor_spark.matching.aho import AhoCorasick
-
 _WORD_RE = re.compile(r"\w+")
 _TOKEN_RE = re.compile(r"\b[\w\-]+\b")
 _PURE_WORD_RE = re.compile(r"^\w+$")
-
-# below this many phrase surfaces, C-speed per-pattern `in` checks beat
-# the per-char Python Aho-Corasick walk (measured crossover ~64)
-AC_MIN_PHRASES = 64
 
 
 def canonical_surface(term_name: str) -> str:
@@ -85,13 +80,11 @@ class GazetteerMatcher:
     mode: str = "word_boundary"
     # surface (lowered for word_boundary, original for exact) -> [(term_id, surface)]
     _word_index: dict[str, list[tuple[str, str]]] = field(default_factory=dict)
-    # phrase key -> [(term_id, surface)] + Aho-Corasick prefilter over the
-    # keys, built when the phrase dictionary is large (AC_MIN_PHRASES)
+    # phrase key (same normalization) -> [(term_id, surface)]
     _phrase_terms: dict[str, list[tuple[str, str]]] = field(default_factory=dict)
-    _phrase_ac: AhoCorasick | None = None
-    # word_boundary only: leading \w+ run of each phrase key -> [keys]
-    # (the token-set prefilter); keys with no leading word char fall back
-    # to unconditional substring checks
+    # leading \w+ run of each phrase key -> [keys] (the token-set
+    # prefilter); keys with no leading word char fall back to
+    # unconditional substring checks
     _phrase_first_word: dict[str, list[str]] = field(default_factory=dict)
     _phrase_no_word: list[str] = field(default_factory=list)
     # compiled-regex cache; rebuilt lazily per process, excluded from pickle
@@ -112,15 +105,12 @@ class GazetteerMatcher:
                     m._word_index.setdefault(key, []).append((term_id, surface))
                 else:
                     m._phrase_terms.setdefault(key, []).append((term_id, surface))
-        if mode == "word_boundary":
-            for key in m._phrase_terms:
-                mo = _WORD_RE.match(key)
-                if mo:
-                    m._phrase_first_word.setdefault(mo.group(0), []).append(key)
-                else:
-                    m._phrase_no_word.append(key)
-        elif len(m._phrase_terms) >= AC_MIN_PHRASES:
-            m._phrase_ac = AhoCorasick(list(m._phrase_terms))
+        for key in m._phrase_terms:
+            mo = _WORD_RE.match(key)
+            if mo:
+                m._phrase_first_word.setdefault(mo.group(0), []).append(key)
+            else:
+                m._phrase_no_word.append(key)
         return m
 
     def __getstate__(self):
@@ -128,7 +118,6 @@ class GazetteerMatcher:
             "mode": self.mode,
             "_word_index": self._word_index,
             "_phrase_terms": self._phrase_terms,
-            "_phrase_ac": self._phrase_ac,
             "_phrase_first_word": self._phrase_first_word,
             "_phrase_no_word": self._phrase_no_word,
         }
@@ -137,7 +126,6 @@ class GazetteerMatcher:
         self.mode = state["mode"]
         self._word_index = state["_word_index"]
         self._phrase_terms = state["_phrase_terms"]
-        self._phrase_ac = state["_phrase_ac"]
         self._phrase_first_word = state["_phrase_first_word"]
         self._phrase_no_word = state["_phrase_no_word"]
         self._regex_cache = {}
@@ -157,44 +145,23 @@ class GazetteerMatcher:
         """All occurrence spans of all gazetteer surfaces in ``text``."""
         if not text:
             return []
+        exact = self.mode == "exact"
+        haystack = text if exact else text.lower()
+        words = set(_WORD_RE.findall(haystack))
+        tokens = set(_TOKEN_RE.findall(text)) if exact else words
+        candidates: list[tuple[str, str]] = []
+        for tok in tokens.intersection(self._word_index.keys()):
+            candidates.extend(self._word_index[tok])
+        for tok in words.intersection(self._phrase_first_word.keys()):
+            for key in self._phrase_first_word[tok]:
+                if key in haystack:
+                    candidates.extend(self._phrase_terms[key])
+        for key in self._phrase_no_word:
+            if key in haystack:
+                candidates.extend(self._phrase_terms[key])
         spans: list[Span] = []
-        if self.mode == "word_boundary":
-            lowered = text.lower()
-            candidates: list[tuple[str, str]] = []
-            if self._word_index or self._phrase_first_word:
-                tokens = set(_WORD_RE.findall(lowered))
-                for tok in tokens.intersection(self._word_index.keys()):
-                    candidates.extend(self._word_index[tok])
-                for tok in tokens.intersection(self._phrase_first_word.keys()):
-                    for key in self._phrase_first_word[tok]:
-                        if key in lowered:
-                            candidates.extend(self._phrase_terms[key])
-            for key in self._phrase_no_word:
-                if key in lowered:
-                    candidates.extend(self._phrase_terms[key])
-            for term_id, surface in candidates:
-                for mo in self._pattern(term_id, surface).finditer(text):
-                    spans.append(Span(term_id, surface, mo.group(0), mo.start(), mo.end()))
-        else:  # exact mode: case-sensitive
-            candidates = []
-            if self._word_index:
-                tokens = set(_TOKEN_RE.findall(text))
-                for tok in tokens.intersection(self._word_index.keys()):
-                    candidates.extend(self._word_index[tok])
-            if self._phrase_ac is not None:
-                for key in self._phrase_ac.find_keys(text):
-                    candidates.extend(self._phrase_terms[key])
-            else:
-                for key, terms_for_key in self._phrase_terms.items():
-                    if key in text:
-                        candidates.extend(terms_for_key)
-            for term_id, surface in candidates:
-                for mo in self._pattern(term_id, surface).finditer(text):
-                    spans.append(Span(term_id, surface, mo.group(0), mo.start(), mo.end()))
+        for term_id, surface in candidates:
+            for mo in self._pattern(term_id, surface).finditer(text):
+                spans.append(Span(term_id, surface, mo.group(0), mo.start(), mo.end()))
         spans.sort(key=lambda s: (s.start, s.end, s.term_id, s.surface))
         return spans
-
-    def n_surfaces(self) -> int:
-        return sum(len(v) for v in self._word_index.values()) + sum(
-            len(v) for v in self._phrase_terms.values()
-        )

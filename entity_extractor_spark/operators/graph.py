@@ -71,11 +71,7 @@ def build_edges(triples: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS) ->
     ).select("src", "dst", "pred", F.col("weight").cast("long").alias("weight"))
 
 
-def build_nodes(
-    triples: DataFrame,
-    entity_names: DataFrame | None = None,
-    edges: DataFrame | None = None,
-) -> DataFrame:
+def build_nodes(triples: DataFrame, edges: DataFrame | None = None) -> DataFrame:
     """nodes(node_id, kind, canonical_name, mention_count).
 
     kind is derived from the id shape: ``tool:*`` -> tool, ``conv-*:n``
@@ -115,7 +111,7 @@ def build_nodes(
         .when(F.col("node_id").rlike("^conv-[0-9]+$"), "conversation")
         .otherwise("entity")
     )
-    nodes = (
+    return (
         ids.distinct()
         .join(counts, "node_id", "left")
         .select(
@@ -125,17 +121,3 @@ def build_nodes(
             F.coalesce("mention_count", F.lit(0)).cast("long").alias("mention_count"),
         )
     )
-    if entity_names is not None:
-        nm = F.broadcast(
-            entity_names.select(F.col("entity_id").alias("node_id"), F.col("name").alias("_nm"))
-        )
-        nodes = nodes.join(nm, "node_id", "left").select(
-            "node_id", "kind", F.coalesce("_nm", "canonical_name").alias("canonical_name"), "mention_count"
-        )
-    return nodes
-
-
-def bucket_by_conv(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Repartition by conv_id for co-located downstream joins/writes —
-    the parquet-level stand-in for Iceberg bucket partitioning."""
-    return df.repartition(n_buckets, "conv_id")

@@ -25,11 +25,8 @@ def test_emit_line_fits_driver_window_at_worst_case_widths(tmp_path, capsys):
     bench = _load_bench(tmp_path)
     # every headline key plus the synthetic-corpus extras the real run
     # appends, all at the widest realistic rendering (xxx.xxx)
-    timings = {k: 999.999 for k in bench.HEADLINE}
-    timings["context_window_100"] = 999.999
-    timings["transcript_extraction"] = 999.999
+    timings = {k: 999.999 for k in [*bench.HEADLINE, "context_window_100", *bench.SYNTH_KEYS]}
     timings["turns_per_sec"] = 999999.9
-    timings["kg_pipeline"] = 999.999
     bench._emit(timings, dict(timings), n_turns=99_999_999)
     line = capsys.readouterr().out.strip().splitlines()[-1]
     assert len(line) <= 1900, f"artifact line {len(line)}B overruns the tail window"
@@ -45,6 +42,7 @@ def test_emit_shrinks_rather_than_truncates(tmp_path, capsys):
     precision (still valid JSON), never emit a >1900B line."""
     bench = _load_bench(tmp_path)
     timings = {f"very_long_synthetic_query_name_{i:03d}": 123.456789 for i in range(70)}
+    timings.update({k: 123.456789 for k in bench.SYNTH_KEYS})
     timings["turns_per_sec"] = 123456.789
     bench._emit(timings, dict(timings), n_turns=1)
     line = capsys.readouterr().out.strip().splitlines()[-1]
@@ -54,6 +52,7 @@ def test_emit_shrinks_rather_than_truncates(tmp_path, capsys):
     # headline summary with an explicit pointer at the detail record
     assert len(payload["queries"]) == len(timings) or (
         payload.get("detail") == "BENCH_DETAIL_LAST.json"
+        and set(payload["queries"]) == set(bench.SYNTH_KEYS)
         and payload["value"] > 0
     )
 

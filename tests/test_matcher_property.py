@@ -16,8 +16,10 @@ sign), where Python's str.lower() and regex IGNORECASE disagree.
 
 from __future__ import annotations
 
+import pickle
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -94,48 +96,55 @@ def test_exact_mode_matches_naive_regex(tc):
     assert got == _naive_spans(terms, text, "exact"), (terms, text)
 
 
-# filler phrases from characters outside the text alphabet: they push the
-# phrase count past AC_MIN_PHRASES (so the Aho-Corasick prefilter path
-# runs in exact mode, and the first-word index carries many keys in
-# word_boundary mode) without ever matching a generated text
-_AC_FILLER = [(f"zfill{i}", [f"zq{i} zr{i}"]) for i in range(70)]
+# filler phrases from characters outside the text alphabet: 70 phrases
+# (with a space, so exact mode indexes them as phrases too) put many keys
+# in the first-word index without ever matching a generated text
+_PHRASE_FILLER = [(f"zfill{i}", [f"zq{i} zr{i}"]) for i in range(70)]
+MODES = ["word_boundary", "exact"]
 
 
+def _assert_find_matches_naive(m: GazetteerMatcher, terms, text, mode: str) -> None:
+    # the broadcast ships the matcher through its hand-written
+    # __getstate__, so the unpickled copy must find the same spans
+    want = _naive_spans(terms, text, mode)
+    for matcher in (m, pickle.loads(pickle.dumps(m))):
+        got = {(s.term_id, s.surface, s.text, s.start, s.end) for s in matcher.find(text)}
+        assert got == want, (terms, text)
+
+
+@pytest.mark.parametrize("mode", MODES)
 @settings(max_examples=300, deadline=None)
 @given(case())
-def test_word_boundary_large_phrase_dict_matches_naive_regex(tc):
+def test_large_phrase_dict_matches_naive_regex(mode, tc):
     terms, text = tc
-    terms = terms + _AC_FILLER
-    m = GazetteerMatcher.build(terms, mode="word_boundary")
-    # word_boundary phrases route through the first-word token index (the
-    # round-3 replacement for the Aho-Corasick walk), never the automaton
-    assert m._phrase_ac is None
+    terms = terms + _PHRASE_FILLER
+    m = GazetteerMatcher.build(terms, mode=mode)
     assert len(m._phrase_first_word) >= 70
-    got = {(s.term_id, s.surface, s.text, s.start, s.end) for s in m.find(text)}
-    assert got == _naive_spans(terms, text, "word_boundary"), (terms, text)
+    _assert_find_matches_naive(m, terms, text, mode)
 
 
+# phrases whose key starts with a NON-word char take the _phrase_no_word
+# unconditional-substring path; "a-b c" and "é-a b" start with a \w+ run
+# that a [\w\-]+ token would extend past the first-word index key
+_EDGE_PHRASES = ["- ab", ": c d", "a-b c", "é-a b"]
+
+
+@st.composite
+def edge_phrase_case(draw):
+    terms, text = draw(case())
+    # splice edge phrases into the text at drawn positions, so the
+    # prefilter sees real occurrences next to random neighbours
+    for phrase in draw(st.lists(st.sampled_from(_EDGE_PHRASES), max_size=4)):
+        i = draw(st.integers(0, len(text)))
+        text = text[:i] + phrase + text[i:]
+    return terms + [(f"tnw{i}", [p]) for i, p in enumerate(_EDGE_PHRASES)], text
+
+
+@pytest.mark.parametrize("mode", MODES)
 @settings(max_examples=200, deadline=None)
-@given(case())
-def test_word_boundary_no_leading_word_phrases(tc):
-    # phrases whose key starts with a NON-word char take the
-    # _phrase_no_word unconditional-substring fallback path
+@given(edge_phrase_case())
+def test_no_leading_word_phrases(mode, tc):
     terms, text = tc
-    terms = terms + [("tnw1", ["- ab"]), ("tnw2", [": c d"])]
-    m = GazetteerMatcher.build(terms, mode="word_boundary")
+    m = GazetteerMatcher.build(terms, mode=mode)
     assert len(m._phrase_no_word) >= 2
-    got = {(s.term_id, s.surface, s.text, s.start, s.end) for s in m.find(text)}
-    assert got == _naive_spans(terms, text, "word_boundary"), (terms, text)
-
-
-@settings(max_examples=300, deadline=None)
-@given(case())
-def test_exact_mode_ac_path_matches_naive_regex(tc):
-    terms, text = tc
-    # exact mode routes single-word labels to the token index; make the
-    # fillers phrases (with a space) so they land in the AC phrase path
-    terms = terms + _AC_FILLER
-    m = GazetteerMatcher.build(terms, mode="exact")
-    assert m._phrase_ac is not None
-    got = {(s.term_id, s.surface, s.text, s.start, s.end) for s in m.find(text)}
-    assert got == _naive_spans(terms, text, "exact"), (terms, text)
+    _assert_find_matches_naive(m, terms, text, mode)

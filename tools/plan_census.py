@@ -44,7 +44,7 @@ CARTESIAN_BY_DESIGN = {
     "ann_ivf_trained": "brute-force exact arm of the recall gate",
     "ann_sq8_topk": "SQ8 compresses, never prunes: scan-all by design",
     "embedding_dups": "exact pair baseline (scale path: embedding_dups_lsh)",
-    "scored_candidates": "contract-only candidate gen (prod path: AC matcher)",
+    "scored_candidates": "contract-only candidate gen (prod path: token-index matcher)",
     "bm25_topk": "1-row (N, avgdl) scalar broadcast",
     "heavy_hitters": "1-row total-token-count scalar broadcast",
     "kmv_overlap": "two 1-row sketch structs joined",
