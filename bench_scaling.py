@@ -11,11 +11,11 @@ Two job shapes:
   * default — the flagship mention-extraction stage (scan + kernel +
     flag window), the throughput headline;
   * ``--pipeline`` — the FULL run_pipeline job (mentions -> scoring ->
-    connected-components canonicalization -> triples -> node/edge
-    tables, every stage materialized to parquet by StageRunner exactly
-    as the resumable production job runs). The north rule's criterion
-    is the JOB, and the CC loop's fixed per-round scheduling cost is
-    the Amdahl term that only a full-pipeline measurement exposes.
+    alias canonicalization -> triples -> node/edge tables, every stage
+    materialized to parquet by StageRunner exactly as the resumable
+    production job runs). The north rule's criterion is the JOB, and
+    per-stage fixed scheduling cost is the Amdahl term that only a
+    full-pipeline measurement exposes.
 
 Default pair is N=4 vs 4N=16: a raw-CPU control (pure multiprocessing
 busy-loop, no Spark) shows this sandbox's hypervisor delivers ~0.96
@@ -33,7 +33,8 @@ the engine (that is how r03's one-shot full-pipeline ratio landed at
 0.387 while per-stage plans were unchanged). Back-to-back legs inside
 one visit share the burst; the min across visits discards it.
 
-Writes/updates BENCH.md and prints one JSON line.
+Prints one JSON line per visit, then a JSON result line that also
+carries the per-visit ``history``. It writes no report file.
 """
 
 from __future__ import annotations
@@ -43,7 +44,6 @@ import multiprocessing as mp
 import os
 import sys
 import time
-from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -193,16 +193,13 @@ def main() -> None:
     job = run_pipeline_at if pipeline_mode else run_at
     visits = int(os.environ.get("SPARK_GRAFT_SCALE_VISITS", "3"))
     t_low = t_high = float("inf")
-    history: list[tuple[float, float]] = []
+    history: list[dict] = []
     for v in range(visits):
         tl = job(LOW, gaz, v)
         th = job(HIGH, gaz, v)
-        history.append((round(tl, 2), round(th, 2)))
         t_low, t_high = min(t_low, tl), min(t_high, th)
-        print(
-            json.dumps({"visit": v, f"local[{LOW}]": round(tl, 2), f"local[{HIGH}]": round(th, 2)}),
-            flush=True,
-        )
+        history.append({"visit": v, f"local[{LOW}]": round(tl, 2), f"local[{HIGH}]": round(th, 2)})
+        print(json.dumps(history[-1]), flush=True)
     eff = (t_low / t_high) / (HIGH / LOW)
     result = {
         "metric": "pipeline_scaling_efficiency" if pipeline_mode else "scaling_efficiency",
@@ -216,40 +213,11 @@ def main() -> None:
             "cpu_control_eff": round(ctrl_eff, 3),
             "mem_bandwidth_control_eff": round(mem_eff, 3),
         },
+        "history": history,
         "n_turns": n,
         "target": 0.8,
     }
     print(json.dumps(result))
-
-    job_title = "Full-pipeline scaling run" if pipeline_mode else "Scaling run"
-    job_desc = (
-        "Job: FULL run_pipeline (mentions → scoring → CC canonicalization → "
-        "triples → node/edge tables, all stages materialized to parquet). "
-        if pipeline_mode
-        else ""
-    )
-    stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
-    lines = [
-        f"## {job_title} {stamp}",
-        "",
-        "| parallelism | wall-clock (s) | turns/sec |",
-        "|---|---|---|",
-        f"| local[{LOW}] | {t_low:.2f} | {n / t_low:.1f} |",
-        f"| local[{HIGH}] | {t_high:.2f} | {n / t_high:.1f} |",
-        "",
-        f"Efficiency (T{LOW}/T{HIGH})/{HIGH // LOW} = **{eff:.3f}** "
-        f"(target ≥ 0.8; reference ≈ 0.61). {job_desc}Corpus: {n} turns, "
-        f"{cfg.n_terms}-term gazetteer, seed {cfg.seed}. "
-        f"Protocol: {visits} interleaved LOW/HIGH visits, min per level "
-        f"(per-visit (T{LOW}, T{HIGH}) s: {history}). "
-        f"Raw-CPU control (no Spark) at the same process counts: "
-        f"{ctrl_eff:.3f}; memory-BANDWIDTH control (numpy memcpy, no "
-        f"Spark): {mem_eff:.3f} — the host's ceilings for cache-resident "
-        f"and bandwidth-bound work respectively on this pair.",
-        "",
-    ]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
 
 
 if __name__ == "__main__":

@@ -1,11 +1,12 @@
 """entity_extractor_spark — a from-scratch PySpark-native knowledge-graph
 construction engine with the capabilities of adsabs/entity_extractor.
 
-Pipeline: gazetteer mention detection (Arrow-batched automaton scan) →
+Pipeline: gazetteer mention detection (Arrow-batched token-index scan) →
 entity-link scoring (TF-IDF/char-ngram similarity + keyword heuristics) →
-likelihood classification → alias canonicalization (connected components)
-→ (subj, pred, obj) triple + node/edge materialization, all expressed as
-pyspark.sql DataFrame plans so Catalyst/AQE pick the physical strategy.
+likelihood classification → alias canonicalization (union-find over the
+gazetteer) → (subj, pred, obj) triple + node/edge materialization, all
+expressed as pyspark.sql DataFrame plans so Catalyst/AQE pick the
+physical strategy.
 
 Reference semantics: /root/reference (adsabs/entity_extractor, 2025-07-25).
 """

@@ -369,7 +369,12 @@ def q_facet_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_likelihood_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4: ordinal filter >= 'somewhat likely' over the composite score."""
-    from entity_extractor_spark.operators.scoring import assign_likelihood, composite_score, keyword_hits
+    from entity_extractor_spark.operators.scoring import (
+        assign_likelihood,
+        composite_score,
+        filter_by_likelihood,
+        keyword_hits,
+    )
     import __spark_entry__ as entry_mod
 
     d = _load(spark, sf_dir, "documents")
@@ -377,10 +382,8 @@ def q_likelihood_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim = (F.col("n_chars") % 97).cast("double") / 96.0
     kw = F.size(keyword_hits(F.col("text"), entry_mod.KEYWORDS))
     lik = assign_likelihood(composite_score(ner, sim, kw))
-    rank = F.when(lik == "very likely", 2).when(lik == "somewhat likely", 1).otherwise(0)
     return (
-        d.select("doc_id", lik.alias("likelihood"), rank.alias("r"))
-        .filter(F.col("r") >= 1)
+        filter_by_likelihood(d.select("doc_id", lik.alias("likelihood")), "somewhat likely")
         .groupBy("likelihood")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("likelihood")

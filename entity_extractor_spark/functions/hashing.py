@@ -67,18 +67,8 @@ def reduced_hash_sql(expr: str) -> str:
     return f"({token_hash_sql(expr)} % {MINHASH_PRIME})"
 
 
-def minhash_perm(i: int, hm: Column) -> Column:
-    """i-th minhash permutation of a reduced hash (Spark side)."""
-    return (F.lit(MINHASH_AS[i]) * hm + F.lit(MINHASH_BS[i])) % F.lit(MINHASH_PRIME)
-
-
 def minhash_perm_sql(i: int, expr: str) -> str:
     return f"(({MINHASH_AS[i]} * {expr} + {MINHASH_BS[i]}) % {MINHASH_PRIME})"
-
-
-def simhash_bit_weight(hm: Column, bit: int) -> Column:
-    """+1 / -1 weight of ``bit`` of a reduced hash (Spark side)."""
-    return (F.shiftright(hm, bit).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
 
 
 def simhash_bit_weight_sql(expr: str, bit: int) -> str:

@@ -131,10 +131,3 @@ def highlight(text: Column, term: str) -> Column:
     import re
 
     return F.regexp_replace(text, f"(?i)({re.escape(term)})", r"**$1**")
-
-
-def keyword_hit_ratio(text: Column, keywords: list[str]) -> Column:
-    """F8-adjacent: fraction of keyword list present as substrings."""
-    arr = F.lit(sorted(keywords))
-    lowered = F.lower(text)
-    return F.size(F.filter(arr, lowered.contains)) / F.lit(float(len(keywords)))

@@ -43,7 +43,12 @@ def funnel_steps(
     occurrence of step i-1 (earliest-completion semantics — taking the
     min qualifying time at every step is optimal, so a user who can
     complete the funnel in any interleaving is counted). Output: one
-    row per step with the surviving user count."""
+    row per step with the surviving user count.
+
+    Plan: one filtered partial/final aggregate per step, chained by equi
+    joins on the user key only — no window over the event stream, no
+    per-event state. On a user-bucketed events table every join
+    co-locates, and AQE broadcasts the shrinking survivor side."""
     cur: DataFrame | None = None
     out = []
     for i, st in enumerate(steps):

@@ -33,7 +33,11 @@ def _salt(salt_buckets: int):
 
 
 def salted_count(df: DataFrame, keys: list[str], salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Two-stage skew-safe count: groupBy(keys + salt) -> groupBy(keys)."""
+    """Two-stage skew-safe count: groupBy(keys + salt) -> groupBy(keys).
+
+    Plan: two partial/final HashAggregate pairs, each behind its own
+    exchange. The salt bounds any one reducer's share of a hot key in
+    the first pair; AQE may coalesce the small final stage."""
     salted = df.withColumn("_salt", _salt(salt_buckets))
     partial = salted.groupBy(*keys, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
     return partial.groupBy(*keys).agg(F.sum("_partial").alias("weight"))

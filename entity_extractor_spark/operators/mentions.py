@@ -167,20 +167,17 @@ def extract_mentions(
     )
 
 
-def dedup_mentions(mentions: DataFrame, deterministic: bool = False) -> DataFrame:
+def dedup_mentions(mentions: DataFrame) -> DataFrame:
     """UNIQUE(bibcode,label,context) semantics (`load_inputs.py:38`).
 
-    Default form is ``dropDuplicates`` (arbitrary survivor, shuffles on
-    the full key). ``deterministic=True`` keeps the FIRST occurrence by
-    (turn_idx, start, end, match_location) via a row_number window —
-    bit-reproducible under any partitioning, and because the window's
-    ClusteredDistribution on (conv_id, term_id, context) is satisfied
-    by any upstream conv_id hash partitioning (subset rule), it adds NO
-    exchange when the input is already conv_id-clustered (the pipeline
-    path via ``extract_mentions(repartition_conv=...)``).
+    Keeps the FIRST occurrence by (turn_idx, start, end, match_location)
+    via a row_number window — bit-reproducible under any partitioning,
+    and because the window's ClusteredDistribution on (conv_id, term_id,
+    context) is satisfied by any upstream conv_id hash partitioning
+    (subset rule), it adds NO exchange when the input is already
+    conv_id-clustered (the pipeline path via
+    ``extract_mentions(repartition_conv=...)``).
     """
-    if not deterministic:
-        return mentions.dropDuplicates(["conv_id", "term_id", "context"])
     w = (
         Window.partitionBy("conv_id", "term_id", "context")
         .orderBy("turn_idx", "start", "end", "match_location")

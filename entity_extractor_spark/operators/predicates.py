@@ -31,22 +31,26 @@ def _conv_window() -> Window:
     return Window.partitionBy("conv_id").orderBy("turn_idx")
 
 
-def mention_triples(mentions: DataFrame, entity_map: DataFrame | None = None) -> DataFrame:
-    """(conv:turn) -mentions-> entity; entity id canonicalized if a
-    (term_id, entity_id) map is supplied (broadcast — it is tiny)."""
+def _turn_entities(mentions: DataFrame, entity_map: DataFrame | None) -> DataFrame:
+    """Distinct (conv_id, turn_idx, eid): ``eid`` is the term id,
+    canonicalized if a (term_id, entity_id) map is supplied (broadcast —
+    it is tiny)."""
     m = mentions.select("conv_id", "turn_idx", "term_id").dropDuplicates(
         ["conv_id", "turn_idx", "term_id"]
     )
-    if entity_map is not None:
-        m = m.join(F.broadcast(entity_map), "term_id", "left").withColumn(
-            "obj", F.coalesce("entity_id", "term_id")
-        )
-    else:
-        m = m.withColumn("obj", F.col("term_id"))
-    return m.select(
+    if entity_map is None:
+        return m.withColumnRenamed("term_id", "eid")
+    return m.join(F.broadcast(entity_map), "term_id", "left").select(
+        "conv_id", "turn_idx", F.coalesce("entity_id", "term_id").alias("eid")
+    )
+
+
+def mention_triples(mentions: DataFrame, entity_map: DataFrame | None = None) -> DataFrame:
+    """(conv:turn) -mentions-> entity, one row per distinct turn entity."""
+    return _turn_entities(mentions, entity_map).select(
         F.concat_ws(":", "conv_id", "turn_idx").alias("subj"),
         F.lit("mentions").alias("pred"),
-        "obj",
+        F.col("eid").alias("obj"),
         "conv_id",
         "turn_idx",
     )
@@ -106,18 +110,7 @@ def co_mention_triples(mentions: DataFrame, entity_map: DataFrame | None = None)
     scale the halved shuffle volume is the dominant term. The i < j
     canonical ordering falls out of ``array_sort``.
     """
-    m = mentions.select("conv_id", "turn_idx", "term_id").dropDuplicates(
-        ["conv_id", "turn_idx", "term_id"]
-    )
-    if entity_map is not None:
-        m = (
-            m.join(F.broadcast(entity_map), "term_id", "left")
-            .withColumn("eid", F.coalesce("entity_id", "term_id"))
-            .select("conv_id", "turn_idx", "eid")
-        )
-    else:
-        m = m.withColumnRenamed("term_id", "eid")
-    per_turn = m.groupBy("conv_id", "turn_idx").agg(
+    per_turn = _turn_entities(mentions, entity_map).groupBy("conv_id", "turn_idx").agg(
         F.array_sort(F.collect_set("eid")).alias("eids")
     )
     pairs = F.expr(

@@ -256,7 +256,7 @@ def score_candidates(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
 LIKELIHOOD_RANKS = {"unlikely": 0, "somewhat likely": 1, "very likely": 2}
 
 
-def filter_by_likelihood(df: DataFrame, min_level: str) -> Column | DataFrame:
+def filter_by_likelihood(df: DataFrame, min_level: str) -> DataFrame:
     """Ordinal-category filter (P4, `core_pipeline/likelihood.py:69-94`)."""
     rank = F.when(F.col("likelihood") == "very likely", 2).when(
         F.col("likelihood") == "somewhat likely", 1

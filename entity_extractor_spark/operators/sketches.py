@@ -208,7 +208,10 @@ def kmv_overlap(
     arithmetic plus one division — bit-identical cross-engine. The
     pipeline use: train-slice overlap diagnostics (which sources share
     vocabulary, how much a new crawl overlaps the existing corpus) at
-    sketch cost instead of a distinct-join over the corpus.
+    sketch cost instead of a distinct-join over the corpus. The pair
+    stage joins the G one-row-per-group sketches with a nested loop: G
+    counts corpus slices, not data rows, so it costs O(G²k) whatever
+    the corpus size.
 
     Output: one row per unordered group pair (grp_a < grp_b) with
     ``jaccard_est``, ``union_est``, ``inter_est`` (rounded 4dp both
@@ -609,7 +612,9 @@ def grouped_heavy_hitters(
     has total in-group count <= N_g/(k+1) < support*N_g, so the union is
     a per-group candidate superset. Pass 2 recounts candidates exactly
     via a broadcast join on (group, token) and filters against the exact
-    per-group totals — exact and partitioning-invariant."""
+    per-group totals — exact and partitioning-invariant. Only the
+    candidate set is ever a shuffle key, never the full per-group
+    vocabulary."""
     import math
     import re as _re
 

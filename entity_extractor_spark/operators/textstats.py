@@ -268,29 +268,6 @@ def repetition_signals_sql(rel: str = "documents", id_col: str = "doc_id") -> st
     """
 
 
-def corpus_quality_report(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Aggregate curation report: per predicted language, doc counts and
-    mean quality/token stats. The only shuffle is the final groupBy."""
-    t = F.col(text_col)
-    tc = token_counts(t)
-    enriched = docs.select(
-        language_id(t).alias("pred_lang"),
-        quality_score(t).alias("q"),
-        tc["n_ws_tokens"].alias("n_ws"),
-        tc["n_bpe_tokens"].alias("n_bpe"),
-    )
-    return (
-        enriched.groupBy("pred_lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("q"), 4).alias("mean_quality"),
-            F.round(F.avg("n_ws"), 2).alias("mean_ws_tokens"),
-            F.round(F.avg("n_bpe"), 2).alias("mean_bpe_tokens"),
-        )
-        .orderBy("pred_lang")
-    )
-
-
 ULM_FP = 1_000_000  # fixed-point scale for per-token log-probability
 
 # add-one-smoothed unigram log-probability of one token, fixed-point

@@ -33,10 +33,11 @@ def run_pipeline(
     transcripts: DataFrame,
     gazetteer: pd.DataFrame,
     out_root: str,
-    with_scoring: bool = True,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline under ``out_root``; returns the
-    materialized stage tables."""
+    materialized stage tables. The ``scored`` stage runs when the
+    gazetteer has a ``description`` column, ``entity_map`` when it has
+    ``aliases``."""
     from entity_extractor_spark.operators.canonicalize import canonical_entities
     from entity_extractor_spark.operators.graph import build_edges, build_nodes
     from entity_extractor_spark.operators.mentions import dedup_mentions, extract_mentions
@@ -55,8 +56,7 @@ def run_pipeline(
     mentions = runner.run(
         "mentions",
         lambda: dedup_mentions(
-            extract_mentions(transcripts, gazetteer, repartition_conv=n_buckets),
-            deterministic=True,
+            extract_mentions(transcripts, gazetteer, repartition_conv=n_buckets)
         ),
         params=params,
         key_col="conv_id",
@@ -64,7 +64,7 @@ def run_pipeline(
 
     out: dict[str, DataFrame] = {"mentions": mentions}
 
-    if with_scoring and "description" in gazetteer.columns:
+    if "description" in gazetteer.columns:
         gaz_df = spark.createDataFrame(gazetteer[["term_id", "description"]])
         scored = runner.run(
             "scored",

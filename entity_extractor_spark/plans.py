@@ -57,10 +57,6 @@ def has_sort_merge_join(plan: str) -> bool:
     return "SortMergeJoin" in plan
 
 
-def codegen_span_count(plan: str) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan)))
-
-
 def scan_columns_subset(df: DataFrame, allowed: set[str]) -> bool:
     """True iff every file scan in df's plan reads only ``allowed``."""
     return all(set(cols) <= allowed for cols in read_schemas(formatted_plan(df)))

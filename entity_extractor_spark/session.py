@@ -83,9 +83,3 @@ def _ship_package(spark: SparkSession) -> None:
                 zf.write(py, arcname=str(Path(pkg_dir.name) / py.relative_to(pkg_dir)))
         os.replace(tmp, zip_path)  # atomic: concurrent sessions race safely
     spark.sparkContext.addPyFile(str(zip_path))
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -125,6 +125,11 @@ def test_truncate_parity(spark, duck, texts):
     sv = _spark_eval(spark, texts, lambda t: T.truncate_ellipsis(t, 20))
     dv = _duck_eval(duck, texts, T.truncate_ellipsis_sql("__T__", 20))
     _compare(sv, dv, texts, "truncate")
+    # highlight (F15) is display-only with no SQL twin: a known answer
+    # pins the ** wrapping, case-insensitive matching, and escaping of a
+    # regex-special term (unescaped, "c++" would match every lone "c")
+    hl = _spark_eval(spark, ["C++ and c++ but not c"], lambda t: T.highlight(t, "c++"))
+    assert hl == ["**C++** and **c++** but not c"], hl
 
 
 def test_charngram_cosine_parity(spark, duck, texts):

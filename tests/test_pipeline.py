@@ -174,6 +174,11 @@ def test_sinks(spark, corpus, tmp_path):
     dirs = [d for d in os.listdir(f"{p}/per_term") if d.startswith("term_id=")]
     assert len(dirs) == mentions.select("term_id").distinct().count()
 
+    cols = ["conv_id", "turn_idx", "term_id", "start"]
+    sinks.write_jsonl(mentions.select(*cols), f"{p}/m.jsonl")
+    back = spark.read.json(f"{p}/m.jsonl").select(*cols)
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, mentions.select(*cols).collect()))
+
     sinks.write_summary_json(mentions, f"{p}/summary")
     row = json.loads(open(glob.glob(f"{p}/summary/*.json")[0]).read().splitlines()[0])
     assert row["total_mentions"] == mentions.count()

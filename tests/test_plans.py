@@ -58,9 +58,7 @@ def test_pipeline_mention_stage_single_exchange(spark):
         F.lit("user").alias("role"),
         "text",
     )
-    staged = dedup_mentions(
-        extract_mentions(t, gaz, repartition_conv=8), deterministic=True
-    )
+    staged = dedup_mentions(extract_mentions(t, gaz, repartition_conv=8))
     plan = P.formatted_plan(staged)
     assert P.count_exchanges(plan) == 1, plan
 
@@ -147,12 +145,15 @@ def test_scored_candidates_plan(spark):
 
 
 def test_salted_collect_is_two_stage(spark):
-    """salted_collect_list: partial collect over (keys, salt) then final
-    merge over keys — two aggregate exchanges, no single-stage collect."""
-    from entity_extractor_spark.operators.graph import salted_collect_list
+    """salted_collect_list and salted_count: partial aggregate over
+    (keys, salt) then final merge over keys — two aggregate exchanges,
+    no single-stage collect or count."""
+    from entity_extractor_spark.operators.graph import salted_collect_list, salted_count
 
     df = spark.createDataFrame([("k", 1)], "k string, v int")
     plan = P.formatted_plan(salted_collect_list(df, ["k"], "v"))
+    assert P.count_exchanges(plan) == 2, plan
+    plan = P.formatted_plan(salted_count(df, ["k"]))
     assert P.count_exchanges(plan) == 2, plan
 
 

@@ -6,10 +6,12 @@ joins in the engine path, row-at-a-time BatchEvalPython anywhere). It
 exits 1 when either anti-pattern appears or a query's plan fails to
 build.
 
-This makes the per-round "plan audit of the expensive queries" a
-reproducible artifact instead of a hand-run .explain session: run it at
-any commit and diff the table. tests/test_plans.py pins the hot paths as
-hard guards; this tool is the full-surface census.
+This is the one plan-audit tool: together with the plan-shape asserts
+in tests/test_plans.py (and the few in tests/test_curation.py) it is
+the only source of plan evidence. Run it at any commit and diff the
+table. The tests pin the hot-path shapes as hard guards, and each
+failing shape assert prints the formatted plan as its message; this
+tool is the full-surface census.
 
 Usage:
   python tools/plan_census.py                 # table to stdout (sf0.001)
