@@ -403,10 +403,9 @@ def q_cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_predicate_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4: uses_tool + replies_to lag/lead triples over doc-transcripts."""
-    from entity_extractor_spark.operators.predicates import replies_to_triples, uses_tool_triples
+    from entity_extractor_spark.operators.predicates import turn_pair_triples
 
-    t = _doc_transcripts(spark, sf_dir)
-    trip = uses_tool_triples(t).unionByName(replies_to_triples(t))
+    trip = turn_pair_triples(_doc_transcripts(spark, sf_dir))
     return trip.select("subj", "pred", "obj").orderBy("pred", "subj", "obj")
 
 

@@ -75,40 +75,31 @@ def build_edges(triples: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS) ->
     ).select("src", "dst", "pred", F.col("weight").cast("long").alias("weight"))
 
 
-def build_nodes(triples: DataFrame, edges: DataFrame | None = None) -> DataFrame:
-    """nodes(node_id, kind, canonical_name, mention_count).
+def build_nodes(edges: DataFrame) -> DataFrame:
+    """nodes(node_id, kind, canonical_name, mention_count) from the
+    (src, dst, pred, weight) table of :func:`build_edges`.
 
     kind is derived from the id shape: ``tool:*`` -> tool, ``conv-*:n``
     -> turn, ``conv-*`` -> conversation, else entity.
 
-    When the (src, dst, pred, weight) ``edges`` table from
-    :func:`build_edges` is already materialized, pass it: every
-    triple's (subj, obj, pred) appears in edges with its occurrence
-    count, so the node-id universe and the per-node mention counts can
-    be re-derived from the ~weight-compressed edge table instead of
-    re-scanning the raw triples — the node stage's input drops from
-    2 passes over every triple to 1 pass over the (much smaller)
-    aggregated edges, identical output.
+    Every triple's (subj, obj, pred) appears in edges with its
+    occurrence count, so one ``groupBy(node_id)`` over both ends of each
+    edge gives the node universe and, from the ``mentions`` edges' dst
+    ends, each node's mention count: one exchange over the
+    weight-compressed edge table, no distinct + count + join. The sum
+    map-side-combines, so a hot entity's partial rows stay one per input
+    partition.
     """
-    if edges is not None:
-        ids = (
-            edges.select(F.col("src").alias("node_id"))
-            .unionByName(edges.select(F.col("dst").alias("node_id")))
-        )
-        counts = (
-            edges.filter(F.col("pred") == "mentions")
-            .groupBy(F.col("dst").alias("node_id"))
-            .agg(F.sum("weight").alias("mention_count"))
-        )
-    else:
-        ids = (
-            triples.select(F.col("subj").alias("node_id"))
-            .unionByName(triples.select(F.col("obj").alias("node_id")))
-        )
-        counts = salted_count(
-            triples.filter(F.col("pred") == "mentions").select(F.col("obj").alias("node_id")),
-            ["node_id"],
-        ).withColumnRenamed("weight", "mention_count")
+    zero = F.lit(0).cast("long")
+    mentioned = F.when(F.col("pred") == "mentions", F.col("weight")).otherwise(zero)
+    ends = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("node_id"), zero.alias("n")),
+                F.struct(F.col("dst").alias("node_id"), mentioned.alias("n")),
+            )
+        ).alias("e")
+    )
     kind = (
         F.when(F.col("node_id").startswith("tool:"), "tool")
         .when(F.col("node_id").rlike("^conv-[0-9]+:[0-9]+$"), "turn")
@@ -116,12 +107,13 @@ def build_nodes(triples: DataFrame, edges: DataFrame | None = None) -> DataFrame
         .otherwise("entity")
     )
     return (
-        ids.distinct()
-        .join(counts, "node_id", "left")
+        ends.groupBy(F.col("e.node_id").alias("node_id"))
+        .agg(F.sum("e.n").alias("mention_count"))
         .select(
             "node_id",
             kind.alias("kind"),
             F.col("node_id").alias("canonical_name"),
+            # a sum is nullable; the stored nodes schema is not
             F.coalesce("mention_count", F.lit(0)).cast("long").alias("mention_count"),
         )
     )

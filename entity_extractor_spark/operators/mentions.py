@@ -117,20 +117,23 @@ def extract_mentions(
     gazetteer: DataFrame | pd.DataFrame,
     include_aliases: bool = False,
     window_words: int = DEFAULT_WINDOW_WORDS,
-    repartition_conv: int | None = None,
+    repartition_conv: bool = False,
 ) -> DataFrame:
     """Full mention table per FIXTURES.md §3 (scan + per-(conv,term) flags).
 
     ``repartition_conv``: hash-partition the raw scan output on conv_id
-    into that many partitions BEFORE the flag window. HashPartitioning
-    on conv_id satisfies the window's ClusteredDistribution on
-    (conv_id, term_id) — partitioning keys are a subset of the
-    clustering keys — so the window needs only a local sort and the
-    whole stage still has exactly ONE exchange, now keyed the way the
-    stage output is stored/bucketed (conv_id). Downstream conv_id
-    consumers (dedup window, triple windows, stage write) reuse the
+    BEFORE the flag window. HashPartitioning on conv_id satisfies the
+    window's ClusteredDistribution on (conv_id, term_id) — partitioning
+    keys are a subset of the clustering keys — so the window needs only
+    a local sort and the whole stage still has exactly ONE exchange, now
+    keyed the way the stage output is stored/bucketed (conv_id).
+    Downstream conv_id consumers (dedup window, stage write) reuse the
     same clustering instead of re-shuffling; the pipeline's mention
     stage goes from three full shuffles of the mention table to one.
+    The repartition gives no partition count, so AQE sizes the exchange
+    from the shuffled bytes: a small corpus is written as a few files
+    instead of one per shuffle partition, and a large one keeps at least
+    ``defaultParallelism`` partitions.
 
     Skew trade, made explicit: keying the one exchange on conv_id alone
     concentrates ALL of a conversation's mentions on one task, where
@@ -144,13 +147,13 @@ def extract_mentions(
     contrast entity keys, whose per-key row counts grow with the corpus
     and are therefore salted (``operators/graph.salted_count``). If a
     source ever had unbounded per-conversation rows, pass
-    ``repartition_conv=None`` to restore the finer-keyed spread and let
+    ``repartition_conv=False`` to restore the finer-keyed spread and let
     AQE skew-split the conv_id stages instead.
     """
     matcher, names = build_matcher_from_gazetteer(gazetteer, include_aliases)
     raw = scan_mentions(transcripts, matcher, names, window_words)
-    if repartition_conv is not None:
-        raw = raw.repartition(repartition_conv, F.col("conv_id"))
+    if repartition_conv:
+        raw = raw.repartition("conv_id")
     w = Window.partitionBy("conv_id", "term_id")
     # both flags in ONE select so Catalyst fuses them into a single Window
     # node over one exchange (two sequential withColumns produce two sorts
@@ -176,7 +179,7 @@ def dedup_mentions(mentions: DataFrame) -> DataFrame:
     context) is satisfied by any upstream conv_id hash partitioning
     (subset rule), it adds NO exchange when the input is already
     conv_id-clustered (the pipeline path via
-    ``extract_mentions(repartition_conv=...)``).
+    ``extract_mentions(repartition_conv=True)``).
     """
     w = (
         Window.partitionBy("conv_id", "term_id", "context")

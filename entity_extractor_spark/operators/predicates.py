@@ -5,62 +5,108 @@ dependency-pattern predicates over consecutive turns — the transcript
 generalization of the reference's ±100-word context window
 (`extraction_engine.py:69-92`) across turn boundaries.
 
-All predicates are pure window/join plans:
+Every predicate comes from one of two frames, each of which reads its
+input once and crosses one exchange:
 
-* ``mentions``   — (turn, entity) from the mention table (dedup A8);
-* ``uses_tool``  — assistant turn immediately followed by a tool turn
-                   (lead over (conv_id) ordered by turn_idx);
-* ``replies_to`` — assistant turn immediately after a user turn (lag);
-* ``co_mentions``— unordered entity pair mentioned in the same turn
-                   (self-join on (conv_id, turn_idx), src < dst).
+* :func:`turn_pair_triples` — one conv_id window over transcripts
+  (lead/lag by turn_idx) emits both
+  ``uses_tool``  (assistant turn immediately followed by a tool turn) and
+  ``replies_to`` (assistant turn immediately after a user turn);
+* :func:`turn_entity_triples` — one ``groupBy(conv_id, turn_idx)`` over
+  mentions emits both
+  ``mentions``    ((conv:turn) -> entity, one per distinct turn term) and
+  ``co_mentions`` (unordered entity pair mentioned in the same turn).
 
-The window partitioning key is conv_id — the same key the transcript
-table is bucketed by, so at scale these windows sort within partitions
-without a full shuffle (`sortWithinPartitions` locality, SURVEY O1).
+The per-predicate functions are filters over these frames. The window
+partitioning key is conv_id — the same key the transcript table is
+bucketed by, so at scale the window sorts within partitions without a
+full shuffle (`sortWithinPartitions` locality, SURVEY O1).
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-TRIPLE_COLS = ["subj", "pred", "obj", "conv_id", "turn_idx"]
 
 
 def _conv_window() -> Window:
     return Window.partitionBy("conv_id").orderBy("turn_idx")
 
 
-def _turn_entities(mentions: DataFrame, entity_map: DataFrame | None) -> DataFrame:
-    """Distinct (conv_id, turn_idx, eid): ``eid`` is the term id,
-    canonicalized if a (term_id, entity_id) map is supplied (broadcast —
-    it is tiny)."""
-    m = mentions.select("conv_id", "turn_idx", "term_id").dropDuplicates(
-        ["conv_id", "turn_idx", "term_id"]
-    )
+def _turn_id(idx_col: str = "turn_idx"):
+    """The ``conv:turn`` node id of a turn."""
+    return F.concat_ws(":", "conv_id", idx_col)
+
+
+def turn_entity_triples(mentions: DataFrame, entity_map: DataFrame | None = None) -> DataFrame:
+    """``mentions`` and ``co_mentions`` triples from ONE
+    ``groupBy(conv_id, turn_idx)`` over the mention rows.
+
+    ``eid`` is the term id, canonicalized if a (term_id, entity_id) map
+    is supplied (broadcast — it is tiny). Each turn collects its distinct
+    ``(term_id, eid)`` pairs: one ``mentions`` triple per distinct term
+    (two alias terms of one entity in a turn give that entity two
+    ``mentions`` rows, hence edge weight 2), and one ``co_mentions``
+    triple per unordered pair of the turn's distinct entities (subj <
+    obj, so an entity never pairs with itself).
+
+    Grouped pair expansion rather than a self-join on (conv_id,
+    turn_idx): each mention row crosses ONE exchange (the groupBy)
+    instead of two (both join sides shuffle), and the per-turn set is
+    bounded by gazetteer hits per turn, so the collected arrays stay
+    small even on hot conversations. Measured on 762k mentions at
+    local[32]: 2.7 s vs 3.1 s for the equivalent self-join with
+    identical output. The i < j canonical ordering falls out of
+    ``array_sort``.
+    """
+    m = mentions.select("conv_id", "turn_idx", "term_id")
     if entity_map is None:
-        return m.withColumnRenamed("term_id", "eid")
-    return m.join(F.broadcast(entity_map), "term_id", "left").select(
-        "conv_id", "turn_idx", F.coalesce("entity_id", "term_id").alias("eid")
+        m = m.withColumn("eid", F.col("term_id"))
+    else:
+        m = m.join(F.broadcast(entity_map), "term_id", "left").select(
+            "conv_id", "turn_idx", "term_id", F.coalesce("entity_id", "term_id").alias("eid")
+        )
+    per_turn = m.groupBy("conv_id", "turn_idx").agg(
+        F.collect_set(F.struct("term_id", "eid")).alias("te")
+    )
+    triples = F.expr(
+        "concat("
+        "transform(te, x -> struct(turn AS subj, 'mentions' AS pred, x.eid AS obj)), "
+        "flatten(transform(eids, (x, i) -> transform(slice(eids, i + 2, size(eids)), "
+        "y -> struct(x AS subj, 'co_mentions' AS pred, y AS obj)))))"
+    )
+    return (
+        per_turn.select(
+            "conv_id",
+            "turn_idx",
+            "te",
+            _turn_id().alias("turn"),
+            F.array_sort(F.array_distinct(F.col("te.eid"))).alias("eids"),
+        )
+        .select("conv_id", "turn_idx", F.explode(triples).alias("t"))
+        .select("t.subj", "t.pred", "t.obj", "conv_id", "turn_idx")
     )
 
 
 def mention_triples(mentions: DataFrame, entity_map: DataFrame | None = None) -> DataFrame:
-    """(conv:turn) -mentions-> entity, one row per distinct turn entity."""
-    return _turn_entities(mentions, entity_map).select(
-        F.concat_ws(":", "conv_id", "turn_idx").alias("subj"),
-        F.lit("mentions").alias("pred"),
-        F.col("eid").alias("obj"),
-        "conv_id",
-        "turn_idx",
-    )
+    """(conv:turn) -mentions-> entity, one row per distinct turn term."""
+    return turn_entity_triples(mentions, entity_map).filter(F.col("pred") == "mentions")
+
+
+def co_mention_triples(mentions: DataFrame, entity_map: DataFrame | None = None) -> DataFrame:
+    """Unordered same-turn entity pairs (subj < obj)."""
+    return turn_entity_triples(mentions, entity_map).filter(F.col("pred") == "co_mentions")
 
 
 def adjacent_turns(transcripts: DataFrame) -> DataFrame:
-    """ONE window pass computing every adjacent-turn column (lead role/
-    tool, lag role/turn). All predicate extractors filter from this frame,
-    so the conv_id sort+exchange happens once no matter how many
-    predicates are derived (Catalyst reuses the shared subplan)."""
+    """ONE conv_id window computing every adjacent-turn column (lead
+    role/tool, lag role/turn). :func:`turn_pair_triples` derives both
+    turn-pair predicates from a single projection of this frame; a
+    consumer that selected a different column subset per predicate would
+    let column pruning split it into one window (and one transcripts
+    scan and exchange) per subset."""
     w = _conv_window()
     return transcripts.select(
         "conv_id",
@@ -73,57 +119,41 @@ def adjacent_turns(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def uses_tool_triples(transcripts: DataFrame, adjacent: DataFrame | None = None) -> DataFrame:
-    t = adjacent if adjacent is not None else adjacent_turns(transcripts)
-    return t.filter(
-        (F.col("role") == "assistant") & (F.col("next_role") == "tool") & F.col("next_tool").isNotNull()
-    ).select(
-        F.concat_ws(":", "conv_id", "turn_idx").alias("subj"),
-        F.lit("uses_tool").alias("pred"),
-        F.concat(F.lit("tool:"), F.col("next_tool")).alias("obj"),
-        "conv_id",
-        "turn_idx",
+def turn_pair_triples(transcripts: DataFrame) -> DataFrame:
+    """``uses_tool`` and ``replies_to`` triples from one pass over
+    :func:`adjacent_turns`: each turn yields up to two triples through
+    ``explode(array_compact(array(...)))``, a null struct standing for a
+    predicate that does not hold."""
+    assistant = F.col("role") == "assistant"
+    uses = F.when(
+        assistant & (F.col("next_role") == "tool") & F.col("next_tool").isNotNull(),
+        F.struct(
+            F.lit("uses_tool").alias("pred"),
+            F.concat(F.lit("tool:"), F.col("next_tool")).alias("obj"),
+        ),
+    )
+    replies = F.when(
+        assistant & (F.col("prev_role") == "user"),
+        F.struct(F.lit("replies_to").alias("pred"), _turn_id("prev_idx").alias("obj")),
+    )
+    return (
+        adjacent_turns(transcripts)
+        .select(
+            _turn_id().alias("subj"),
+            "conv_id",
+            "turn_idx",
+            F.explode(F.array_compact(F.array(uses, replies))).alias("t"),
+        )
+        .select("subj", "t.pred", "t.obj", "conv_id", "turn_idx")
     )
 
 
-def replies_to_triples(transcripts: DataFrame, adjacent: DataFrame | None = None) -> DataFrame:
-    t = adjacent if adjacent is not None else adjacent_turns(transcripts)
-    return t.filter((F.col("role") == "assistant") & (F.col("prev_role") == "user")).select(
-        F.concat_ws(":", "conv_id", "turn_idx").alias("subj"),
-        F.lit("replies_to").alias("pred"),
-        F.concat_ws(":", "conv_id", "prev_idx").alias("obj"),
-        "conv_id",
-        "turn_idx",
-    )
+def uses_tool_triples(transcripts: DataFrame) -> DataFrame:
+    return turn_pair_triples(transcripts).filter(F.col("pred") == "uses_tool")
 
 
-def co_mention_triples(mentions: DataFrame, entity_map: DataFrame | None = None) -> DataFrame:
-    """Unordered same-turn entity pairs (subj < obj).
-
-    Implemented as ``groupBy(conv, turn).collect_set`` + in-codegen pair
-    expansion rather than a self-join on (conv_id, turn_idx): each
-    mention row then crosses ONE exchange (the groupBy) instead of two
-    (both join sides shuffle), and the per-turn entity set is bounded by
-    gazetteer hits per turn, so the collected arrays stay small even on
-    hot conversations. Measured on 762k mentions at local[32]: 2.7 s vs
-    3.1 s for the equivalent self-join with identical output; at corpus
-    scale the halved shuffle volume is the dominant term. The i < j
-    canonical ordering falls out of ``array_sort``.
-    """
-    per_turn = _turn_entities(mentions, entity_map).groupBy("conv_id", "turn_idx").agg(
-        F.array_sort(F.collect_set("eid")).alias("eids")
-    )
-    pairs = F.expr(
-        "flatten(transform(eids, (x, i) -> "
-        "transform(slice(eids, i + 2, size(eids)), y -> struct(x AS e1, y AS e2))))"
-    )
-    return per_turn.select("conv_id", "turn_idx", F.explode(pairs).alias("p")).select(
-        F.col("p.e1").alias("subj"),
-        F.lit("co_mentions").alias("pred"),
-        F.col("p.e2").alias("obj"),
-        "conv_id",
-        "turn_idx",
-    )
+def replies_to_triples(transcripts: DataFrame) -> DataFrame:
+    return turn_pair_triples(transcripts).filter(F.col("pred") == "replies_to")
 
 
 def alias_triples(entity_map: DataFrame) -> DataFrame:
@@ -140,16 +170,7 @@ def alias_triples(entity_map: DataFrame) -> DataFrame:
 def all_triples(
     transcripts: DataFrame, mentions: DataFrame, entity_map: DataFrame | None = None
 ) -> DataFrame:
-    adjacent = adjacent_turns(transcripts)
-    parts = [
-        mention_triples(mentions, entity_map),
-        uses_tool_triples(transcripts, adjacent),
-        replies_to_triples(transcripts, adjacent),
-        co_mention_triples(mentions, entity_map),
-    ]
+    parts = [turn_pair_triples(transcripts), turn_entity_triples(mentions, entity_map)]
     if entity_map is not None:
         parts.append(alias_triples(entity_map))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, parts)

@@ -65,7 +65,7 @@ def tfidf_topk(
 
     ``postings`` feeds three subtrees (norms, the broadcast query side,
     and the probe side), so it is materialized once behind a
-    lineage cut (same ``_cut`` idiom as the graph operators) — without
+    lineage cut (the ``_cut`` idiom of the graph operators) — without
     it the tokenize→tf→idf chain and its three exchanges replay per
     reference (the plan census read 17 exchanges; cut: one postings
     build plus the join/agg/window chain). Measured crossover: at
@@ -73,14 +73,17 @@ def tfidf_topk(
     (1.25 vs 1.54 s); at sf1 (50k) they tie (5.5–6.0 s both); past
     that the cut wins linearly in corpus size — it trades a bounded
     postings write for two full corpus re-tokenizations, the 100 TB
-    side of the trade. ``checkpoint=False`` keeps the logical plan
+    side of the trade. The cut is eager: a lazy one is filled by the
+    first job that reaches it, and the query-side broadcast job and the
+    probe job both reach it, so two tasks could store the same block
+    ("Block rdd_… already exists"). ``checkpoint=False`` keeps the logical plan
     visible for plan inspection (and is the faster choice for
     sub-sf1 interactive corpora)."""
     from pyspark.sql import Window
 
     postings = weighted_postings(docs, id_col, text_col)
     if checkpoint:
-        postings = postings.localCheckpoint(eager=False)
+        postings = postings.localCheckpoint(eager=True)
     norms = postings.groupBy("doc").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
     qp = F.broadcast(
         postings.filter(F.col("doc").isin(query_ids)).select(

@@ -11,9 +11,14 @@ resumability/lineage; remove the runner and the same plan fuses.
 Scale shape (the plan you'd want at 10^12 turns):
   * transcripts arrive bucketed by conv_id (Iceberg bucket / repartition)
   * the mention scan is embarrassingly parallel (mapInPandas, no shuffle)
-  * the flag window + triple dedup shuffle on conv_id — the SAME key, so
-    AQE reuses the partitioning; entity-keyed aggregations are salted
-    (operators/graph.salted_count) against hot entities
+  * the mention stage crosses ONE exchange, an AQE-sized conv_id
+    repartition that the flag window and the mention dedup window both
+    reuse (subset rule); AQE picks its partition count from the bytes
+  * the triples stage reads each input once: one conv_id window over
+    transcripts for both turn-pair predicates, one (conv_id, turn_idx)
+    groupBy over mentions for mentions + co_mentions
+  * edge weights are salted (operators/graph.salted_count) against hot
+    entities; nodes are one groupBy over the edge table's two ends
   * the gazetteer/alias side is always broadcast; the alias union-find
     runs on the driver over the gazetteer the job already holds, never
     on the corpus.
@@ -47,17 +52,14 @@ def run_pipeline(
     runner = StageRunner(spark, out_root)
     params = {"n_terms": int(len(gazetteer))}
 
-    # one conv_id exchange for the whole stage: the explicit repartition
-    # satisfies the flag window, the dedup window, AND the storage
-    # clustering (subset rule), replacing the former three shuffles
-    # (flag window + dropDuplicates + StageRunner repartition) of the
-    # biggest intermediate table with one
-    n_buckets = spark.sparkContext.defaultParallelism * 4
+    # one AQE-sized conv_id exchange for the whole stage: the explicit
+    # repartition satisfies the flag window, the dedup window, AND the
+    # storage clustering (subset rule), replacing the former three
+    # shuffles (flag window + dropDuplicates + StageRunner repartition)
+    # of the biggest intermediate table with one
     mentions = runner.run(
         "mentions",
-        lambda: dedup_mentions(
-            extract_mentions(transcripts, gazetteer, repartition_conv=n_buckets)
-        ),
+        lambda: dedup_mentions(extract_mentions(transcripts, gazetteer, repartition_conv=True)),
         params=params,
         key_col="conv_id",
     )
@@ -95,9 +97,7 @@ def run_pipeline(
     out["edges"] = edges
     # nodes derive from the materialized weight-compressed edge table —
     # one scan of ~|edges| rows instead of two scans of |triples|
-    out["nodes"] = runner.run(
-        "nodes", lambda: build_nodes(triples, edges=edges), params=params
-    )
+    out["nodes"] = runner.run("nodes", lambda: build_nodes(edges), params=params)
 
     runner.write_manifest()
     out["lineage"] = runner.lineage()

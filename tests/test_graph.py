@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import functools
+import re
 
 import pandas as pd
 from hypothesis import given, settings
@@ -167,7 +168,7 @@ def test_build_nodes_and_edges(spark):
     mentions = extract_mentions(tr, gaz)
     triples = all_triples(tr, mentions)
     edges = build_edges(triples)
-    nodes = build_nodes(triples)
+    nodes = build_nodes(edges)
     assert edges.filter(F.col("weight") < 1).count() == 0
     kinds = {r["kind"] for r in nodes.select("kind").distinct().collect()}
     assert "turn" in kinds and "entity" in kinds
@@ -183,17 +184,91 @@ def test_build_nodes_and_edges(spark):
     assert dangling == 0
 
 
+def _node_kind(node_id: str) -> str:
+    if node_id.startswith("tool:"):
+        return "tool"
+    if re.fullmatch(r"conv-[0-9]+:[0-9]+", node_id):
+        return "turn"
+    if re.fullmatch(r"conv-[0-9]+", node_id):
+        return "conversation"
+    return "entity"
+
+
 def test_build_nodes_from_edges_identical(spark):
-    """The edges-derived node build (pipeline fast path) must produce
-    exactly the triple-derived node table — same ids, kinds, counts."""
+    """The edge-derived node table equals a pandas computation from the
+    collected triples: one node per distinct subj/obj, its kind, and its
+    mention_count = the number of ``mentions`` triples pointing at it.
+    The entity map folds the 8 terms into 3 entities, so some turns
+    mention one entity through two terms (edge weight > 1)."""
     cfg = SynthConfig(seed=13, n_terms=8, n_convs=10, hot_conv_factor=3)
     gaz = make_gazetteer(cfg)
     tr = to_spark(spark, make_transcripts(cfg, gaz))
-    triples = all_triples(tr, extract_mentions(tr, gaz))
+    emap = spark.createDataFrame(
+        [(t, f"e{i % 3}") for i, t in enumerate(gaz["term_id"])], "term_id string, entity_id string"
+    )
+    triples = all_triples(tr, extract_mentions(tr, gaz), emap).cache()
+    tp = triples.toPandas()
+    counts = tp[tp["pred"] == "mentions"].groupby("obj").size()
+    want = sorted(
+        (n, _node_kind(n), n, int(counts.get(n, 0))) for n in set(tp["subj"]) | set(tp["obj"])
+    )
     edges = build_edges(triples)
-    a = sorted(map(tuple, build_nodes(triples).collect()))
-    b = sorted(map(tuple, build_nodes(triples, edges=edges).collect()))
-    assert a == b
+    got = sorted(map(tuple, build_nodes(edges).collect()))
+    assert edges.filter((F.col("pred") == "mentions") & (F.col("weight") > 1)).count() > 0
+    triples.unpersist()
+    assert got == want
+    assert {k for _, k, _, _ in got} == {"tool", "turn", "entity"}
+
+
+def test_alias_terms_in_one_turn_known_answer(spark):
+    """Two alias terms A, B of entity X in one turn: the turn mentions X
+    twice (mention_count 2 from that turn) and X never co-mentions
+    itself; a repeated mention of one term counts once per turn."""
+    tr = to_spark(
+        spark,
+        pd.DataFrame(
+            {
+                "conv_id": ["conv-1"] * 3,
+                "turn_idx": pd.array([0, 1, 2], dtype="int32"),
+                "role": ["user", "assistant", "user"],
+                "text": ["a b", "c", "a d"],
+                "tool": [None, None, None],
+                "ts": pd.to_datetime(["2026-01-01"] * 3),
+            }
+        ),
+    )
+    m = spark.createDataFrame(
+        [("conv-1", 0, "A"), ("conv-1", 0, "B"), ("conv-1", 0, "B"), ("conv-1", 1, "C"),
+         ("conv-1", 2, "A"), ("conv-1", 2, "D")],
+        "conv_id string, turn_idx int, term_id string",
+    )
+    emap = spark.createDataFrame(
+        [("A", "X"), ("B", "X"), ("C", "C"), ("D", "D")], "term_id string, entity_id string"
+    )
+    triples = all_triples(tr, m, emap)
+    got = sorted(tuple(r) for r in triples.select("subj", "pred", "obj").collect())
+    assert got == sorted(
+        [
+            ("conv-1:0", "mentions", "X"),
+            ("conv-1:0", "mentions", "X"),
+            ("conv-1:1", "mentions", "C"),
+            ("conv-1:2", "mentions", "X"),
+            ("conv-1:2", "mentions", "D"),
+            ("D", "co_mentions", "X"),
+            ("conv-1:1", "replies_to", "conv-1:0"),
+            ("A", "alias_of", "X"),
+            ("B", "alias_of", "X"),
+        ]
+    )
+    nodes = {
+        r["node_id"]: (r["kind"], r["mention_count"])
+        for r in build_nodes(build_edges(triples)).collect()
+    }
+    assert nodes == {
+        "X": ("entity", 3), "C": ("entity", 1), "D": ("entity", 1),
+        "A": ("entity", 0), "B": ("entity", 0),
+        "conv-1:0": ("turn", 0), "conv-1:1": ("turn", 0), "conv-1:2": ("turn", 0),
+    }
 
 
 def test_connected_components_long_chain(spark):

@@ -112,9 +112,12 @@ def test_pipeline_resume_after_mid_run_crash(spark, corpus, tmp_path_factory):
 
 
 def test_pipeline_bookkeeping_runs_no_spark_jobs(spark, corpus, tmp_path, monkeypatch):
-    """Job-count pins: the entity_map stage runs at most one Spark job
-    (its write), lineage bookkeeping runs none, and a resumed stage runs
-    none (its schema comes from the stage marker)."""
+    """Job-count pins: a fresh build runs at most 2 Spark jobs in the
+    mention stage (its one exchange and the write), 5 in triples (one
+    exchange per input, the entity_map broadcast, the conv_id
+    repartition and the write), 2 in nodes (one groupBy and the write)
+    and 1 in entity_map (its write); lineage bookkeeping runs none, and
+    a resumed stage runs none (its schema comes from the stage marker)."""
     transcripts, gaz = corpus
     sc = spark.sparkContext
     tag = uuid.uuid4().hex
@@ -149,6 +152,9 @@ def test_pipeline_bookkeeping_runs_no_spark_jobs(spark, corpus, tmp_path, monkey
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs["mentions"]) <= 2, jobs
+    assert len(jobs["triples"]) <= 5, jobs
+    assert len(jobs["nodes"]) <= 2, jobs
     assert len(jobs["entity_map"]) <= 1, jobs
     assert all(len(j) > 0 for s, j in jobs.items() if s != "entity_map"), jobs
     assert not any(lineage_jobs.values()), lineage_jobs

@@ -58,7 +58,7 @@ def test_pipeline_mention_stage_single_exchange(spark):
         F.lit("user").alias("role"),
         "text",
     )
-    staged = dedup_mentions(extract_mentions(t, gaz, repartition_conv=8))
+    staged = dedup_mentions(extract_mentions(t, gaz, repartition_conv=True))
     plan = P.formatted_plan(staged)
     assert P.count_exchanges(plan) == 1, plan
 
@@ -123,6 +123,31 @@ def test_co_mentions_single_exchange_no_join(spark):
     plan = P.formatted_plan(co_mention_triples(m))
     assert P.count_exchanges(plan) == 1, plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
+
+
+def test_all_triples_one_window_one_transcripts_scan(spark, tmp_path):
+    """The triples build reads each input once: ONE Window (lead/lag for
+    both turn-pair predicates) over ONE scan of the transcripts parquet,
+    and one exchange per input (the conv_id window and the per-turn
+    mention groupBy)."""
+    import re
+
+    from entity_extractor_spark.operators.canonicalize import canonical_entities
+    from entity_extractor_spark.operators.mentions import extract_mentions
+    from entity_extractor_spark.operators.predicates import all_triples
+    from entity_extractor_spark.synth import SynthConfig, make_gazetteer, make_transcripts, to_spark
+
+    cfg = SynthConfig(seed=5, n_terms=8, n_convs=10)
+    gaz = make_gazetteer(cfg)
+    to_spark(spark, make_transcripts(cfg, gaz)).write.parquet(str(tmp_path / "transcripts"))
+    t = spark.read.parquet(str(tmp_path / "transcripts"))
+    extract_mentions(t, gaz).write.parquet(str(tmp_path / "mentions"))
+    m = spark.read.parquet(str(tmp_path / "mentions"))
+    plan = P.formatted_plan(all_triples(t, m, canonical_entities(gaz)))
+    assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1, plan
+    scans = re.findall(r"Location: \w+ \[([^\]]*)\]", plan)
+    assert sum("transcripts" in loc for loc in scans) == 1, plan
+    assert P.count_exchanges(plan) == 2, plan
 
 
 def test_scored_candidates_plan(spark):
