@@ -149,11 +149,29 @@ def _q_context_window_100(spark, sf_dir):
 # BENCH.md)
 
 
+def _cpu_ticks() -> tuple[int, int]:
+    """(steal, total) jiffies from the aggregate line of /proc/stat;
+    (0, 0) where it cannot be read."""
+    try:
+        with open("/proc/stat") as f:
+            vals = [int(v) for v in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return 0, 0
+    return (vals[7], sum(vals)) if len(vals) > 7 else (0, 0)
+
+
+def _steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
+    """Hypervisor steal between two _cpu_ticks readings, in % of all
+    CPU time; 0.0 where the host reports none."""
+    total = after[1] - before[1]
+    return round(100.0 * (after[0] - before[0]) / total, 2) if total > 0 else 0.0
+
+
 def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _emit(timings: dict, cold: dict, n_turns) -> None:
+def _emit(timings: dict, cold: dict, n_turns, steal_pct: float) -> None:
     """Print ONE compact JSON line as the very last stdout line.
 
     The driver records only the final 2000 bytes of stdout and parses
@@ -163,7 +181,8 @@ def _emit(timings: dict, cold: dict, n_turns) -> None:
     was cut mid-JSON. The compact line carries the warm-min timings
     only (the reported estimator); the full record including the cold
     pass goes to BENCH_DETAIL_LAST.json next to this script and to
-    BENCH.md's protocol tables."""
+    BENCH.md's protocol tables. Both carry ``steal_pct``, the hypervisor
+    steal over the whole run, so a slow number comes with its noise."""
     total = round(sum(v for k, v in timings.items() if k != "turns_per_sec"), 3)
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     payload = {
@@ -172,6 +191,7 @@ def _emit(timings: dict, cold: dict, n_turns) -> None:
         "unit": "sec",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": CPUS,
+        "steal_pct": steal_pct,
         "queries": timings,
         # near-dup pair emitters + streaming parity keys are
         # correctness-gated but excluded from timing; see BENCH.md
@@ -214,6 +234,7 @@ def main() -> None:
     from entity_extractor_spark.operators.mentions import extract_mentions
     from entity_extractor_spark.synth import SynthConfig, make_gazetteer, make_transcripts, to_spark
 
+    ticks0 = _cpu_ticks()
     spark = get_spark("bench", cores=CPUS)
     qs = {**entry_mod.queries(), "context_window_100": _q_context_window_100}
     timings: dict[str, float] = {}
@@ -256,7 +277,7 @@ def main() -> None:
     # flagship: full mention extraction over synthetic transcripts
     # (generated executor-side — deterministic per config, see synth.py)
     if ONLY:
-        _emit(timings, cold, None)
+        _emit(timings, cold, None, _steal_pct(ticks0, _cpu_ticks()))
         spark.stop()
         return
     from entity_extractor_spark.synth import make_transcripts_distributed
@@ -291,7 +312,7 @@ def main() -> None:
     assert set(synth) == set(SYNTH_KEYS), sorted(synth)
     timings.update(synth)
 
-    _emit(timings, cold, n_turns)
+    _emit(timings, cold, n_turns, _steal_pct(ticks0, _cpu_ticks()))
     spark.stop()
 
 

@@ -12,10 +12,11 @@ Design:
   per file, not per row. These are the fields an Iceberg manifest keeps
   per data file (``record_count``, ``lower_bounds``, ``upper_bounds``);
 * stage idempotence is marker-file based: a stage directory whose
-  ``_STAGE_META.json`` matches the requested (stage, params) fingerprint
-  is trusted and skipped, so a re-run after failure resumes at the first
-  incomplete stage (the parquet `_SUCCESS` marker guards partial
-  writes). The marker also stores the stage's schema, so neither a fresh
+  ``_STAGE_META.json`` matches the requested (stage, params, package
+  source digest) fingerprint is trusted and skipped, so a re-run after
+  failure resumes at the first incomplete stage (the parquet `_SUCCESS`
+  marker guards partial writes), and a root written by other code is
+  rebuilt. The marker also stores the stage's schema, so neither a fresh
   nor a resumed stage is reloaded through schema inference. On a cluster
   the same protocol rides on Iceberg snapshots;
 * metrics come from the same lineage rows (row counts per stage) plus
@@ -38,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
+
+from entity_extractor_spark.session import package_digest
 
 STAGE_META = "_STAGE_META.json"
 LINEAGE_FILE = "lineage.parquet"
@@ -91,10 +94,12 @@ def lineage_rows(df: DataFrame, stage: str, key_col: str | None = None) -> pa.Ta
     return pa.table(cols)
 
 
-def _fingerprint(stage: str, params: dict) -> str:
+def _fingerprint(stage: str, params: dict, code: str) -> str:
+    """sha1 of the stage name, its params and the package's source
+    digest: a marker written by other code is not trusted."""
     import hashlib
 
-    blob = json.dumps({"stage": stage, "params": params}, sort_keys=True)
+    blob = json.dumps({"stage": stage, "params": params, "code": code}, sort_keys=True)
     return hashlib.sha1(blob.encode()).hexdigest()
 
 
@@ -105,6 +110,9 @@ class StageRunner:
     spark: SparkSession
     root: str
     run_metrics: list[dict] = field(default_factory=list)
+    # read once per runner (a lambda, so the module global is looked up
+    # at construction): every stage it runs is fingerprinted with it
+    code: str = field(default_factory=lambda: package_digest())
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
@@ -121,7 +129,8 @@ class StageRunner:
             return None
         with open(meta_path) as f:
             meta = json.load(f)
-        if meta.get("fingerprint") != _fingerprint(stage, params or {}) or "schema" not in meta:
+        fingerprint = _fingerprint(stage, params or {}, self.code)
+        if meta.get("fingerprint") != fingerprint or "schema" not in meta:
             return None
         return meta
 
@@ -163,7 +172,7 @@ class StageRunner:
             }
         )
         meta = {
-            "fingerprint": _fingerprint(stage, params or {}),
+            "fingerprint": _fingerprint(stage, params or {}, self.code),
             "rows": n,
             "schema": df.schema.jsonValue(),
         }

@@ -15,6 +15,10 @@ assistant) are preserved. Flags are computed relationally with a window
 max over (conv_id, term_id) rather than inside the kernel, so the scan
 stays embarrassingly parallel and the only shuffle is the flag window —
 partitioned by conv_id, which is also the table's bucket key at scale.
+
+Given the gazetteer's descriptions, the same pass also scores each span's
+context against its term's description (``similarity``), so the KG job
+runs one Python stage and its ``scored`` stage is a JVM projection.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from pyspark.sql import functions as F
 
 from entity_extractor_spark.matching.context import DEFAULT_WINDOW_WORDS, WordIndex
 from entity_extractor_spark.matching.matcher import GazetteerMatcher, canonical_surface
+from entity_extractor_spark.operators.scoring import charngram_cosine_arrays
 
 MENTION_SCHEMA = (
     "conv_id string, turn_idx int, term_id string, term_name string, "
@@ -65,13 +70,21 @@ def scan_mentions(
     matcher: GazetteerMatcher,
     names: dict[str, str],
     window_words: int = DEFAULT_WINDOW_WORDS,
+    descriptions: dict[str, str | None] | None = None,
 ) -> DataFrame:
-    """The raw per-occurrence scan (no flags): one row per matched span."""
+    """The raw per-occurrence scan (no flags): one row per matched span.
+
+    With ``descriptions`` (term_id -> description) each row also gets
+    ``similarity``: the char-ngram cosine of its context against its
+    term's description, computed once per Arrow batch by the same
+    kernel as ``scoring.charngram_cosine``. A term with no or a null
+    description scores 0.0, as the left join in
+    ``scoring.score_candidates`` does."""
     spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast((matcher, names))
+    bc = spark.sparkContext.broadcast((matcher, names, descriptions))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m, nm = bc.value
+        m, nm, desc = bc.value
         for pdf in batches:
             conv_ids, turn_idxs, term_ids, term_names = [], [], [], []
             surfaces, starts, ends, contexts, locations = [], [], [], [], []
@@ -94,7 +107,7 @@ def scan_mentions(
                     ends.append(s.end)
                     contexts.append(widx.window(s.start, s.end, window_words))
                     locations.append(role)
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     "conv_id": pd.Series(conv_ids, dtype="object"),
                     "turn_idx": pd.Series(turn_idxs, dtype="int32"),
@@ -107,9 +120,15 @@ def scan_mentions(
                     "match_location": pd.Series(locations, dtype="object"),
                 }
             )
+            if desc is not None:
+                out["similarity"] = charngram_cosine_arrays(
+                    contexts, [desc.get(t) for t in term_ids]
+                )
+            yield out
 
     pruned = transcripts.select("conv_id", "turn_idx", "role", "text")
-    return pruned.mapInPandas(scan, MENTION_SCHEMA)
+    schema = MENTION_SCHEMA + (", similarity double" if descriptions is not None else "")
+    return pruned.mapInPandas(scan, schema)
 
 
 def extract_mentions(
@@ -118,8 +137,12 @@ def extract_mentions(
     include_aliases: bool = False,
     window_words: int = DEFAULT_WINDOW_WORDS,
     repartition_conv: bool = False,
+    descriptions: dict[str, str | None] | None = None,
 ) -> DataFrame:
     """Full mention table per FIXTURES.md §3 (scan + per-(conv,term) flags).
+
+    ``descriptions`` (term_id -> description) adds the scan's
+    ``similarity`` column (see :func:`scan_mentions`).
 
     ``repartition_conv``: hash-partition the raw scan output on conv_id
     BEFORE the flag window. HashPartitioning on conv_id satisfies the
@@ -151,7 +174,7 @@ def extract_mentions(
     AQE skew-split the conv_id stages instead.
     """
     matcher, names = build_matcher_from_gazetteer(gazetteer, include_aliases)
-    raw = scan_mentions(transcripts, matcher, names, window_words)
+    raw = scan_mentions(transcripts, matcher, names, window_words, descriptions)
     if repartition_conv:
         raw = raw.repartition("conv_id")
     w = Window.partitionBy("conv_id", "term_id")

@@ -18,10 +18,19 @@ for neural embeddings:
 * likelihood — threshold buckets 0.75/0.45 (`:17-21,34-38`) and the
   conjunctive variant (`assign_likelihood_labels.py:10-27`).
 
-Everything except the similarity kernel is pure column arithmetic —
-whole-stage-codegen'd, shuffle-free, scale-independent. The similarity
-kernel is an Arrow-batched pandas UDF over numpy (no per-row Python
-serialization).
+The similarity kernel is one numpy function over two string arrays,
+:func:`charngram_cosine_arrays`. It has two callers: the Arrow-batched
+pandas UDF :func:`charngram_cosine` (the operator path,
+:func:`score_candidates`), and the mention scan, which scores each
+emitted span against its term's description when given the
+descriptions (``operators/mentions.scan_mentions``). Both run the same
+function, so their similarities are bit-identical by construction.
+
+Everything else is :func:`score_columns`: pure column arithmetic —
+whole-stage-codegen'd, shuffle-free, scale-independent, with Java's
+``lower``/``rlike`` semantics. The pipeline's ``scored`` stage is that
+projection over the mention table the scan already scored, so it runs
+no Python.
 """
 
 from __future__ import annotations
@@ -52,19 +61,23 @@ _NER_CATEGORY_RE = r"(?i)\b(software|tool|pipeline|package|model|algorithm|code)
 
 
 def keyword_hits(text: Column, keywords: list[str] | None = None) -> Column:
-    """Sorted keyword substring hits (F8). Array stays in codegen.
+    """Sorted keyword substring hits (F8), in whole-stage codegen.
 
     The keyword list is a plan-time literal, so this unrolls to
-    ``array_compact(array(when(contains)...))`` instead of a
-    ``F.filter`` lambda: higher-order functions are interpreted and
-    re-evaluate lambda-BODY expressions (here ``lower(text)``) once per
-    element, while the unrolled form stays in whole-stage codegen where
-    subexpression elimination computes ``lower(text)`` once per row.
+    ``flatten(array(array_repeat(kw, contains ? 1 : 0)...))``: every
+    piece has generated code, and subexpression elimination computes
+    ``lower(text)`` once per row. ``array_compact`` and ``F.filter`` are
+    higher-order functions, which are interpreted: the projection would
+    fall out of codegen and evaluate ``lower(text)`` once per keyword.
+    ``array_repeat`` of a non-null literal keeps the type
+    ``array<string>`` with non-null elements.
     """
     kws = sorted(keywords or HEURISTIC_KEYWORDS)
     lowered = F.lower(text)
-    return F.array_compact(
-        F.array(*[F.when(lowered.contains(kw), F.lit(kw)) for kw in kws])
+    return F.flatten(
+        F.array(
+            *[F.array_repeat(F.lit(kw), F.when(lowered.contains(kw), 1).otherwise(0)) for kw in kws]
+        )
     )
 
 
@@ -98,7 +111,7 @@ def _ngram_matrix(texts: np.ndarray, dim: int = NGRAM_DIM) -> np.ndarray:
     return out
 
 
-def _factorized(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+def _factorized(s: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(codes, unique-row matrix with a trailing zero row).
 
     Each DISTINCT string is hashed once; ``codes`` indexes rows back
@@ -106,27 +119,27 @@ def _factorized(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     remapped to the trailing zero row — the same zero vector the
     per-row path emits."""
     codes, uniques = pd.factorize(s, use_na_sentinel=True)
-    m = _ngram_matrix(uniques.to_numpy())
+    m = _ngram_matrix(uniques)
     m = np.vstack([m, np.zeros((1, m.shape[1] if m.size else NGRAM_DIM))])
     return np.where(codes < 0, len(uniques), codes), m
 
 
-@pandas_udf(DoubleType())
-def charngram_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Cosine similarity of hashed char-ngram vectors (Arrow-batched).
+def charngram_cosine_arrays(a, b) -> np.ndarray:
+    """Row-wise cosine similarity of hashed char-ngram vectors of two
+    equal-length string sequences; a null or non-string side scores 0.0.
 
     All heavy ops run on DISTINCT values, never per row: norms on each
     side's unique rows, dots on unique (a, b) PAIRS, then scalar
-    gathers back to row order. In score_candidates a description
-    repeats per gazetteer term and a context repeats across a term's
-    mentions, so the dense per-row (batch x dim) gathers the naive form
-    needs (2 x 80 MB per 10k batch) never materialize. Every dot/norm
-    sum is over integer-valued counts, exactly representable in
-    float64, so summation order cannot diverge — results are
-    bit-identical to the per-row form and to charngram_cosine_sql
+    gathers back to row order. A description repeats per gazetteer term
+    and a context repeats across a term's mentions, so the dense
+    per-row (batch x dim) gathers the naive form needs (2 x 80 MB per
+    10k batch) never materialize. Every dot/norm sum is over
+    integer-valued counts, exactly representable in float64, so
+    summation order cannot diverge — results are bit-identical to the
+    per-row form, whatever the batch, and to charngram_cosine_sql
     (adversarial parity: tests/test_cross_engine_parity.py)."""
-    ia, ma = _factorized(a)
-    ib, mb = _factorized(b)
+    ia, ma = _factorized(np.asarray(a, dtype=object))
+    ib, mb = _factorized(np.asarray(b, dtype=object))
     # norms over unique rows: sqrt of exact integer sums of squares
     na = np.sqrt(np.einsum("ij,ij->i", ma, ma))
     nb = np.sqrt(np.einsum("ij,ij->i", mb, mb))
@@ -137,8 +150,13 @@ def charngram_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
     dots = np.einsum("ij,ij->i", ma[pa], mb[pb])[inv]
     norms = na[ia] * nb[ib]
     with np.errstate(divide="ignore", invalid="ignore"):
-        sims = np.where(norms > 0, dots / norms, 0.0)
-    return pd.Series(sims)
+        return np.where(norms > 0, dots / norms, 0.0)
+
+
+@pandas_udf(DoubleType())
+def charngram_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Arrow-batched UDF over :func:`charngram_cosine_arrays`."""
+    return pd.Series(charngram_cosine_arrays(a, b))
 
 
 def charngram_cosine_sql(
@@ -232,25 +250,31 @@ def determine_likelihood(similarity: Column, ner: Column, n_keywords: Column) ->
     )
 
 
-def score_candidates(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
-    """mentions x broadcast(gazetteer descriptions) -> scored_candidates
-    (FIXTURES.md §4). One broadcast join, no shuffle of the fact side."""
-    registry = F.broadcast(gazetteer.select("term_id", "description"))
-    joined = mentions.join(registry, "term_id", "left")
+def score_columns(df: DataFrame) -> DataFrame:
+    """Append ``heuristic_keywords``, ``ner_signal``, ``composite_score``
+    and ``likelihood`` (FIXTURES.md §4) to a frame that carries
+    ``context``, ``surface`` and ``similarity``. JVM expressions only:
+    no Python stage, no exchange."""
     kw = keyword_hits(F.col("context"))
-    scored = (
-        joined.withColumn("heuristic_keywords", kw)
-        .withColumn("ner_signal", ner_signal(F.col("context"), F.col("surface")))
-        .withColumn("similarity", charngram_cosine(F.col("context"), F.col("description")))
-    )
     return (
-        scored.withColumn(
+        df.withColumn("heuristic_keywords", kw)
+        .withColumn("ner_signal", ner_signal(F.col("context"), F.col("surface")))
+        .withColumn(
             "composite_score",
             composite_score(F.col("ner_signal"), F.col("similarity"), F.size("heuristic_keywords")),
         )
         .withColumn("likelihood", assign_likelihood(F.col("composite_score")))
-        .drop("description")
     )
+
+
+def score_candidates(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
+    """mentions x broadcast(gazetteer descriptions) -> scored_candidates
+    (FIXTURES.md §4). One broadcast join, no shuffle of the fact side; a
+    term without a description scores similarity 0.0."""
+    registry = F.broadcast(gazetteer.select("term_id", "description"))
+    joined = mentions.join(registry, "term_id", "left")
+    sim = charngram_cosine(F.col("context"), F.col("description"))
+    return score_columns(joined.withColumn("similarity", sim).drop("description"))
 
 
 LIKELIHOOD_RANKS = {"unlikely": 0, "somewhat likely": 1, "very likely": 2}

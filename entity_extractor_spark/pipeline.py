@@ -11,6 +11,10 @@ resumability/lineage; remove the runner and the same plan fuses.
 Scale shape (the plan you'd want at 10^12 turns):
   * transcripts arrive bucketed by conv_id (Iceberg bucket / repartition)
   * the mention scan is embarrassingly parallel (mapInPandas, no shuffle)
+    and is the job's one Python pass: it also computes each span's
+    description similarity, so the scored stage is a JVM projection of
+    the mention table that stores the span key and the score columns
+    only (context, surface and the flags live once, in mentions)
   * the mention stage crosses ONE exchange, an AQE-sized conv_id
     repartition that the flag window and the mention dedup window both
     reuse (subset rule); AQE picks its partition count from the bytes
@@ -32,6 +36,12 @@ from pyspark.sql import functions as F
 
 from entity_extractor_spark.lineage import StageRunner
 
+# the scored stage's columns: the span key and FIXTURES.md §4's scores
+SCORED_COLS = [
+    "conv_id", "turn_idx", "term_id", "start", "end",
+    "similarity", "heuristic_keywords", "ner_signal", "composite_score", "likelihood",
+]
+
 
 def run_pipeline(
     spark: SparkSession,
@@ -47,10 +57,15 @@ def run_pipeline(
     from entity_extractor_spark.operators.graph import build_edges, build_nodes
     from entity_extractor_spark.operators.mentions import dedup_mentions, extract_mentions
     from entity_extractor_spark.operators.predicates import all_triples
-    from entity_extractor_spark.operators.scoring import score_candidates
+    from entity_extractor_spark.operators.scoring import score_columns
 
     runner = StageRunner(spark, out_root)
     params = {"n_terms": int(len(gazetteer))}
+    descriptions = (
+        dict(zip(gazetteer["term_id"], gazetteer["description"]))
+        if "description" in gazetteer.columns
+        else None
+    )
 
     # one AQE-sized conv_id exchange for the whole stage: the explicit
     # repartition satisfies the flag window, the dedup window, AND the
@@ -59,18 +74,23 @@ def run_pipeline(
     # of the biggest intermediate table with one
     mentions = runner.run(
         "mentions",
-        lambda: dedup_mentions(extract_mentions(transcripts, gazetteer, repartition_conv=True)),
+        lambda: dedup_mentions(
+            extract_mentions(
+                transcripts, gazetteer, repartition_conv=True, descriptions=descriptions
+            )
+        ),
         params=params,
         key_col="conv_id",
     )
 
     out: dict[str, DataFrame] = {"mentions": mentions}
 
-    if "description" in gazetteer.columns:
-        gaz_df = spark.createDataFrame(gazetteer[["term_id", "description"]])
+    if descriptions is not None:
+        # the scan scored similarity; the rest is JVM columns, joined back
+        # to mentions' context/surface/flags on the span key when needed
         scored = runner.run(
             "scored",
-            lambda: score_candidates(mentions, gaz_df),
+            lambda: score_columns(mentions).select(*SCORED_COLS),
             params=params,
             key_col="conv_id",
         )

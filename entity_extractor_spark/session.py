@@ -59,6 +59,24 @@ def get_spark(
     return spark
 
 
+def _package_dir() -> Path:
+    import entity_extractor_spark
+
+    return Path(entity_extractor_spark.__file__).parent
+
+
+def package_digest() -> str:
+    """sha1 over this package's Python sources, in path order: the code
+    identity that names the shipped zip and enters every stage
+    fingerprint (``lineage.StageRunner``)."""
+    import hashlib
+
+    digest = hashlib.sha1()
+    for py in sorted(_package_dir().rglob("*.py")):
+        digest.update(py.read_bytes())
+    return digest.hexdigest()
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Distribute this package to executor Python workers.
 
@@ -67,15 +85,8 @@ def _ship_package(spark: SparkSession) -> None:
     driver's cwd and PYTHONPATH, and the matcher UDF's closure fails to
     unpickle when the job is launched from elsewhere.
     """
-    import hashlib
-
-    import entity_extractor_spark
-
-    pkg_dir = Path(entity_extractor_spark.__file__).parent
-    digest = hashlib.sha1()
-    for py in sorted(pkg_dir.rglob("*.py")):
-        digest.update(py.read_bytes())
-    zip_path = Path("/tmp") / f"entity_extractor_spark-{digest.hexdigest()[:12]}.zip"
+    pkg_dir = _package_dir()
+    zip_path = Path("/tmp") / f"entity_extractor_spark-{package_digest()[:12]}.zip"
     if not zip_path.exists():
         tmp = zip_path.with_suffix(".zip.tmp")
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:

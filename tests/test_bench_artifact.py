@@ -27,14 +27,16 @@ def test_emit_line_fits_driver_window_at_worst_case_widths(tmp_path, capsys):
     # appends, all at the widest realistic rendering (xxx.xxx)
     timings = {k: 999.999 for k in [*bench.HEADLINE, "context_window_100", *bench.SYNTH_KEYS]}
     timings["turns_per_sec"] = 999999.9
-    bench._emit(timings, dict(timings), n_turns=99_999_999)
+    bench._emit(timings, dict(timings), n_turns=99_999_999, steal_pct=99.99)
     line = capsys.readouterr().out.strip().splitlines()[-1]
     assert len(line) <= 1900, f"artifact line {len(line)}B overruns the tail window"
     payload = json.loads(line)
     assert payload["metric"] == "headline_queries_total"
     assert set(timings) == set(payload["queries"])
+    assert payload["steal_pct"] == 99.99
     # the detail record went to tmp, not the committed artifact
-    assert (tmp_path / "BENCH_DETAIL_LAST.json").exists()
+    detail = json.loads((tmp_path / "BENCH_DETAIL_LAST.json").read_text())
+    assert detail["steal_pct"] == 99.99
 
 
 def test_emit_shrinks_rather_than_truncates(tmp_path, capsys):
@@ -44,10 +46,11 @@ def test_emit_shrinks_rather_than_truncates(tmp_path, capsys):
     timings = {f"very_long_synthetic_query_name_{i:03d}": 123.456789 for i in range(70)}
     timings.update({k: 123.456789 for k in bench.SYNTH_KEYS})
     timings["turns_per_sec"] = 123456.789
-    bench._emit(timings, dict(timings), n_turns=1)
+    bench._emit(timings, dict(timings), n_turns=1, steal_pct=12.5)
     line = capsys.readouterr().out.strip().splitlines()[-1]
     payload = json.loads(line)
     assert len(line) <= 1900
+    assert payload["steal_pct"] == 12.5  # the noise survives every shrink step
     # either the full per-query map fit, or the line degraded to the
     # headline summary with an explicit pointer at the detail record
     assert len(payload["queries"]) == len(timings) or (
@@ -72,3 +75,13 @@ def test_plan_census_allowlist_keys_exist():
     spec2.loader.exec_module(entry)
     missing = set(census.CARTESIAN_BY_DESIGN) - set(entry.queries())
     assert not missing, f"allowlisted keys no longer in queries(): {missing}"
+
+
+def test_steal_pct_brackets_proc_stat(tmp_path):
+    """steal_pct is the steal share of the CPU ticks between two
+    readings, and 0.0 when no ticks passed."""
+    bench = _load_bench(tmp_path)
+    assert bench._steal_pct((10, 1000), (35, 1500)) == 5.0
+    assert bench._steal_pct((10, 1000), (10, 1000)) == 0.0
+    steal, total = bench._cpu_ticks()
+    assert 0 <= steal <= total

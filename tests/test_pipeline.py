@@ -6,6 +6,7 @@ import glob
 import json
 import os
 import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -113,7 +114,8 @@ def test_pipeline_resume_after_mid_run_crash(spark, corpus, tmp_path_factory):
 
 def test_pipeline_bookkeeping_runs_no_spark_jobs(spark, corpus, tmp_path, monkeypatch):
     """Job-count pins: a fresh build runs at most 2 Spark jobs in the
-    mention stage (its one exchange and the write), 5 in triples (one
+    mention stage (its one exchange and the write), 1 in scored (its
+    write: a projection of the mention table), 5 in triples (one
     exchange per input, the entity_map broadcast, the conv_id
     repartition and the write), 2 in nodes (one groupBy and the write)
     and 1 in entity_map (its write); lineage bookkeeping runs none, and
@@ -153,12 +155,79 @@ def test_pipeline_bookkeeping_runs_no_spark_jobs(spark, corpus, tmp_path, monkey
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(jobs["mentions"]) <= 2, jobs
+    assert len(jobs["scored"]) <= 1, jobs
     assert len(jobs["triples"]) <= 5, jobs
     assert len(jobs["nodes"]) <= 2, jobs
     assert len(jobs["entity_map"]) <= 1, jobs
     assert all(len(j) > 0 for s, j in jobs.items() if s != "entity_map"), jobs
     assert not any(lineage_jobs.values()), lineage_jobs
     assert not any(resume_jobs.values()), resume_jobs
+
+
+def _bag(df, cols) -> Counter:
+    """The rows of ``df`` over ``cols`` as a multiset (arrays as tuples)."""
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.select(*cols).collect()
+    )
+
+
+def test_pipeline_stage_tables_match_operator_composition(spark, corpus, tmp_path):
+    """The pipeline scores inside the mention scan and writes ``scored``
+    as the span key plus the score columns. Its stage tables must equal
+    the operator composition: ``mentions`` minus ``similarity`` is
+    ``dedup_mentions(extract_mentions(...))``, and ``scored`` (alone and
+    joined back to ``mentions`` on the span key) is ``score_candidates``
+    over it, with bit-equal similarities. The two most-mentioned terms
+    get a null and a 2-byte description, which both score 0.0."""
+    from entity_extractor_spark.operators.mentions import dedup_mentions, extract_mentions
+    from entity_extractor_spark.operators.scoring import score_candidates
+    from entity_extractor_spark.pipeline import SCORED_COLS
+
+    transcripts, gaz = corpus
+    expected_m = dedup_mentions(extract_mentions(transcripts, gaz))
+    hot = [
+        r["term_id"]
+        for r in expected_m.groupBy("term_id").count()
+        .orderBy(F.desc("count"), "term_id").limit(2).collect()
+    ]
+    gaz = gaz.copy()
+    gaz["description"] = gaz["description"].astype(object)
+    gaz.loc[gaz["term_id"] == hot[0], "description"] = None
+    gaz.loc[gaz["term_id"] == hot[1], "description"] = "ab"
+    out = run_pipeline(spark, transcripts, gaz, str(tmp_path / "parity"))
+    expected_s = score_candidates(
+        expected_m, spark.createDataFrame(gaz[["term_id", "description"]])
+    )
+
+    m_cols = expected_m.columns
+    assert sorted(out["mentions"].columns) == sorted(m_cols + ["similarity"])
+    assert _bag(out["mentions"], m_cols) == _bag(expected_m, m_cols)
+    assert out["scored"].columns == SCORED_COLS
+    assert _bag(out["scored"], SCORED_COLS) == _bag(expected_s, SCORED_COLS)
+    joined = out["mentions"].drop("similarity").join(out["scored"], SCORED_COLS[:5])
+    assert _bag(joined, expected_s.columns) == _bag(expected_s, expected_s.columns)
+    sims = out["scored"].filter(F.col("term_id").isin(hot)).select("term_id", "similarity")
+    assert {(r[0], r[1]) for r in sims.distinct().collect()} == {(hot[0], 0.0), (hot[1], 0.0)}
+    assert out["scored"].filter(F.col("similarity") > 0).count() > 0
+
+
+def test_stage_marker_of_other_code_is_rebuilt(spark, tmp_path, monkeypatch):
+    """The stage fingerprint includes the package's source digest: a
+    marker written under another digest is not trusted, so the stage
+    re-runs, while the same digest skips it."""
+    root = str(tmp_path / "code")
+
+    def skipped() -> bool:
+        runner = lineage.StageRunner(spark, root)
+        runner.run("s", lambda: spark.range(3))
+        return runner.run_metrics[-1]["skipped"]
+
+    assert not skipped()
+    assert skipped()
+    monkeypatch.setattr(lineage, "package_digest", lambda: "0" * 40)
+    assert not skipped()
+    assert skipped()
 
 
 def test_sinks(spark, corpus, tmp_path):

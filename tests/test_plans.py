@@ -105,6 +105,35 @@ def test_scoring_is_single_pass(spark):
     assert P.count_exchanges(plan) == 1, plan
 
 
+def test_scored_stage_is_a_jvm_projection(spark, tmp_path):
+    """The pipeline's scored stage: the mention scan computes
+    ``similarity`` inside its one Python pass (no separate Python eval
+    node), and ``score_columns`` over the parquet mention table is a
+    whole-stage-codegen'd projection with no Python eval node and no
+    exchange."""
+    import re
+
+    from entity_extractor_spark.operators.mentions import extract_mentions
+    from entity_extractor_spark.operators.scoring import score_columns
+    from entity_extractor_spark.pipeline import SCORED_COLS
+    from entity_extractor_spark.synth import SynthConfig, make_gazetteer, make_transcripts, to_spark
+
+    cfg = SynthConfig(seed=5, n_terms=8, n_convs=10)
+    gaz = make_gazetteer(cfg)
+    descriptions = dict(zip(gaz["term_id"], gaz["description"]))
+    m = extract_mentions(to_spark(spark, make_transcripts(cfg, gaz)), gaz, descriptions=descriptions)
+    scan_plan = P.formatted_plan(m)
+    assert "EvalPython" not in scan_plan and "MapInPandas" in scan_plan, scan_plan
+    m.write.parquet(str(tmp_path / "mentions"))
+    scored = score_columns(spark.read.parquet(str(tmp_path / "mentions"))).select(*SCORED_COLS)
+    plan = P.formatted_plan(scored)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    assert "Exchange" not in plan, plan
+    # an interpreted expression (e.g. a higher-order function) drops its
+    # Project out of codegen: the tree then shows "Project (n)", not "* Project (n)"
+    assert not re.search(r"(?m)^[\s+\-:]*Project \(\d+\)", plan), plan
+
+
 def test_topk_uses_take_ordered(spark):
     import __spark_entry__ as e
 
