@@ -112,7 +112,7 @@ class StageRunner:
     run_metrics: list[dict] = field(default_factory=list)
     # read once per runner (a lambda, so the module global is looked up
     # at construction): every stage it runs is fingerprinted with it
-    code: str = field(default_factory=lambda: package_digest())
+    code: str = field(init=False, default_factory=lambda: package_digest())
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)

@@ -137,12 +137,13 @@ def extract_mentions(
     include_aliases: bool = False,
     window_words: int = DEFAULT_WINDOW_WORDS,
     repartition_conv: bool = False,
-    descriptions: dict[str, str | None] | None = None,
+    similarity: bool = False,
 ) -> DataFrame:
     """Full mention table per FIXTURES.md §3 (scan + per-(conv,term) flags).
 
-    ``descriptions`` (term_id -> description) adds the scan's
-    ``similarity`` column (see :func:`scan_mentions`).
+    ``similarity``: the scan also scores each span against its term's
+    gazetteer ``description`` (see :func:`scan_mentions`) and adds the
+    ``similarity`` column.
 
     ``repartition_conv``: hash-partition the raw scan output on conv_id
     BEFORE the flag window. HashPartitioning on conv_id satisfies the
@@ -174,6 +175,14 @@ def extract_mentions(
     AQE skew-split the conv_id stages instead.
     """
     matcher, names = build_matcher_from_gazetteer(gazetteer, include_aliases)
+    descriptions = None
+    if similarity:
+        pdf = (
+            gazetteer.select("term_id", "description").toPandas()
+            if isinstance(gazetteer, DataFrame)
+            else gazetteer
+        )
+        descriptions = dict(zip(pdf["term_id"], pdf["description"]))
     raw = scan_mentions(transcripts, matcher, names, window_words, descriptions)
     if repartition_conv:
         raw = raw.repartition("conv_id")

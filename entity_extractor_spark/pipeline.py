@@ -61,11 +61,7 @@ def run_pipeline(
 
     runner = StageRunner(spark, out_root)
     params = {"n_terms": int(len(gazetteer))}
-    descriptions = (
-        dict(zip(gazetteer["term_id"], gazetteer["description"]))
-        if "description" in gazetteer.columns
-        else None
-    )
+    similarity = "description" in gazetteer.columns
 
     # one AQE-sized conv_id exchange for the whole stage: the explicit
     # repartition satisfies the flag window, the dedup window, AND the
@@ -75,17 +71,17 @@ def run_pipeline(
     mentions = runner.run(
         "mentions",
         lambda: dedup_mentions(
-            extract_mentions(
-                transcripts, gazetteer, repartition_conv=True, descriptions=descriptions
-            )
+            extract_mentions(transcripts, gazetteer, repartition_conv=True, similarity=similarity)
         ),
-        params=params,
+        # the scan's schema depends on it: a table stored without
+        # similarity must not be resumed for a run that scores
+        params={**params, "similarity": similarity},
         key_col="conv_id",
     )
 
     out: dict[str, DataFrame] = {"mentions": mentions}
 
-    if descriptions is not None:
+    if similarity:
         # the scan scored similarity; the rest is JVM columns, joined back
         # to mentions' context/surface/flags on the span key when needed
         scored = runner.run(

@@ -230,6 +230,25 @@ def test_stage_marker_of_other_code_is_rebuilt(spark, tmp_path, monkeypatch):
     assert skipped()
 
 
+def test_mentions_stored_without_similarity_is_rebuilt(spark, corpus, tmp_path):
+    """The mention table's schema depends on whether the gazetteer has
+    descriptions (the scan adds ``similarity``), so its fingerprint does
+    too: a root first built from an undescribed gazetteer is re-run with
+    a described one of the same size, rebuilds ``mentions``, scores, and
+    still resumes the stages that do not depend on descriptions."""
+    transcripts, gaz = corpus
+    root = str(tmp_path / "desc")
+    first = run_pipeline(spark, transcripts, gaz.drop(columns="description"), root)
+    assert "similarity" not in first["mentions"].columns and "scored" not in first
+    out = run_pipeline(spark, transcripts, gaz, root)
+    with open(os.path.join(root, "_RUN_MANIFEST.json")) as f:
+        skipped = {m["stage"]: m["skipped"] for m in json.load(f)["metrics"]}
+    assert not skipped["mentions"] and not skipped["scored"], skipped
+    assert skipped["triples"] and skipped["edges"] and skipped["nodes"], skipped
+    assert "similarity" in out["mentions"].columns
+    assert out["scored"].count() == out["mentions"].count()
+
+
 def test_sinks(spark, corpus, tmp_path):
     transcripts, gaz = corpus
     from entity_extractor_spark.operators.mentions import extract_mentions

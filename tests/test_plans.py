@@ -120,8 +120,7 @@ def test_scored_stage_is_a_jvm_projection(spark, tmp_path):
 
     cfg = SynthConfig(seed=5, n_terms=8, n_convs=10)
     gaz = make_gazetteer(cfg)
-    descriptions = dict(zip(gaz["term_id"], gaz["description"]))
-    m = extract_mentions(to_spark(spark, make_transcripts(cfg, gaz)), gaz, descriptions=descriptions)
+    m = extract_mentions(to_spark(spark, make_transcripts(cfg, gaz)), gaz, similarity=True)
     scan_plan = P.formatted_plan(m)
     assert "EvalPython" not in scan_plan and "MapInPandas" in scan_plan, scan_plan
     m.write.parquet(str(tmp_path / "mentions"))
