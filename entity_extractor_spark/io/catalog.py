@@ -13,10 +13,12 @@ minimal stand-in with the same *protocol* over plain parquet:
   semantically Iceberg's MERGE INTO, physically copy-on-write.
 
 On a real cluster this module is the seam to swap for
-``df.writeTo("catalog.db.t")`` / ``spark.read.table`` — every caller
-(pipeline.py, curation, sinks) goes through these four functions. The
-snapshot log doubles as the resume point the north rule requires: a
-failed job's partial ``v=N+1`` directory is simply never pointed at.
+``df.writeTo("catalog.db.t")`` / ``spark.read.table``. Its callers are
+the package API (``write_table``, ``read_table``, ``merge_into``); the
+pipelines in ``pipeline.py`` materialize their stages through
+``lineage.StageRunner`` instead, which keeps its own fingerprinted stage
+directories. A failed job's partial ``v=N+1`` directory is simply never
+pointed at.
 """
 
 from __future__ import annotations

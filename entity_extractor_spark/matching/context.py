@@ -61,8 +61,3 @@ def extract_context_window(
 ) -> str:
     """One-shot form (tests / oracle). Engine reuses WordIndex per text."""
     return WordIndex(text).window(match_start, match_end, window_words)
-
-
-def char_window(text: str, start: int, end: int, width: int = 100) -> str:
-    """Char-window context (`streamlit_dashboard/core_pipeline/utils.py:53-57`)."""
-    return text[max(0, start - width) : min(len(text), end + width)]

@@ -19,8 +19,9 @@ from pyspark.sql import functions as F
 DEFAULT_SALT_BUCKETS = 16
 
 
-def _salt(salt_buckets: int):
-    """Retry-deterministic salt: the physical partition index mod buckets.
+def _salt():
+    """Retry-deterministic salt: the physical partition index mod
+    ``DEFAULT_SALT_BUCKETS``.
 
     ``spark_partition_id()`` is stable under task retries (a re-executed
     task recomputes the same partition), unlike
@@ -29,23 +30,21 @@ def _salt(salt_buckets: int):
     aggregates. A hot key's rows spread across however many input
     partitions hold them, which is exactly the skew being defused.
     """
-    return F.pmod(F.spark_partition_id(), F.lit(salt_buckets))
+    return F.pmod(F.spark_partition_id(), F.lit(DEFAULT_SALT_BUCKETS))
 
 
-def salted_count(df: DataFrame, keys: list[str], salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
+def salted_count(df: DataFrame, keys: list[str]) -> DataFrame:
     """Two-stage skew-safe count: groupBy(keys + salt) -> groupBy(keys).
 
     Plan: two partial/final HashAggregate pairs, each behind its own
     exchange. The salt bounds any one reducer's share of a hot key in
     the first pair; AQE may coalesce the small final stage."""
-    salted = df.withColumn("_salt", _salt(salt_buckets))
+    salted = df.withColumn("_salt", _salt())
     partial = salted.groupBy(*keys, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
     return partial.groupBy(*keys).agg(F.sum("_partial").alias("weight"))
 
 
-def salted_collect_list(
-    df: DataFrame, keys: list[str], value_col: str, salt_buckets: int = DEFAULT_SALT_BUCKETS
-) -> DataFrame:
+def salted_collect_list(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
     """Two-stage skew-safe collect for a NON-associative aggregate — the
     template the salted_count docstring promises.
 
@@ -57,7 +56,7 @@ def salted_collect_list(
     which salt routed which row, including across task retries.
     Output column: ``<value_col>s`` (sorted array).
     """
-    salted = df.withColumn("_salt", _salt(salt_buckets))
+    salted = df.withColumn("_salt", _salt())
     partial = salted.groupBy(*keys, "_salt").agg(
         F.collect_list(value_col).alias("_part")
     )
@@ -66,12 +65,11 @@ def salted_collect_list(
     )
 
 
-def build_edges(triples: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
+def build_edges(triples: DataFrame) -> DataFrame:
     """edges(src, dst, pred, weight) — salted weight aggregation."""
     return salted_count(
         triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst"), "pred"),
         ["src", "dst", "pred"],
-        salt_buckets,
     ).select("src", "dst", "pred", F.col("weight").cast("long").alias("weight"))
 
 

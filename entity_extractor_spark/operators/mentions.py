@@ -13,8 +13,10 @@ text (`extraction_engine.py:69-92`), and per-(conv, term) role flags
 (`extraction_engine.py:150-184`, transposed title/abstract -> user/
 assistant) are preserved. Flags are computed relationally with a window
 max over (conv_id, term_id) rather than inside the kernel, so the scan
-stays embarrassingly parallel and the only shuffle is the flag window —
-partitioned by conv_id, which is also the table's bucket key at scale.
+stays embarrassingly parallel. The stage crosses ONE exchange, a conv_id
+hash repartition of the scan output: it satisfies the flag window (and
+:func:`dedup_mentions`' window) by the subset rule and is the key the
+table is stored by.
 
 Given the gazetteer's descriptions, the same pass also scores each span's
 context against its term's description (``similarity``), so the KG job
@@ -40,7 +42,7 @@ MENTION_SCHEMA = (
 
 
 def build_matcher_from_gazetteer(
-    gazetteer: DataFrame | pd.DataFrame, include_aliases: bool = False, mode: str = "word_boundary"
+    gazetteer: DataFrame | pd.DataFrame, include_aliases: bool = False
 ) -> tuple[GazetteerMatcher, dict[str, str]]:
     """Collect the (small) gazetteer and build the broadcastable matcher.
 
@@ -62,7 +64,7 @@ def build_matcher_from_gazetteer(
         if include_aliases and getattr(row, "aliases", None) is not None:
             surfaces.extend(list(row.aliases))
         terms.append((row.term_id, surfaces))
-    return GazetteerMatcher.build(terms, mode=mode), names
+    return GazetteerMatcher.build(terms), names
 
 
 def scan_mentions(
@@ -134,9 +136,6 @@ def scan_mentions(
 def extract_mentions(
     transcripts: DataFrame,
     gazetteer: DataFrame | pd.DataFrame,
-    include_aliases: bool = False,
-    window_words: int = DEFAULT_WINDOW_WORDS,
-    repartition_conv: bool = False,
     similarity: bool = False,
 ) -> DataFrame:
     """Full mention table per FIXTURES.md §3 (scan + per-(conv,term) flags).
@@ -145,36 +144,15 @@ def extract_mentions(
     gazetteer ``description`` (see :func:`scan_mentions`) and adds the
     ``similarity`` column.
 
-    ``repartition_conv``: hash-partition the raw scan output on conv_id
-    BEFORE the flag window. HashPartitioning on conv_id satisfies the
-    window's ClusteredDistribution on (conv_id, term_id) — partitioning
-    keys are a subset of the clustering keys — so the window needs only
-    a local sort and the whole stage still has exactly ONE exchange, now
-    keyed the way the stage output is stored/bucketed (conv_id).
-    Downstream conv_id consumers (dedup window, stage write) reuse the
-    same clustering instead of re-shuffling; the pipeline's mention
-    stage goes from three full shuffles of the mention table to one.
-    The repartition gives no partition count, so AQE sizes the exchange
-    from the shuffled bytes: a small corpus is written as a few files
-    instead of one per shuffle partition, and a large one keeps at least
-    ``defaultParallelism`` partitions.
-
-    Skew trade, made explicit: keying the one exchange on conv_id alone
-    concentrates ALL of a conversation's mentions on one task, where
-    the former (conv_id, term_id) flag-window exchange spread a hot
-    conversation across up to n_terms reducers. This is safe for
-    transcripts because a conversation is already the atomic unit of
-    parallelism downstream — the triple stage's lag/lead windows
-    partition by conv_id and would serialize each conversation anyway —
-    and conversation size is bounded by chat length (the synth corpus's
-    hot_conv_factor=50 outlier is ~10^3 turns), NOT by corpus size;
-    contrast entity keys, whose per-key row counts grow with the corpus
-    and are therefore salted (``operators/graph.salted_count``). If a
-    source ever had unbounded per-conversation rows, pass
-    ``repartition_conv=False`` to restore the finer-keyed spread and let
-    AQE skew-split the conv_id stages instead.
+    The scan output is hash-repartitioned on conv_id, with no partition
+    count so AQE sizes the exchange from the shuffled bytes. The flag
+    window then needs only a local sort, and the stage has ONE exchange.
+    Keying it on conv_id alone puts a whole conversation on one task:
+    a conversation is the atomic unit downstream anyway (the triple
+    stage's lag/lead windows), and its size is bounded by chat length,
+    not by corpus size.
     """
-    matcher, names = build_matcher_from_gazetteer(gazetteer, include_aliases)
+    matcher, names = build_matcher_from_gazetteer(gazetteer)
     descriptions = None
     if similarity:
         pdf = (
@@ -183,14 +161,12 @@ def extract_mentions(
             else gazetteer
         )
         descriptions = dict(zip(pdf["term_id"], pdf["description"]))
-    raw = scan_mentions(transcripts, matcher, names, window_words, descriptions)
-    if repartition_conv:
-        raw = raw.repartition("conv_id")
+    raw = scan_mentions(transcripts, matcher, names, descriptions=descriptions)
     w = Window.partitionBy("conv_id", "term_id")
     # both flags in ONE select so Catalyst fuses them into a single Window
     # node over one exchange (two sequential withColumns produce two sorts
     # and ~2x the wall time at 100k turns)
-    return raw.select(
+    return raw.repartition("conv_id").select(
         "*",
         (F.max(F.when(F.col("match_location") == "user", 1).otherwise(0)).over(w) == 1).alias(
             "in_user"
@@ -209,9 +185,8 @@ def dedup_mentions(mentions: DataFrame) -> DataFrame:
     via a row_number window — bit-reproducible under any partitioning,
     and because the window's ClusteredDistribution on (conv_id, term_id,
     context) is satisfied by any upstream conv_id hash partitioning
-    (subset rule), it adds NO exchange when the input is already
-    conv_id-clustered (the pipeline path via
-    ``extract_mentions(repartition_conv=True)``).
+    (subset rule), it adds NO exchange over :func:`extract_mentions`'
+    conv_id-partitioned output.
     """
     w = (
         Window.partitionBy("conv_id", "term_id", "context")

@@ -17,8 +17,8 @@ input once and crosses one exchange:
   ``mentions``    ((conv:turn) -> entity, one per distinct turn term) and
   ``co_mentions`` (unordered entity pair mentioned in the same turn).
 
-The per-predicate functions are filters over these frames. The window
-partitioning key is conv_id — the same key the transcript table is
+A caller that wants one predicate filters its frame by ``pred``. The
+window partitioning key is conv_id — the same key the transcript table is
 bucketed by, so at scale the window sorts within partitions without a
 full shuffle (`sortWithinPartitions` locality, SURVEY O1).
 """
@@ -90,16 +90,6 @@ def turn_entity_triples(mentions: DataFrame, entity_map: DataFrame | None = None
     )
 
 
-def mention_triples(mentions: DataFrame, entity_map: DataFrame | None = None) -> DataFrame:
-    """(conv:turn) -mentions-> entity, one row per distinct turn term."""
-    return turn_entity_triples(mentions, entity_map).filter(F.col("pred") == "mentions")
-
-
-def co_mention_triples(mentions: DataFrame, entity_map: DataFrame | None = None) -> DataFrame:
-    """Unordered same-turn entity pairs (subj < obj)."""
-    return turn_entity_triples(mentions, entity_map).filter(F.col("pred") == "co_mentions")
-
-
 def adjacent_turns(transcripts: DataFrame) -> DataFrame:
     """ONE conv_id window computing every adjacent-turn column (lead
     role/tool, lag role/turn). :func:`turn_pair_triples` derives both
@@ -122,8 +112,10 @@ def adjacent_turns(transcripts: DataFrame) -> DataFrame:
 def turn_pair_triples(transcripts: DataFrame) -> DataFrame:
     """``uses_tool`` and ``replies_to`` triples from one pass over
     :func:`adjacent_turns`: each turn yields up to two triples through
-    ``explode(array_compact(array(...)))``, a null struct standing for a
-    predicate that does not hold."""
+    ``explode(array(uses, replies))``, a null struct standing for a
+    predicate that does not hold and filtered out after the explode
+    (``array_compact`` would plan as a lambda ``filter``, which has no
+    generated code)."""
     assistant = F.col("role") == "assistant"
     uses = F.when(
         assistant & (F.col("next_role") == "tool") & F.col("next_tool").isNotNull(),
@@ -142,18 +134,11 @@ def turn_pair_triples(transcripts: DataFrame) -> DataFrame:
             _turn_id().alias("subj"),
             "conv_id",
             "turn_idx",
-            F.explode(F.array_compact(F.array(uses, replies))).alias("t"),
+            F.explode(F.array(uses, replies)).alias("t"),
         )
+        .filter(F.col("t").isNotNull())
         .select("subj", "t.pred", "t.obj", "conv_id", "turn_idx")
     )
-
-
-def uses_tool_triples(transcripts: DataFrame) -> DataFrame:
-    return turn_pair_triples(transcripts).filter(F.col("pred") == "uses_tool")
-
-
-def replies_to_triples(transcripts: DataFrame) -> DataFrame:
-    return turn_pair_triples(transcripts).filter(F.col("pred") == "replies_to")
 
 
 def alias_triples(entity_map: DataFrame) -> DataFrame:

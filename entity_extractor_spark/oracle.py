@@ -24,6 +24,12 @@ import pandas as pd
 
 from entity_extractor_spark.matching.matcher import canonical_surface
 
+# the mention columns an engine row must match an oracle row on, for P/R
+MENTION_KEYS = [
+    "conv_id", "turn_idx", "term_id", "surface", "start", "end",
+    "context", "match_location", "in_user", "in_assistant",
+]
+
 
 def _char_to_word_window(text: str, match_start: int, match_end: int, window_words: int) -> str:
     # Literal transcription of the reference quirk (every word assumed to be

@@ -15,9 +15,9 @@ Scale shape (the plan you'd want at 10^12 turns):
     description similarity, so the scored stage is a JVM projection of
     the mention table that stores the span key and the score columns
     only (context, surface and the flags live once, in mentions)
-  * the mention stage crosses ONE exchange, an AQE-sized conv_id
-    repartition that the flag window and the mention dedup window both
-    reuse (subset rule); AQE picks its partition count from the bytes
+  * the mention stage crosses ONE exchange, extract_mentions' AQE-sized
+    conv_id repartition, which the flag window, the mention dedup window
+    and the stored table's clustering all reuse (subset rule)
   * the triples stage reads each input once: one conv_id window over
     transcripts for both turn-pair predicates, one (conv_id, turn_idx)
     groupBy over mentions for mentions + co_mentions
@@ -63,16 +63,9 @@ def run_pipeline(
     params = {"n_terms": int(len(gazetteer))}
     similarity = "description" in gazetteer.columns
 
-    # one AQE-sized conv_id exchange for the whole stage: the explicit
-    # repartition satisfies the flag window, the dedup window, AND the
-    # storage clustering (subset rule), replacing the former three
-    # shuffles (flag window + dropDuplicates + StageRunner repartition)
-    # of the biggest intermediate table with one
     mentions = runner.run(
         "mentions",
-        lambda: dedup_mentions(
-            extract_mentions(transcripts, gazetteer, repartition_conv=True, similarity=similarity)
-        ),
+        lambda: dedup_mentions(extract_mentions(transcripts, gazetteer, similarity=similarity)),
         # the scan's schema depends on it: a table stored without
         # similarity must not be resumed for a run that scores
         params={**params, "similarity": similarity},

@@ -22,9 +22,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-TRANSCRIPT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
+from entity_extractor_spark.synth import TRANSCRIPT_SCHEMA
 
 
 def incremental_extract(

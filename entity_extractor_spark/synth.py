@@ -20,6 +20,10 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+TRANSCRIPT_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+)
+
 # Filler vocabulary: plain prose words that can never collide with gazetteer
 # names (names always carry a 'q'/'x'/'z' syllable, fillers never do).
 _FILLER = (
@@ -125,47 +129,11 @@ def make_transcripts(cfg: SynthConfig, gazetteer: pd.DataFrame | None = None) ->
     conv_turn_counts[cfg.n_convs // 2] = int(np.median(conv_turn_counts)) * cfg.hot_conv_factor
 
     recs: list[tuple] = []
-    base_ts = np.datetime64("2026-01-01T00:00:00")
     for ci in range(cfg.n_convs):
-        conv_id = f"conv-{ci:06d}"
-        n_turns = int(conv_turn_counts[ci])
-        roles = rng.choice(_ROLES, size=n_turns, p=_ROLE_P)
-        roles[0] = "user"
-        for ti in range(n_turns):
-            n_words = int(rng.integers(8, 60))
-            words = list(rng.choice(_FILLER, size=n_words))
-            # plant mentions
-            if rng.random() < cfg.plant_rate:
-                k = int(rng.integers(1, 4))
-                for _ in range(k):
-                    name = names[int(rng.integers(len(names)))]
-                    variant = int(rng.integers(0, 4))
-                    if variant == 1:
-                        name = name.upper()
-                    elif variant == 2:
-                        name = name.lower()
-                    elif variant == 3 and " " not in name:
-                        name = name + ","  # punctuation-adjacent occurrence
-                    words.insert(int(rng.integers(0, len(words) + 1)), name)
-            if rng.random() < cfg.hot_entity_rate:
-                words.insert(int(rng.integers(0, len(words) + 1)), hot_name)
-            if rng.random() < 0.25:
-                words.insert(int(rng.integers(0, len(words) + 1)), decoys[int(rng.integers(len(decoys)))])
-            # occasional double space / newline to exercise the reference's
-            # char->word drift quirk
-            text = " ".join(words)
-            if rng.random() < 0.15:
-                cut = int(rng.integers(1, max(2, len(text))))
-                text = text[:cut] + "\n " + text[cut:]
-            role = str(roles[ti])
-            tool = _TOOLS[int(rng.integers(len(_TOOLS)))] if role == "tool" else None
-            ts = base_ts + np.timedelta64(ci * 3600 + ti * 30, "s")
-            recs.append((conv_id, np.int32(ti), role, text, tool, ts))
-    df = pd.DataFrame.from_records(
-        recs, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )
-    df["turn_idx"] = df["turn_idx"].astype("int32")
-    return df
+        recs.extend(
+            _gen_conv_records(rng, cfg, names, decoys, hot_name, ci, int(conv_turn_counts[ci]))
+        )
+    return _records_frame(recs)
 
 
 def _gen_conv_records(
@@ -197,12 +165,14 @@ def _gen_conv_records(
                 elif variant == 2:
                     name = name.lower()
                 elif variant == 3 and " " not in name:
-                    name = name + ","
+                    name = name + ","  # punctuation-adjacent occurrence
                 words.insert(int(rng.integers(0, len(words) + 1)), name)
         if rng.random() < cfg.hot_entity_rate:
             words.insert(int(rng.integers(0, len(words) + 1)), hot_name)
         if rng.random() < 0.25:
             words.insert(int(rng.integers(0, len(words) + 1)), decoys[int(rng.integers(len(decoys)))])
+        # occasional double space / newline to exercise the reference's
+        # char->word drift quirk
         text = " ".join(words)
         if rng.random() < 0.15:
             cut = int(rng.integers(1, max(2, len(text))))
@@ -212,6 +182,14 @@ def _gen_conv_records(
         ts = base_ts + np.timedelta64(ci * 3600 + ti * 30, "s")
         recs.append((conv_id, np.int32(ti), role, text, tool, ts))
     return recs
+
+
+def _records_frame(recs: list[tuple]) -> pd.DataFrame:
+    df = pd.DataFrame.from_records(
+        recs, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    )
+    df["turn_idx"] = df["turn_idx"].astype("int32")
+    return df
 
 
 def make_transcripts_distributed(spark, cfg: SynthConfig, parallelism: int | None = None):
@@ -247,16 +225,9 @@ def make_transcripts_distributed(spark, cfg: SynthConfig, parallelism: int | Non
                 recs.extend(
                     _gen_conv_records(rng, cfg_, names_, decoys_, hot_, int(ci), n_turns)
                 )
-            out = pd.DataFrame.from_records(
-                recs, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-            )
-            out["turn_idx"] = out["turn_idx"].astype("int32")
-            yield out
+            yield _records_frame(recs)
 
-    return (
-        spark.range(0, cfg.n_convs, 1, par)
-        .mapInPandas(gen, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
-    )
+    return spark.range(0, cfg.n_convs, 1, par).mapInPandas(gen, TRANSCRIPT_SCHEMA)
 
 
 def to_spark(spark, pdf: pd.DataFrame, gaz: bool = False):

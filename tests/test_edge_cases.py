@@ -8,16 +8,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from entity_extractor_spark.operators.mentions import extract_mentions
-from entity_extractor_spark.oracle import oracle_extract, precision_recall
+from entity_extractor_spark.oracle import MENTION_KEYS, oracle_extract, precision_recall
 from entity_extractor_spark.synth import (
     SynthConfig,
     make_gazetteer,
     make_transcripts_distributed,
     to_spark,
 )
-
-KEYS = ["conv_id", "turn_idx", "term_id", "surface", "start", "end", "context",
-        "match_location", "in_user", "in_assistant"]
 
 EMPTY_T = pd.DataFrame(
     {
@@ -93,7 +90,7 @@ def test_distributed_corpus_exact_parity(spark):
     engine = extract_mentions(tdf, gaz).toPandas()
     oracle = oracle_extract(pdf, gaz)
     assert len(oracle) > 100
-    p, r = precision_recall(engine, oracle, KEYS)
+    p, r = precision_recall(engine, oracle, MENTION_KEYS)
     assert p == 1.0 and r == 1.0, (p, r)
 
 

@@ -20,9 +20,8 @@ from entity_extractor_spark.operators.graph import build_edges, build_nodes, sal
 from entity_extractor_spark.operators.mentions import extract_mentions
 from entity_extractor_spark.operators.predicates import (
     all_triples,
-    co_mention_triples,
-    replies_to_triples,
-    uses_tool_triples,
+    turn_entity_triples,
+    turn_pair_triples,
 )
 from entity_extractor_spark.synth import SynthConfig, make_gazetteer, make_transcripts, to_spark
 
@@ -112,9 +111,10 @@ def test_predicate_triples(spark):
         }
     )
     t = to_spark(spark, pdf)
-    uses = uses_tool_triples(t).collect()
+    pairs = turn_pair_triples(t)
+    uses = pairs.filter(F.col("pred") == "uses_tool").collect()
     assert len(uses) == 1 and uses[0]["subj"] == "c1:1" and uses[0]["obj"] == "tool:search"
-    replies = {(r["subj"], r["obj"]) for r in replies_to_triples(t).collect()}
+    replies = {(r["subj"], r["obj"]) for r in pairs.filter(F.col("pred") == "replies_to").collect()}
     assert replies == {("c1:1", "c1:0")}
 
 
@@ -128,7 +128,7 @@ def test_co_mentions_and_all_triples(spark):
     triples = all_triples(tr, mentions, emap)
     preds = {r["pred"] for r in triples.select("pred").distinct().collect()}
     assert {"mentions", "uses_tool", "replies_to", "co_mentions"} <= preds
-    co = co_mention_triples(mentions, emap)
+    co = turn_entity_triples(mentions, emap).filter(F.col("pred") == "co_mentions")
     bad = co.filter(F.col("subj") >= F.col("obj")).count()
     assert bad == 0  # unordered pair canonical form
 
@@ -140,15 +140,18 @@ def test_co_mention_pairs_exact(spark):
         [("c1", 0, "A"), ("c1", 0, "B"), ("c1", 0, "C"), ("c1", 1, "A"), ("c2", 0, "B")],
         "conv_id string, turn_idx int, term_id string",
     )
+    co_mentions = F.col("pred") == "co_mentions"
     got = {
         (r["subj"], r["obj"], r["conv_id"], r["turn_idx"])
-        for r in co_mention_triples(m).collect()
+        for r in turn_entity_triples(m).filter(co_mentions).collect()
     }
     assert got == {("A", "B", "c1", 0), ("A", "C", "c1", 0), ("B", "C", "c1", 0)}
     emap = spark.createDataFrame(
         [("B", "X"), ("C", "X")], "term_id string, entity_id string"
     )
-    got2 = {(r["subj"], r["obj"]) for r in co_mention_triples(m, emap).collect()}
+    got2 = {
+        (r["subj"], r["obj"]) for r in turn_entity_triples(m, emap).filter(co_mentions).collect()
+    }
     assert got2 == {("A", "X")}
 
 

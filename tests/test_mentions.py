@@ -7,11 +7,8 @@ import pandas as pd
 import pytest
 
 from entity_extractor_spark.operators.mentions import dedup_mentions, extract_mentions
-from entity_extractor_spark.oracle import oracle_extract, precision_recall
+from entity_extractor_spark.oracle import MENTION_KEYS, oracle_extract, precision_recall
 from entity_extractor_spark.synth import SynthConfig, make_gazetteer, make_transcripts, to_spark
-
-KEYS = ["conv_id", "turn_idx", "term_id", "surface", "start", "end", "context",
-        "match_location", "in_user", "in_assistant"]
 
 
 @pytest.fixture(scope="module")
@@ -65,7 +62,7 @@ def test_mini_case_matches_oracle(spark, mini_case):
     transcripts, gazetteer = mini_case
     engine = extract_mentions(to_spark(spark, transcripts), gazetteer).toPandas()
     oracle = oracle_extract(transcripts, gazetteer)
-    p, r = precision_recall(engine, oracle, KEYS)
+    p, r = precision_recall(engine, oracle, MENTION_KEYS)
     assert p == 1.0 and r == 1.0
 
 
@@ -80,7 +77,7 @@ def test_parity_gate_synthetic(spark):
     engine = extract_mentions(to_spark(spark, transcripts), gaz).toPandas()
     oracle = oracle_extract(transcripts, gaz)
     assert len(oracle) > 200, "fixture should plant plenty of mentions"
-    p, r = precision_recall(engine, oracle, KEYS)
+    p, r = precision_recall(engine, oracle, MENTION_KEYS)
     assert p == 1.0 and r == 1.0, (p, r)
 
 

@@ -15,7 +15,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_mention_scan_prunes_and_shuffles_once(spark):
     """The raw scan reads ONLY (conv_id, turn_idx, role, text) and the
-    full extract has exactly one shuffle (the flag window)."""
+    full extract has exactly one shuffle, keyed on conv_id alone (the
+    flag window reuses it)."""
+    import re
+
     from entity_extractor_spark.operators.mentions import (
         build_matcher_from_gazetteer,
         extract_mentions,
@@ -39,11 +42,13 @@ def test_mention_scan_prunes_and_shuffles_once(spark):
 
     full_plan = P.formatted_plan(extract_mentions(t, gaz))
     assert P.count_exchanges(full_plan) == 1, full_plan
+    keys = re.findall(r"Arguments: hashpartitioning\(([^)]*)\)", full_plan)
+    assert len(keys) == 1 and re.fullmatch(r"conv_id#\d+, \d+", keys[0]), full_plan
 
 
 def test_pipeline_mention_stage_single_exchange(spark):
-    """The pipeline's fused mention stage — explicit conv_id repartition
-    + flag window + deterministic dedup window — still has exactly ONE
+    """The pipeline's fused mention stage — conv_id repartition + flag
+    window + deterministic dedup window — still has exactly ONE
     exchange: HashPartitioning(conv_id) satisfies both windows'
     ClusteredDistribution (partitioning keys are a subset of the
     clustering keys), so each window adds only a local sort. This is
@@ -58,7 +63,7 @@ def test_pipeline_mention_stage_single_exchange(spark):
         F.lit("user").alias("role"),
         "text",
     )
-    staged = dedup_mentions(extract_mentions(t, gaz, repartition_conv=True))
+    staged = dedup_mentions(extract_mentions(t, gaz))
     plan = P.formatted_plan(staged)
     assert P.count_exchanges(plan) == 1, plan
 
@@ -100,7 +105,7 @@ def test_scoring_is_single_pass(spark):
     m = extract_mentions(t, gaz)
     scored = score_candidates(m, to_spark(spark, gaz, gaz=True))
     plan = P.formatted_plan(scored)
-    # only the flag-window exchange from extract_mentions; the gazetteer
+    # only extract_mentions' conv_id exchange; the gazetteer
     # join must NOT add a shuffle
     assert P.count_exchanges(plan) == 1, plan
 
@@ -143,12 +148,12 @@ def test_topk_uses_take_ordered(spark):
 def test_co_mentions_single_exchange_no_join(spark):
     """Grouped pair expansion: mention rows cross exactly ONE exchange
     (the per-turn groupBy); there must be no self-join in the plan."""
-    from entity_extractor_spark.operators.predicates import co_mention_triples
+    from entity_extractor_spark.operators.predicates import turn_entity_triples
 
     m = spark.createDataFrame(
         [("c1", 0, "A"), ("c1", 0, "B")], "conv_id string, turn_idx int, term_id string"
     )
-    plan = P.formatted_plan(co_mention_triples(m))
+    plan = P.formatted_plan(turn_entity_triples(m).filter(F.col("pred") == "co_mentions"))
     assert P.count_exchanges(plan) == 1, plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
 
@@ -157,7 +162,9 @@ def test_all_triples_one_window_one_transcripts_scan(spark, tmp_path):
     """The triples build reads each input once: ONE Window (lead/lag for
     both turn-pair predicates) over ONE scan of the transcripts parquet,
     and one exchange per input (the conv_id window and the per-turn
-    mention groupBy)."""
+    mention groupBy). The turn-pair Generate explodes a plain array: no
+    lambda function, which would leave its input without generated
+    code."""
     import re
 
     from entity_extractor_spark.operators.canonicalize import canonical_entities
@@ -176,6 +183,9 @@ def test_all_triples_one_window_one_transcripts_scan(spark, tmp_path):
     scans = re.findall(r"Location: \w+ \[([^\]]*)\]", plan)
     assert sum("transcripts" in loc for loc in scans) == 1, plan
     assert P.count_exchanges(plan) == 2, plan
+    generates = re.findall(r"(?m)^\(\d+\) Generate\n.*?(?=^\(\d+\) |\Z)", plan, re.S)
+    turn_pair = [g for g in generates if "replies_to" in g]
+    assert len(turn_pair) == 1 and "lambdafunction" not in turn_pair[0], plan
 
 
 def test_scored_candidates_plan(spark):

@@ -28,7 +28,7 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from entity_extractor_spark.operators.mentions import extract_mentions
-    from entity_extractor_spark.oracle import oracle_extract, precision_recall
+    from entity_extractor_spark.oracle import MENTION_KEYS, oracle_extract, precision_recall
     from entity_extractor_spark.session import get_spark
 
     spark = get_spark("measure-pr", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
@@ -41,12 +41,7 @@ def main() -> None:
     )
     engine = extract_mentions(t, gaz).toPandas()
     oracle = oracle_extract(t.toPandas(), gaz)
-    # the full test-gate key set (tests/test_mentions.py::KEYS)
-    keys = [
-        "conv_id", "turn_idx", "term_id", "surface", "start", "end",
-        "context", "match_location", "in_user", "in_assistant",
-    ]
-    p, r = precision_recall(engine, oracle, keys)
+    p, r = precision_recall(engine, oracle, MENTION_KEYS)
     print(
         f"sf_dir={SF_DIR} turns={t.count()} gazetteer={len(gaz)} "
         f"engine_mentions={len(engine)} oracle_mentions={len(oracle)} "
