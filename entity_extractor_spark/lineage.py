@@ -20,7 +20,12 @@ Design:
   nor a resumed stage is reloaded through schema inference. On a cluster
   the same protocol rides on Iceberg snapshots;
 * metrics come from the same lineage rows (row counts per stage) plus
-  simple wall-clock stamps in the manifest.
+  simple wall-clock stamps in the manifest;
+* a runner may be called from several threads at once (a pipeline
+  overlaps stages that do not feed each other): each stage writes under
+  its own directory, its Spark jobs carry the stage name as their job
+  description, and ``run_metrics`` keep the runner's ``order`` whatever
+  order the stages finish in.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -109,10 +115,14 @@ class StageRunner:
 
     spark: SparkSession
     root: str
+    # the stages' pipeline order: run_metrics, the manifest and lineage()
+    # list stages in it (a stage not named follows, in finishing order)
+    order: tuple[str, ...] = ()
     run_metrics: list[dict] = field(default_factory=list)
     # read once per runner (a lambda, so the module global is looked up
     # at construction): every stage it runs is fingerprinted with it
     code: str = field(init=False, default_factory=lambda: package_digest())
+    _lock: threading.Lock = field(init=False, repr=False, default_factory=threading.Lock)
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
@@ -134,6 +144,12 @@ class StageRunner:
             return None
         return meta
 
+    def _record(self, metric: dict) -> None:
+        rank = {s: i for i, s in enumerate(self.order)}
+        with self._lock:
+            self.run_metrics.append(metric)
+            self.run_metrics.sort(key=lambda m: rank.get(m["stage"], len(rank)))
+
     def run(
         self,
         stage: str,
@@ -145,11 +161,31 @@ class StageRunner:
         """Materialize ``build()`` to parquet under root/stage unless an
         identical completed run exists; returns the (re)loaded DataFrame
         so downstream stages read the materialized, lineage-truncated
-        table (the checkpoint that makes the whole job resumable)."""
+        table (the checkpoint that makes the whole job resumable).
+
+        The stage's Spark jobs carry ``stage`` as their job description;
+        the caller's description is restored afterwards and its job group
+        is left alone."""
+        sc = self.spark.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(stage)
+        try:
+            return self._materialize(stage, build, params, key_col, partition_by)
+        finally:
+            sc.setLocalProperty("spark.job.description", caller)
+
+    def _materialize(
+        self,
+        stage: str,
+        build: "callable",
+        params: dict | None,
+        key_col: str | None,
+        partition_by: str | None,
+    ) -> DataFrame:
         out = self._dir(stage)
         meta = self._done_meta(stage, params)
         if meta is not None:
-            self.run_metrics.append({"stage": stage, "skipped": True})
+            self._record({"stage": stage, "skipped": True})
             return self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(out)
         t0 = time.perf_counter()
         df = build()
@@ -163,7 +199,7 @@ class StageRunner:
         os.makedirs(lin_dir)
         pq.write_table(lin, os.path.join(lin_dir, LINEAGE_FILE))
         n = pc.sum(lin["n_rows"]).as_py() or 0
-        self.run_metrics.append(
+        self._record(
             {
                 "stage": stage,
                 "skipped": False,

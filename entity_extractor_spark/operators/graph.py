@@ -1,14 +1,17 @@
 """Graph materialization: triples -> node/edge tables, skew-safe.
 
-FIXTURES.md §5 shapes. The aggregation paths use *explicit hot-key
-salting* (SURVEY R6 / north rule): a groupBy on ``obj`` is exposed to
-entity skew (one hot entity in ~30% of turns), so counts are computed in
-two stages — partial counts over ``(key, salt)`` then a final merge over
-``key``. Spark's partial aggregation already map-side-combines, but the
-salted form also protects the FINAL aggregate when a single key's partial
-rows exceed one reducer's share (the 10^12-turn case), and it is the
-pattern a reviewer should copy for non-associative aggs (collect_list
-etc.) where map-side combine does not save you.
+FIXTURES.md §5 shapes. The pipeline's edge and node tables are plain
+``groupBy`` counts and sums: both map-side-combine, so a hot entity (one
+in ~30% of turns) reaches its reducer as at most one partial row per map
+task, and one exchange suffices.
+
+The *explicit hot-key salting* helpers (SURVEY R6 / north rule) compute
+an aggregate in two stages, partials over ``(key, salt)`` then a final
+merge over ``key``. The salted form protects the FINAL aggregate when a
+single key's partial rows exceed one reducer's share (the 10^12-turn
+case), and it is the pattern to copy for non-associative aggs
+(collect_list etc.) where map-side combine does not save you. The
+``graph_edges`` and ``graph_degree`` contract keys use it.
 """
 
 from __future__ import annotations
@@ -66,35 +69,38 @@ def salted_collect_list(df: DataFrame, keys: list[str], value_col: str) -> DataF
 
 
 def build_edges(triples: DataFrame) -> DataFrame:
-    """edges(src, dst, pred, weight) — salted weight aggregation."""
-    return salted_count(
-        triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst"), "pred"),
-        ["src", "dst", "pred"],
-    ).select("src", "dst", "pred", F.col("weight").cast("long").alias("weight"))
+    """edges(src, dst, pred, weight): one ``groupBy(src, dst, pred)``
+    count. A count map-side-combines, so a hot key reaches its reducer as
+    at most one partial row per map task: one exchange, no salt round.
+    The count is a sum of ones, so ``weight`` stays a nullable long like
+    the table's stored schema."""
+    return triples.groupBy(
+        F.col("subj").alias("src"), F.col("obj").alias("dst"), "pred"
+    ).agg(F.sum(F.lit(1)).alias("weight"))
 
 
-def build_nodes(edges: DataFrame) -> DataFrame:
+def build_nodes(triples: DataFrame) -> DataFrame:
     """nodes(node_id, kind, canonical_name, mention_count) from the
-    (src, dst, pred, weight) table of :func:`build_edges`.
+    (subj, pred, obj) triple table.
 
     kind is derived from the id shape: ``tool:*`` -> tool, ``conv-*:n``
     -> turn, ``conv-*`` -> conversation, else entity.
 
-    Every triple's (subj, obj, pred) appears in edges with its
-    occurrence count, so one ``groupBy(node_id)`` over both ends of each
-    edge gives the node universe and, from the ``mentions`` edges' dst
-    ends, each node's mention count: one exchange over the
-    weight-compressed edge table, no distinct + count + join. The sum
-    map-side-combines, so a hot entity's partial rows stay one per input
-    partition.
+    One ``groupBy(node_id)`` over both ends of each triple gives the node
+    universe and, since a ``mentions`` triple adds 1 to its obj, each
+    node's mention count: the same table as a sum over the edge table's
+    weights (a ``mentions`` edge's weight is its triple count), without
+    waiting for the edges. One exchange, no distinct + count + join; the
+    sum map-side-combines, so a hot entity's partial rows stay one per
+    input partition.
     """
     zero = F.lit(0).cast("long")
-    mentioned = F.when(F.col("pred") == "mentions", F.col("weight")).otherwise(zero)
-    ends = edges.select(
+    mentioned = (F.col("pred") == "mentions").cast("long")
+    ends = triples.select(
         F.explode(
             F.array(
-                F.struct(F.col("src").alias("node_id"), zero.alias("n")),
-                F.struct(F.col("dst").alias("node_id"), mentioned.alias("n")),
+                F.struct(F.col("subj").alias("node_id"), zero.alias("n")),
+                F.struct(F.col("obj").alias("node_id"), mentioned.alias("n")),
             )
         ).alias("e")
     )

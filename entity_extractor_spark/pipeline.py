@@ -9,6 +9,12 @@ JSON files between phases. Stage boundaries exist only for
 resumability/lineage; remove the runner and the same plan fuses.
 
 Scale shape (the plan you'd want at 10^12 turns):
+  * the stages form a DAG, and only its critical path blocks:
+    mentions -> triples -> edges. entity_map reads only the gazetteer,
+    so it runs beside mentions; scored, a projection of mentions, runs
+    beside triples -> edges; nodes read triples, so they run beside
+    edges. Overlapped stages fill the cores a 1-2 task job (a write
+    commit, a reload, planning) leaves idle on the chain
   * transcripts arrive bucketed by conv_id (Iceberg bucket / repartition)
   * the mention scan is embarrassingly parallel (mapInPandas, no shuffle)
     and is the job's one Python pass: it also computes each span's
@@ -21,8 +27,9 @@ Scale shape (the plan you'd want at 10^12 turns):
   * the triples stage reads each input once: one conv_id window over
     transcripts for both turn-pair predicates, one (conv_id, turn_idx)
     groupBy over mentions for mentions + co_mentions
-  * edge weights are salted (operators/graph.salted_count) against hot
-    entities; nodes are one groupBy over the edge table's two ends
+  * edge weights are one groupBy count and nodes one groupBy over both
+    ends of each triple; both map-side-combine, so a hot entity reaches
+    its reducer as one partial row per map task
   * the gazetteer/alias side is always broadcast; the alias union-find
     runs on the driver over the gazetteer the job already holds, never
     on the corpus.
@@ -30,11 +37,17 @@ Scale shape (the plan you'd want at 10^12 turns):
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
+
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from entity_extractor_spark.lineage import StageRunner
+
+# the KG job's stages in pipeline order
+STAGES = ("mentions", "scored", "entity_map", "triples", "edges", "nodes")
 
 # the scored stage's columns: the span key and FIXTURES.md §4's scores
 SCORED_COLS = [
@@ -52,62 +65,69 @@ def run_pipeline(
     """Run (or resume) the full pipeline under ``out_root``; returns the
     materialized stage tables. The ``scored`` stage runs when the
     gazetteer has a ``description`` column, ``entity_map`` when it has
-    ``aliases``."""
+    ``aliases``.
+
+    mentions, triples and edges run in the calling thread (the mention
+    scan reads the thread's active session); entity_map, scored and
+    nodes run beside them on a two-thread pool, with the caller's job
+    group and description. Every stage's result is awaited before the
+    manifest is written, so a failed stage fails the call and leaves no
+    manifest."""
     from entity_extractor_spark.operators.canonicalize import canonical_entities
     from entity_extractor_spark.operators.graph import build_edges, build_nodes
     from entity_extractor_spark.operators.mentions import dedup_mentions, extract_mentions
     from entity_extractor_spark.operators.predicates import all_triples
     from entity_extractor_spark.operators.scoring import score_columns
 
-    runner = StageRunner(spark, out_root)
+    runner = StageRunner(spark, out_root, order=STAGES)
     params = {"n_terms": int(len(gazetteer))}
     similarity = "description" in gazetteer.columns
+    side: dict[str, Future] = {}
 
-    mentions = runner.run(
-        "mentions",
-        lambda: dedup_mentions(extract_mentions(transcripts, gazetteer, similarity=similarity)),
-        # the scan's schema depends on it: a table stored without
-        # similarity must not be resumed for a run that scores
-        params={**params, "similarity": similarity},
-        key_col="conv_id",
-    )
+    with ThreadPoolExecutor(max_workers=2, thread_name_prefix="kg-stage") as pool:
 
-    out: dict[str, DataFrame] = {"mentions": mentions}
+        def beside(stage: str, build, **kwargs) -> None:
+            # the wrapper copies this thread's job group and description now
+            target = inheritable_thread_target(spark)(runner.run)
+            side[stage] = pool.submit(target, stage, build, params=params, **kwargs)
 
-    if similarity:
-        # the scan scored similarity; the rest is JVM columns, joined back
-        # to mentions' context/surface/flags on the span key when needed
-        scored = runner.run(
-            "scored",
-            lambda: score_columns(mentions).select(*SCORED_COLS),
-            params=params,
+        if "aliases" in gazetteer.columns:
+            beside("entity_map", lambda: canonical_entities(gazetteer))
+
+        mentions = runner.run(
+            "mentions",
+            lambda: dedup_mentions(extract_mentions(transcripts, gazetteer, similarity=similarity)),
+            # the scan's schema depends on it: a table stored without
+            # similarity must not be resumed for a run that scores
+            params={**params, "similarity": similarity},
             key_col="conv_id",
         )
-        out["scored"] = scored
 
-    if "aliases" in gazetteer.columns:
-        entity_map = runner.run(
-            "entity_map", lambda: canonical_entities(gazetteer), params=params
+        if similarity:
+            # the scan scored similarity; the rest is JVM columns, joined back
+            # to mentions' context/surface/flags on the span key when needed
+            beside(
+                "scored",
+                lambda: score_columns(mentions).select(*SCORED_COLS),
+                key_col="conv_id",
+            )
+
+        entity_map = side["entity_map"].result() if "entity_map" in side else None
+        triples = runner.run(
+            "triples",
+            lambda: all_triples(transcripts, mentions, entity_map),
+            params=params,
+            key_col="conv_id",
+            partition_by="conv_id",
         )
-    else:
-        entity_map = None
-    out["entity_map"] = entity_map
+        beside("nodes", lambda: build_nodes(triples))
+        edges = runner.run("edges", lambda: build_edges(triples), params=params)
+        done = {stage: f.result() for stage, f in side.items()}
 
-    triples = runner.run(
-        "triples",
-        lambda: all_triples(transcripts, mentions, entity_map),
-        params=params,
-        key_col="conv_id",
-        partition_by="conv_id",
-    )
-    out["triples"] = triples
-
-    edges = runner.run("edges", lambda: build_edges(triples), params=params)
-    out["edges"] = edges
-    # nodes derive from the materialized weight-compressed edge table —
-    # one scan of ~|edges| rows instead of two scans of |triples|
-    out["nodes"] = runner.run("nodes", lambda: build_nodes(edges), params=params)
-
+    out: dict[str, DataFrame] = {"mentions": mentions}
+    if similarity:
+        out["scored"] = done["scored"]
+    out.update(entity_map=entity_map, triples=triples, edges=edges, nodes=done["nodes"])
     runner.write_manifest()
     out["lineage"] = runner.lineage()
     return out

@@ -246,14 +246,5 @@ def to_spark(spark, pdf: pd.DataFrame, gaz: bool = False):
             ]
         )
     else:
-        schema = T.StructType(
-            [
-                T.StructField("conv_id", T.StringType(), False),
-                T.StructField("turn_idx", T.IntegerType(), False),
-                T.StructField("role", T.StringType(), False),
-                T.StructField("text", T.StringType(), True),
-                T.StructField("tool", T.StringType(), True),
-                T.StructField("ts", T.TimestampType(), True),
-            ]
-        )
+        schema = TRANSCRIPT_SCHEMA
     return spark.createDataFrame(pdf, schema=schema)

@@ -171,7 +171,7 @@ def test_build_nodes_and_edges(spark):
     mentions = extract_mentions(tr, gaz)
     triples = all_triples(tr, mentions)
     edges = build_edges(triples)
-    nodes = build_nodes(edges)
+    nodes = build_nodes(triples)
     assert edges.filter(F.col("weight") < 1).count() == 0
     kinds = {r["kind"] for r in nodes.select("kind").distinct().collect()}
     assert "turn" in kinds and "entity" in kinds
@@ -198,11 +198,12 @@ def _node_kind(node_id: str) -> str:
 
 
 def test_build_nodes_from_edges_identical(spark):
-    """The edge-derived node table equals a pandas computation from the
-    collected triples: one node per distinct subj/obj, its kind, and its
+    """The node table equals a pandas computation from the collected
+    triples: one node per distinct subj/obj, its kind, and its
     mention_count = the number of ``mentions`` triples pointing at it.
     The entity map folds the 8 terms into 3 entities, so some turns
-    mention one entity through two terms (edge weight > 1)."""
+    mention one entity through two terms (edge weight > 1): the count
+    the edge table would have summed as a weight."""
     cfg = SynthConfig(seed=13, n_terms=8, n_convs=10, hot_conv_factor=3)
     gaz = make_gazetteer(cfg)
     tr = to_spark(spark, make_transcripts(cfg, gaz))
@@ -216,7 +217,7 @@ def test_build_nodes_from_edges_identical(spark):
         (n, _node_kind(n), n, int(counts.get(n, 0))) for n in set(tp["subj"]) | set(tp["obj"])
     )
     edges = build_edges(triples)
-    got = sorted(map(tuple, build_nodes(edges).collect()))
+    got = sorted(map(tuple, build_nodes(triples).collect()))
     assert edges.filter((F.col("pred") == "mentions") & (F.col("weight") > 1)).count() > 0
     triples.unpersist()
     assert got == want
@@ -265,7 +266,7 @@ def test_alias_terms_in_one_turn_known_answer(spark):
     )
     nodes = {
         r["node_id"]: (r["kind"], r["mention_count"])
-        for r in build_nodes(build_edges(triples)).collect()
+        for r in build_nodes(triples).collect()
     }
     assert nodes == {
         "X": ("entity", 3), "C": ("entity", 1), "D": ("entity", 1),

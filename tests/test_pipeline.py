@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from entity_extractor_spark import lineage
 from entity_extractor_spark.io import sinks
-from entity_extractor_spark.pipeline import run_pipeline
+from entity_extractor_spark.pipeline import STAGES, run_pipeline
 from entity_extractor_spark.synth import SynthConfig, make_gazetteer, make_transcripts, to_spark
 
 CFG = SynthConfig(seed=7, n_terms=24, n_convs=40, hot_conv_factor=10)
@@ -46,6 +46,13 @@ def _assert_lineage_matches_files(spark, root, lin, keys):
                 assert (got[f]["min_key"], got[f]["max_key"]) == (r["lo"], r["hi"]), (stage, f)
 
 
+def _assert_pipeline_order(manifest, lin):
+    """The manifest and the lineage list the stages in pipeline order,
+    whatever order the overlapped stages finished in."""
+    assert [m["stage"] for m in manifest["metrics"]] == list(STAGES)
+    assert list(dict.fromkeys(r["stage"] for r in lin.collect())) == list(STAGES)
+
+
 @pytest.fixture(scope="module")
 def corpus(spark):
     gaz = make_gazetteer(CFG)
@@ -72,12 +79,14 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path_factory):
     with open(os.path.join(root, "_RUN_MANIFEST.json")) as f:
         manifest = json.load(f)
     assert any(m["stage"] == "mentions" and not m["skipped"] for m in manifest["metrics"])
+    _assert_pipeline_order(manifest, out["lineage"])
 
     # resume: second run skips every stage, results identical
     out2 = run_pipeline(spark, transcripts, gaz, root)
     with open(os.path.join(root, "_RUN_MANIFEST.json")) as f:
         manifest2 = json.load(f)
     assert all(m["skipped"] for m in manifest2["metrics"])
+    _assert_pipeline_order(manifest2, out2["lineage"])
     assert sorted(out2["lineage"].collect()) == sorted(out["lineage"].collect())
     assert out2["mentions"].count() == n_mentions
     assert out2["triples"].count() == n_triples
@@ -117,9 +126,12 @@ def test_pipeline_bookkeeping_runs_no_spark_jobs(spark, corpus, tmp_path, monkey
     mention stage (its one exchange and the write), 1 in scored (its
     write: a projection of the mention table), 5 in triples (one
     exchange per input, the entity_map broadcast, the conv_id
-    repartition and the write), 2 in nodes (one groupBy and the write)
-    and 1 in entity_map (its write); lineage bookkeeping runs none, and
-    a resumed stage runs none (its schema comes from the stage marker)."""
+    repartition and the write), 2 in edges and 2 in nodes (one groupBy
+    and the write each) and 1 in entity_map (its write); lineage
+    bookkeeping runs none, and a resumed stage runs none (its schema
+    comes from the stage marker). The wrappers set job groups in
+    whichever thread runs the stage, so the overlapped stages' jobs are
+    counted too."""
     transcripts, gaz = corpus
     sc = spark.sparkContext
     tag = uuid.uuid4().hex
@@ -157,11 +169,53 @@ def test_pipeline_bookkeeping_runs_no_spark_jobs(spark, corpus, tmp_path, monkey
     assert len(jobs["mentions"]) <= 2, jobs
     assert len(jobs["scored"]) <= 1, jobs
     assert len(jobs["triples"]) <= 5, jobs
+    assert len(jobs["edges"]) <= 2, jobs
     assert len(jobs["nodes"]) <= 2, jobs
     assert len(jobs["entity_map"]) <= 1, jobs
     assert all(len(j) > 0 for s, j in jobs.items() if s != "entity_map"), jobs
     assert not any(lineage_jobs.values()), lineage_jobs
     assert not any(resume_jobs.values()), resume_jobs
+
+
+def test_pipeline_jobs_carry_stage_names(spark, corpus, tmp_path):
+    """Every Spark job of a build runs under the caller's job group,
+    overlapped stages included, and carries its stage's name as its job
+    description; the caller's description is restored afterwards."""
+    transcripts, gaz = corpus
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "caller")
+    try:
+        run_pipeline(spark, transcripts, gaz, str(tmp_path / "labels"))
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    labels = Counter()
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(job).description()
+        labels[desc.get() if desc.isDefined() else None] += 1
+    assert set(labels) <= set(STAGES), labels
+    assert {"mentions", "scored", "triples", "edges", "nodes"} <= set(labels), labels
+
+
+def test_pipeline_failed_overlapped_stage_fails_the_build(spark, corpus, tmp_path, monkeypatch):
+    """``scored`` runs beside triples -> edges. When it raises, the
+    exception reaches the caller, ``scored`` is not marked done, and no
+    run manifest is written."""
+    from entity_extractor_spark.operators import scoring
+
+    def broken(df):
+        raise RuntimeError("scoring failed")
+
+    monkeypatch.setattr(scoring, "score_columns", broken)
+    transcripts, gaz = corpus
+    root = str(tmp_path / "failed")
+    with pytest.raises(RuntimeError, match="scoring failed"):
+        run_pipeline(spark, transcripts, gaz, root)
+    assert not os.path.exists(os.path.join(root, "scored", lineage.STAGE_META))
+    assert not os.path.exists(os.path.join(root, "_RUN_MANIFEST.json"))
 
 
 def _bag(df, cols) -> Counter:
@@ -210,6 +264,38 @@ def test_pipeline_stage_tables_match_operator_composition(spark, corpus, tmp_pat
     sims = out["scored"].filter(F.col("term_id").isin(hot)).select("term_id", "similarity")
     assert {(r[0], r[1]) for r in sims.distinct().collect()} == {(hot[0], 0.0), (hot[1], 0.0)}
     assert out["scored"].filter(F.col("similarity") > 0).count() > 0
+
+
+def test_stage_runner_records_from_many_threads(spark, tmp_path):
+    """``run_metrics`` stay whole and in the runner's order when more
+    threads than cores record at once, under a short switch interval."""
+    import random
+    import sys
+    import threading
+
+    order = tuple(f"s{i}" for i in range(6))
+    runner = lineage.StageRunner(spark, str(tmp_path), order=order)
+    per_thread = 100
+
+    def record(seed: int) -> None:
+        rng = random.Random(seed)
+        for _ in range(per_thread):
+            runner._record({"stage": rng.choice(order), "skipped": True})
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=record, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    stages = [m["stage"] for m in runner.run_metrics]
+    assert len(stages) == 16 * per_thread
+    assert stages == sorted(stages, key=order.index)
 
 
 def test_stage_marker_of_other_code_is_rebuilt(spark, tmp_path, monkeypatch):
