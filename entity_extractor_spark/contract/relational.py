@@ -409,10 +409,11 @@ def q_predicate_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return trip.select("subj", "pred", "obj").orderBy("pred", "subj", "obj")
 
 
-def q_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R6: skew-salted edge weights — conv -mentions-> term, weight =
-    distinct turns mentioning it."""
-    from entity_extractor_spark.operators.graph import salted_count
+def _mention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """conv -mentions-> term edges over doc-transcripts, built by the
+    pipeline's own :func:`build_edges`: weight = distinct turns
+    mentioning the term."""
+    from entity_extractor_spark.operators.graph import build_edges
     from entity_extractor_spark.operators.mentions import extract_mentions
     import __spark_entry__ as entry_mod
     import pandas as pd
@@ -424,8 +425,20 @@ def q_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = extract_mentions(t, pdf).select("conv_id", "turn_idx", "term_id").dropDuplicates(
         ["conv_id", "turn_idx", "term_id"]
     )
+    return build_edges(
+        m.select(
+            F.col("conv_id").alias("subj"),
+            F.lit("mentions").alias("pred"),
+            F.col("term_id").alias("obj"),
+        )
+    )
+
+
+def q_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """R6: edge weights — conv -mentions-> term, weight = distinct turns
+    mentioning it."""
     return (
-        salted_count(m.select(F.col("conv_id").alias("src"), F.col("term_id").alias("dst")), ["src", "dst"])
+        _mention_edges(spark, sf_dir)
         .select("src", "dst", F.col("weight").cast("long").alias("weight"))
         .orderBy("src", "dst")
     )
@@ -567,22 +580,7 @@ def q_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG analytics: per-conversation out-degree distribution over the
     mention edge table (degree -> how many convs have it)."""
-    from entity_extractor_spark.operators.graph import salted_count
-    from entity_extractor_spark.operators.mentions import extract_mentions
-    import __spark_entry__ as entry_mod
-    import pandas as pd
-
-    t = _doc_transcripts(spark, sf_dir)
-    pdf = pd.DataFrame(
-        {"term_id": [g[0] for g in entry_mod.GAZ], "title": [g[1] for g in entry_mod.GAZ]}
-    )
-    m = extract_mentions(t, pdf).select("conv_id", "turn_idx", "term_id").dropDuplicates(
-        ["conv_id", "turn_idx", "term_id"]
-    )
-    edges = salted_count(
-        m.select(F.col("conv_id").alias("src"), F.col("term_id").alias("dst")), ["src", "dst"]
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+    deg = _mention_edges(spark, sf_dir).groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     return (
         deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_convs")).orderBy("degree")
     )

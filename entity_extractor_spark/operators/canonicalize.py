@@ -16,6 +16,9 @@ Two engines, one rule set:
 * :func:`connected_components` is the distributed form, for edge sets
   that do not fit the driver (near-duplicate pair graphs) and the
   reference that the driver union-find is tested against.
+* :func:`fuzzy_alias_pairs` seeds typo-level alias edges: its candidates
+  come from ``operators/dedup.blocked_pairs`` on deletion variants (the
+  one candidate self-join and hot-block guard of the pair emitters).
 
 Distributed algorithm: iterative min-label propagation expressed as
 DataFrame joins — each round every node adopts ``min(own label,
@@ -40,6 +43,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from entity_extractor_spark.operators.dedup import blocked_pairs
 
 
 def connected_components(
@@ -116,75 +121,51 @@ def connected_components(
     return labels.withColumnRenamed("label", "component")
 
 
-def fuzzy_alias_pairs(
-    names: DataFrame,
-    id_col: str = "id",
-    name_col: str = "name",
-    max_block: int | None = None,
-) -> DataFrame:
-    """All name pairs within Levenshtein distance 1 — the fuzzy seed for
-    alias-edge generation (typos, singular/plural, off-by-one ids) that
-    :func:`alias_edges`'s exact colon-split rule cannot catch.
+def fuzzy_alias_pairs(names: DataFrame) -> DataFrame:
+    """All ``(id, name)`` pairs within Levenshtein distance 1 — the fuzzy
+    seed for alias-edge generation (typos, singular/plural, off-by-one
+    ids) that :func:`alias_edges`'s exact colon-split rule cannot catch.
 
     SymSpell-style deletion-neighborhood blocking instead of the naive
     all-pairs scan: every name emits its identity plus each
     single-character deletion as a variant key; two names with edit
     distance <= 1 ALWAYS share a variant (deletion/insertion: one IS a
     variant of the other; substitution: both contain the string with the
-    differing position removed), so an equi self-join on the variant key
-    finds every candidate with zero recall loss and no cross join —
-    len+1 keys per name, the blocking that scales to 10^9 names where
-    the O(n²) scan cannot. Candidates are deduped, then verified with
-    the built-in ``levenshtein`` (whole-stage codegen; DuckDB has the
+    differing position removed), so :func:`blocked_pairs` on the
+    variant key finds every candidate with zero recall loss and no cross
+    join — len+1 keys per name, the blocking that scales to 10^9 names
+    where the O(n²) scan cannot. Candidates are verified with the
+    built-in ``levenshtein`` (whole-stage codegen; DuckDB has the
     identical function, so the ground-truth oracle is the naive
     quadratic join and the hash match PROVES the blocking loses no
-    pair). ``max_block`` optionally drops variant keys shared by more
-    than that many names (hot-block guard for short-name corpora, same
-    discipline as the LSH ``max_bucket``) — off by default because it
-    trades completeness; leave it off when the oracle is ground truth.
+    pair).
 
-    Shuffle-diet plan (round 4, output bit-identical, ~1.9× at sf0.1):
-    the self-join keys on ``xxhash64(variant)`` and carries ONLY the id
-    — 16 bytes/row through the exchange instead of id + name + the
-    variant string — and the pair dedupe runs on the bare (id_a, id_b)
-    before names are re-attached by id join (AQE broadcasts the name
-    side when it is small; at 10^9 names it degrades to one more keyed
-    shuffle, never a cross join). Hashing the block key is lossless
-    here BY CONSTRUCTION: blocking only GENERATES candidates, every
-    true lev<=1 pair already shares a real variant, and a 64-bit
-    collision can only add a spurious candidate that the levenshtein
-    verify discards — so recall stays exactly 1 and the distinct
-    removes any double-count. The ``max_block`` guard is applied on the
-    true variant string BEFORE hashing so collisions cannot merge two
-    blocks across the cap.
+    Shuffle diet (output bit-identical, ~1.9× at sf0.1): the block is
+    ``xxhash64(variant)`` and the join carries ONLY the id — 16
+    bytes/row through the exchange instead of id + name + the variant
+    string — and names are re-attached to the bare candidate pairs by id
+    join (AQE broadcasts the name side when it is small; at 10^9 names
+    it degrades to one more keyed shuffle, never a cross join). Hashing
+    the block key is lossless here BY CONSTRUCTION: blocking only
+    GENERATES candidates, every true lev<=1 pair already shares a real
+    variant, and a 64-bit collision can only add a spurious candidate
+    that the levenshtein verify discards.
     """
-    s = F.col(name_col)
+    s = F.col("name")
     dels = F.transform(
         F.sequence(F.lit(1), F.length(s)),
         lambda i: F.concat(s.substr(F.lit(1), i - 1), s.substr(i + 1, F.length(s))),
     )
     v = names.select(
-        F.col(id_col).alias("_id"),
+        F.col("id").alias("i"),
         F.explode(F.array_distinct(F.array_union(F.array(s), dels))).alias("v"),
-    )
-    if max_block is not None:
-        big = v.groupBy("v").agg(F.count(F.lit(1)).alias("c")).filter(
-            F.col("c") > max_block
-        )
-        v = v.join(F.broadcast(big.select("v")), "v", "left_anti")
-    vh = v.select("_id", F.xxhash64("v").alias("_h"))
-    a = vh.select(F.col("_id").alias("id_a"), "_h")
-    b = vh.select(F.col("_id").alias("id_b"), "_h")
-    cand = (
-        a.join(b, "_h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    na = names.select(F.col(id_col).alias("id_a"), F.col(name_col).alias("name_a"))
-    nb = names.select(F.col(id_col).alias("id_b"), F.col(name_col).alias("name_b"))
+    ).select("i", F.xxhash64("v").alias("block"))
+    na = names.select(F.col("id").alias("id_a"), F.col("name").alias("name_a"))
+    nb = names.select(F.col("id").alias("id_b"), F.col("name").alias("name_b"))
     return (
-        cand.join(na, "id_a")
+        blocked_pairs(v)
+        .select(F.col("i").alias("id_a"), F.col("j").alias("id_b"))
+        .join(na, "id_a")
         .join(nb, "id_b")
         .filter(F.levenshtein("name_a", "name_b") <= 1)
         .select(

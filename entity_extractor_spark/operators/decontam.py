@@ -12,8 +12,7 @@ not a corpus) — its distinct shingle hashes broadcast, so the 100 TB
 training corpus is ONE map-side semi-join pass with no shuffle of the
 train side; the only aggregation is the per-doc hit count, keyed by the
 doc id the corpus is already bucketed by. Shingle hashing reuses the
-md5-based machinery of the dedup suite (operators/dedup.py) so the same
-guards (stop-shingle max_df, if ever needed) apply.
+md5-based machinery of the dedup suite (operators/dedup.py).
 """
 
 from __future__ import annotations

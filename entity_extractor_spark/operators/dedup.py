@@ -13,11 +13,14 @@ shuffle-disciplined DataFrame code:
 * minhash / simhash: per-row array folds over the token-hash array — a
   pure map stage with zero shuffle (signatures are per-document
   functions of the token set; nothing about them needs an exchange);
-* LSH banding: candidate pairs come from an equi self-join on
-  ``(band_idx, band_hash)`` — never an all-pairs cross join. Hot buckets
-  (a boilerplate-heavy corpus) are bounded by ``max_bucket`` via a count
-  filter before the join (the skew guard the 10^12-row case needs);
-* verification: exact Jaccard only on the LSH candidates.
+* near-dup pairs are a filter step and a verify step. The filter is
+  :func:`blocked_pairs`, one equi self-join on a blocking key (an LSH
+  bucket, a shingle, a prefix shingle, a deletion variant) — never an
+  all-pairs cross join — with the one hot-block guard the 10^12-row
+  case needs. The verify is exact on the candidates: :func:`set_overlap`
+  for the Jaccard emitters, Levenshtein for the fuzzy alias pairs. The
+  SimHash and embedding pair joins carry their payload (fingerprint,
+  vector) through the band join instead, so they keep their own join.
 
 Every numeric here is cross-engine deterministic (see functions/hashing),
 so each operator has an exact DuckDB oracle in the driver contract.
@@ -25,7 +28,7 @@ so each operator has an exact DuckDB oracle in the driver contract.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from entity_extractor_spark.functions import hashing as H
@@ -40,21 +43,11 @@ def normalized_key(text: Column) -> Column:
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, canonical_id, is_dup): canonical = min id per normalized-text
     group. One shuffle on the md5 key; survivors = ``is_dup = false``."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(normalized_key(F.col(text_col)))
     return docs.select(
         F.col(id_col),
         F.min(id_col).over(w).alias("canonical_id"),
     ).withColumn("is_dup", F.col(id_col) != F.col("canonical_id"))
-
-
-def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, token) — distinct lowered tokens, exploded."""
-    return docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(T.tokenize(F.col(text_col)))).alias("token"),
-    )
 
 
 def _token_hashes(text_col: str) -> Column:
@@ -93,131 +86,133 @@ def minhash_signatures(
     return docs.select(F.col(id_col), *[sigs.getItem(i).alias(f"s{i}") for i in range(k)])
 
 
-def _band_table(sigs: DataFrame, id_col: str) -> DataFrame:
-    """(id, band, h) — band hash = md5 of the concatenated band rows."""
+def _band_table(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, h) — band hash = md5 of the concatenated band rows."""
     bands = []
     for b in range(H.LSH_BANDS):
         cols = [F.col(f"s{b * H.LSH_ROWS + r}") for r in range(H.LSH_ROWS)]
         bands.append(
             F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws(":", *cols)).alias("h"))
         )
-    return sigs.select(id_col, F.explode(F.array(*bands)).alias("bh")).select(
-        id_col, F.col("bh.band").alias("band"), F.col("bh.h").alias("h")
+    return sigs.select("doc_id", F.explode(F.array(*bands)).alias("bh")).select(
+        "doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h")
     )
+
+
+def blocked_pairs(blocks: DataFrame, max_block: int | None = None) -> DataFrame:
+    """(i, j, shared): every id pair i < j that shares at least one block,
+    once, with ``shared`` = the number of blocks the pair shares — the
+    candidate step of the blocked emitters here and of
+    ``canonicalize.fuzzy_alias_pairs``.
+
+    ``blocks`` holds ``(i, block)`` rows. The candidates are an equi
+    self-join on ``block`` — never an all-pairs cross join — counted per
+    pair, so a pair that meets in several blocks comes out once. When the
+    ``(i, block)`` rows are distinct, ``shared`` is the size of the
+    pair's block-set intersection.
+
+    ``max_block`` is the hot-block guard: a block holding more than
+    ``max_block`` rows (boilerplate text, a templated name)
+    is dropped *before* the self-join, so one hot block cannot put
+    O(block^2) candidate rows on one reducer. The count is a window over
+    ``block``. Dropping a block trades recall, so the guard is off by
+    default."""
+    if max_block is not None:
+        n = F.count(F.lit(1)).over(Window.partitionBy("block"))
+        blocks = blocks.withColumn("_n", n).filter(F.col("_n") <= max_block)
+    a = blocks.select("i", "block")
+    b = blocks.select(F.col("i").alias("j"), "block")
+    return (
+        a.join(b, "block")
+        .filter(F.col("i") < F.col("j"))
+        .groupBy("i", "j")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
+def set_overlap(elems: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
+    """(i, j, inter, union): the exact set overlap of each candidate pair
+    — the verify step of the Jaccard emitters. ``elems`` holds distinct
+    ``(i, e)`` rows; ``pairs`` holds ``(i, j)`` candidates, whose
+    elements are joined back and counted. Without ``pairs`` the
+    candidates are every pair sharing an element, and
+    :func:`blocked_pairs` over the elements themselves already counts
+    the intersection, so nothing is joined back. Pairs that share no
+    element are not returned."""
+    if pairs is None:
+        inter = blocked_pairs(elems.select("i", F.col("e").alias("block")))
+    else:
+        inter = (
+            pairs.select("i", "j")
+            .join(elems, "i")
+            .join(elems.select(F.col("i").alias("j"), "e"), ["j", "e"])
+            .groupBy("i", "j")
+            .agg(F.count(F.lit(1)).alias("shared"))
+        )
+    sizes = elems.groupBy("i").agg(F.count(F.lit(1)).alias("si"))
+    return (
+        inter.join(sizes, "i")
+        .join(sizes.select(F.col("i").alias("j"), F.col("si").alias("sj")), "j")
+        .select(
+            "i",
+            "j",
+            F.col("shared").alias("inter"),
+            (F.col("si") + F.col("sj") - F.col("shared")).alias("union"),
+        )
+    )
+
+
+def _jaccard() -> Column:
+    return F.round(F.col("inter") / F.col("union"), 6).alias("jaccard")
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    max_bucket: int = 10_000,
+    docs: DataFrame, threshold: float = 0.5, max_bucket: int = 10_000
 ) -> DataFrame:
     """Near-dup pairs (i < j) from LSH banding, verified with exact
-    distinct-token Jaccard >= ``threshold``.
-
-    ``max_bucket`` drops degenerate buckets (boilerplate) *before* the
-    self-join — at web scale a single hot bucket would otherwise produce
-    O(bucket^2) candidate rows on one reducer.
-    """
-    sigs = minhash_signatures(docs, id_col, text_col)
-    bt = _band_table(sigs, id_col)
-    from pyspark.sql import Window
-
-    bucket_n = F.count(F.lit(1)).over(Window.partitionBy("band", "h"))
-    bt = bt.withColumn("_n", bucket_n).filter(F.col("_n") <= max_bucket).drop("_n")
-    a = bt.select(F.col(id_col).alias("i"), "band", "h")
-    b = bt.select(F.col(id_col).alias("j"), "band", "h")
-    cand = (
-        a.join(b, ["band", "h"])
-        .filter(F.col("i") < F.col("j"))
-        .select("i", "j")
-        .distinct()
+    distinct-token Jaccard >= ``threshold``. The blocks are the
+    ``(band, h)`` buckets, guarded by ``max_bucket`` (see
+    :func:`blocked_pairs`)."""
+    bt = _band_table(minhash_signatures(docs))
+    cand = blocked_pairs(
+        bt.select(F.col("doc_id").alias("i"), F.struct("band", "h").alias("block")),
+        max_bucket,
     )
-    jac = jaccard_on_pairs(docs, cand, id_col, text_col)
-    return jac.filter(F.col("jaccard") >= threshold)
-
-
-def jaccard_on_pairs(
-    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Exact distinct-token Jaccard for given (i, j) pairs."""
-    tok = _doc_tokens(docs, id_col, text_col)
-    sizes = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    ti = tok.select(F.col(id_col).alias("i"), "token")
-    tj = tok.select(F.col(id_col).alias("j"), "token")
-    inter = (
-        pairs.join(ti, "i")
-        .join(tj, ["j", "token"])
-        .groupBy("i", "j")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    toks = docs.select(
+        F.col("doc_id").alias("i"),
+        F.explode(F.array_distinct(T.tokenize(F.col("text")))).alias("e"),
     )
     return (
-        inter.join(sizes.select(F.col(id_col).alias("i"), F.col("sz").alias("si")), "i")
-        .join(sizes.select(F.col(id_col).alias("j"), F.col("sz").alias("sj")), "j")
-        .select(
-            "i",
-            "j",
-            F.round(
-                F.col("inter") / (F.col("si") + F.col("sj") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
+        set_overlap(toks, cand)
+        .select("i", "j", _jaccard())
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-) -> DataFrame:
+def _shingles(docs: DataFrame, n: int) -> DataFrame:
+    """(i, e): each doc's distinct word n-gram shingles, exploded."""
+    return docs.select(
+        F.col("doc_id").alias("i"),
+        F.explode(F.array_distinct(T.word_shingles(T.tokenize(F.col("text")), n))).alias("e"),
+    )
+
+
+def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5) -> DataFrame:
     """Exact word-n-gram-shingle Jaccard pairs (i < j) >= threshold.
 
-    The inverted-index join on shingles replaces the O(N^2) cross join:
-    only pairs sharing >= 1 shingle are ever materialized. ``max_df``
-    optionally drops shingles occurring in more than that many docs
-    (stop-shingle guard for web-scale boilerplate).
-    """
-    sh = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(T.word_shingles(T.tokenize(F.col(text_col)), n))
-        ).alias("sh"),
-    )
-    if max_df is not None:
-        from pyspark.sql import Window
-
-        df_n = F.count(F.lit(1)).over(Window.partitionBy("sh"))
-        sh = sh.withColumn("_df", df_n).filter(F.col("_df") <= max_df).drop("_df")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col(id_col).alias("i"), "sh")
-    b = sh.select(F.col(id_col).alias("j"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("i") < F.col("j"))
-        .groupBy("i", "j")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    The blocks are the shingles themselves, so the inverted-index join
+    replaces the O(N^2) cross join (only pairs sharing >= 1 shingle are
+    ever materialized) and its per-pair count IS the intersection: the
+    shingles are never joined back."""
     return (
-        inter.join(sizes.select(F.col(id_col).alias("i"), F.col("sz").alias("si")), "i")
-        .join(sizes.select(F.col(id_col).alias("j"), F.col("sz").alias("sj")), "j")
-        .select(
-            "i",
-            "j",
-            F.round(
-                F.col("inter") / (F.col("si") + F.col("sj") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
+        set_overlap(_shingles(docs, n))
+        .select("i", "j", _jaccard())
         .filter(F.col("jaccard") >= threshold)
     )
 
 
 def prefix_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     t_num: int = 4,
     t_den: int = 5,
@@ -249,7 +244,8 @@ def prefix_jaccard_pairs(
     `fuzzy_name_pairs`).
 
     ``max_prefix_df`` is the hot-shingle guard for boilerplate-heavy
-    corpora (the same role ``max_bucket`` plays in :func:`lsh_pairs`):
+    corpora (the role ``max_block`` plays in :func:`blocked_pairs`, but
+    counted over the whole corpus, not over the prefix rows):
     a shingle shared by more than ``max_prefix_df`` docs — licence
     headers, templated preambles — would otherwise drag a near-quadratic
     posting list into the candidate join even when it ranks into some
@@ -260,19 +256,12 @@ def prefix_jaccard_pairs(
     lossless while the cap binds. :func:`prefix_jaccard_pairs_sql`
     mirrors the cap so the contract hash still proves the exact
     semantics of the documented cut. Default ``None`` = lossless."""
-    sh = docs.select(
-        F.col(id_col).alias("i"),
-        F.explode(
-            F.array_distinct(T.word_shingles(T.tokenize(F.col(text_col)), n))
-        ).alias("sh"),
-    )
-    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
+    sh = _shingles(docs, n)
+    dfreq = sh.groupBy("e").agg(F.count(F.lit(1)).alias("_df"))
     sizes = sh.groupBy("i").agg(F.count(F.lit(1)).alias("sz"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("i").orderBy("_df", "sh")
+    w = Window.partitionBy("i").orderBy("_df", "e")
     ranked = (
-        sh.join(dfreq, "sh")
+        sh.join(dfreq, "e")
         .withColumn("r", F.row_number().over(w))
         .join(sizes, "i")
     )
@@ -283,27 +272,11 @@ def prefix_jaccard_pairs(
     prefix = ranked.filter(F.col("r") <= F.col("sz") - need + 1)
     if max_prefix_df is not None:
         prefix = prefix.filter(F.col("_df") <= max_prefix_df)
-    prefix = prefix.select("i", "sh")
-    cand = (
-        prefix.join(prefix.select(F.col("i").alias("j"), "sh"), "sh")
-        .filter(F.col("i") < F.col("j"))
-        .select("i", "j")
-        .dropDuplicates(["i", "j"])
-    )
-    arrs = sh.groupBy("i").agg(F.sort_array(F.collect_list("sh")).alias("arr"))
-    out = (
-        cand.join(arrs.select(F.col("i"), F.col("arr").alias("ai")), "i")
-        .join(arrs.select(F.col("i").alias("j"), F.col("arr").alias("aj")), "j")
-        .withColumn("inter", F.size(F.array_intersect("ai", "aj")))
-        .withColumn("uni", F.size("ai") + F.size("aj") - F.col("inter"))
-        .filter(F.col("inter") * t_den >= F.lit(t_num) * F.col("uni"))
-    )
-    return out.select(
-        "i",
-        "j",
-        F.round(F.col("inter").cast("double") / F.col("uni").cast("double"), 6).alias(
-            "jaccard"
-        ),
+    cand = blocked_pairs(prefix.select("i", F.col("e").alias("block")))
+    return (
+        set_overlap(sh, cand)
+        .filter(F.col("inter") * t_den >= F.lit(t_num) * F.col("union"))
+        .select("i", "j", _jaccard())
     )
 
 
@@ -409,11 +382,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
 
 
 def dup_clusters(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    max_bucket: int = 10_000,
+    docs: DataFrame, threshold: float = 0.8, max_bucket: int = 10_000
 ) -> DataFrame:
     """Near-dup cluster resolution — the corpus-dedup endgame: LSH pairs
     -> connected components -> one canonical representative per cluster.
@@ -434,32 +403,34 @@ def dup_clusters(
     """
     from entity_extractor_spark.operators.canonicalize import connected_components
 
-    pairs = minhash_lsh_pairs(docs, id_col, text_col, threshold, max_bucket)
+    pairs = minhash_lsh_pairs(docs, threshold, max_bucket)
     comp = connected_components(pairs, src="i", dst="j")
     return (
-        docs.select(F.col(id_col))
-        .join(comp.withColumnRenamed("node", id_col), id_col, "left")
+        docs.select("doc_id")
+        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
+            "doc_id",
+            F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
         )
-        .withColumn("keep", F.col(id_col) == F.col("cluster_id"))
+        .withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
     )
 
 
-def simhash_pairs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", max_hamming: int = 3
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate near-dup pairs with Hamming distance <= max_hamming.
 
     Pigeonhole banding: split the 32-bit fingerprint into
     ``max_hamming + 1`` bands; any pair within distance d agrees on >= 1
     band, so candidates come from equi-joins on band values (no cross
     join), then the exact popcount filter.
-    """
+
+    The band join carries the fingerprint itself, so the verify needs no
+    second join. Routing it through :func:`blocked_pairs` would join the
+    fingerprints back onto the candidate pairs, which measured +74% at
+    sf0.1."""
     n_bands = max_hamming + 1
     width = H.SIMHASH_BITS // n_bands
-    s = simhash(docs, id_col, text_col)
+    s = simhash(docs)
     bands = [
         F.struct(
             F.lit(b).alias("band"),
@@ -469,11 +440,11 @@ def simhash_pairs(
         )
         for b in range(n_bands)
     ]
-    bt = s.select(id_col, "simhash", F.explode(F.array(*bands)).alias("bh")).select(
-        id_col, "simhash", F.col("bh.band").alias("band"), F.col("bh.v").alias("v")
+    bt = s.select("doc_id", "simhash", F.explode(F.array(*bands)).alias("bh")).select(
+        "doc_id", "simhash", F.col("bh.band").alias("band"), F.col("bh.v").alias("v")
     )
-    a = bt.select(F.col(id_col).alias("i"), F.col("simhash").alias("fi"), "band", "v")
-    b = bt.select(F.col(id_col).alias("j"), F.col("simhash").alias("fj"), "band", "v")
+    a = bt.select(F.col("doc_id").alias("i"), F.col("simhash").alias("fi"), "band", "v")
+    b = bt.select(F.col("doc_id").alias("j"), F.col("simhash").alias("fj"), "band", "v")
     return (
         a.join(b, ["band", "v"])
         .filter(F.col("i") < F.col("j"))

@@ -5,13 +5,12 @@ FIXTURES.md §5 shapes. The pipeline's edge and node tables are plain
 in ~30% of turns) reaches its reducer as at most one partial row per map
 task, and one exchange suffices.
 
-The *explicit hot-key salting* helpers (SURVEY R6 / north rule) compute
-an aggregate in two stages, partials over ``(key, salt)`` then a final
-merge over ``key``. The salted form protects the FINAL aggregate when a
-single key's partial rows exceed one reducer's share (the 10^12-turn
-case), and it is the pattern to copy for non-associative aggs
-(collect_list etc.) where map-side combine does not save you. The
-``graph_edges`` and ``graph_degree`` contract keys use it.
+Explicit hot-key salting (SURVEY R6 / north rule) is kept for the
+aggregates map-side combine does not save: :func:`salted_collect_list`
+computes a ``collect_list`` in two stages, partials over ``(key, salt)``
+then a final merge over ``key``, and is the pattern to copy for other
+non-associative aggregates. The ``graph_edges`` and ``graph_degree``
+contract keys run :func:`build_edges`, the pipeline's own edge code.
 """
 
 from __future__ import annotations
@@ -36,20 +35,8 @@ def _salt():
     return F.pmod(F.spark_partition_id(), F.lit(DEFAULT_SALT_BUCKETS))
 
 
-def salted_count(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Two-stage skew-safe count: groupBy(keys + salt) -> groupBy(keys).
-
-    Plan: two partial/final HashAggregate pairs, each behind its own
-    exchange. The salt bounds any one reducer's share of a hot key in
-    the first pair; AQE may coalesce the small final stage."""
-    salted = df.withColumn("_salt", _salt())
-    partial = salted.groupBy(*keys, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias("weight"))
-
-
 def salted_collect_list(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
-    """Two-stage skew-safe collect for a NON-associative aggregate — the
-    template the salted_count docstring promises.
+    """Two-stage skew-safe collect for a NON-associative aggregate.
 
     Map-side combine does not protect ``collect_list`` (partial lists
     still concentrate on the key's one reducer), so the partial stage

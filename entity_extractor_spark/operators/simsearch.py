@@ -10,6 +10,11 @@ are the query's bucket only, turning the O(N·Q) scan into an equi join on
 bucket id. At 100 TB the bucket table is the thing you write to Iceberg,
 bucketed by the LSH key, so probes are partition-pruned scans.
 
+Embedding near-dup pairs (:func:`embedding_near_dups`) are the same
+bucketing turned on the corpus itself. Their hot-bucket guard is the
+window count of ``operators/dedup.blocked_pairs``, written out here
+because the bucket join also carries the vectors.
+
 The cosine kernel is expressed two ways:
 * `cosine_expr` — pure Catalyst fold (zip_with + aggregate), used in the
   driver-contract queries because DuckDB mirrors the exact fold order
@@ -471,8 +476,6 @@ def embedding_near_dups(
     corpus: DataFrame,
     dim: int,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = N_PLANES,
     max_bucket: int = 100_000,
     n_tables: int = 1,
@@ -506,19 +509,29 @@ def embedding_near_dups(
     partition at scale exactly like the single-table path; the cost is
     L× the signature compute and candidate volume, measured in
     BENCH.md §near-dup recall.
+
+    The bucket join carries each row's vector and norm, so the cosine
+    verify needs no second join. This is why the candidates do not come
+    from ``operators/dedup.blocked_pairs``, which returns bare id pairs:
+    joining the vectors back onto them measured slower
+    (``embedding_dups_lsh`` at sf0.1, local[4] on a 4-vCPU VM: median
+    2.59 → 3.15 s over 5 alternating pairs, 2 of 5 won). The hot-bucket
+    guard is the same window count before the self-join.
     """
     from pyspark.sql import Window
 
     b = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        norm_expr(F.col(vec_col)).alias("_nrm"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        norm_expr(F.col("embedding")).alias("_nrm"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(t).alias("t"),
-                        lsh_bucket(F.col(vec_col), dim, n_planes, offset=t * n_planes).alias("b"),
+                        lsh_bucket(
+                            F.col("embedding"), dim, n_planes, offset=t * n_planes
+                        ).alias("b"),
                     )
                     for t in range(n_tables)
                 ]

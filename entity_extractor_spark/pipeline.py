@@ -87,8 +87,11 @@ def run_pipeline(
     with ThreadPoolExecutor(max_workers=2, thread_name_prefix="kg-stage") as pool:
 
         def beside(stage: str, build, **kwargs) -> None:
-            # the wrapper copies this thread's job group and description now
-            target = inheritable_thread_target(spark)(runner.run)
+            # the wrapper copies this thread's job group and description now;
+            # outside pinned-thread mode PySpark returns the session itself
+            # (JVM thread-locals are not per Python thread there), so run plain
+            wrap = inheritable_thread_target(spark)
+            target = wrap(runner.run) if callable(wrap) else runner.run
             side[stage] = pool.submit(target, stage, build, params=params, **kwargs)
 
         if "aliases" in gazetteer.columns:

@@ -10,7 +10,7 @@ the deterministic coverage; these runs explore the input space)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -160,6 +160,59 @@ def test_prefix_jaccard_cap_matches_mirrored_oracle(spark, docs, cap):
         ).fetchall()
     }
     assert got == ora
+
+
+@settings(**_SETTINGS)
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(min_value=0, max_value=6), st.integers(min_value=0, max_value=4)),
+        max_size=30,
+    ),
+    max_block=st.one_of(st.none(), st.integers(min_value=1, max_value=6)),
+)
+@example(rows=[], max_block=None)
+@example(rows=[(1, 0), (1, 0), (2, 1), (3, 1)], max_block=None)  # block 0: one id only
+@example(rows=[(1, 0), (1, 0), (2, 0), (3, 1), (4, 1)], max_block=2)  # block 0 over the cap
+def test_blocked_pairs_equals_all_pairs_reference(spark, rows, max_block):
+    """blocked_pairs against a pandas all-pairs reference: every id pair
+    i < j, with ``shared`` = the join rows its kept blocks give it (the
+    product of the pair's row counts per block); a block of more than
+    ``max_block`` rows is dropped first. On distinct ``(i, block)`` rows
+    ``shared`` is the block-set intersection size."""
+    import itertools
+
+    import pandas as pd
+
+    from entity_extractor_spark.operators.dedup import blocked_pairs
+
+    def kept(pdf):
+        if max_block is None:
+            return pdf
+        return pdf[pdf.groupby("block")["i"].transform("size") <= max_block]
+
+    def got(pdf):
+        rows = list(pdf.itertuples(index=False, name=None))
+        df = spark.createDataFrame(rows, "i long, block long")
+        return {(r["i"], r["j"]): r["shared"] for r in blocked_pairs(df, max_block).collect()}
+
+    pdf = pd.DataFrame(rows, columns=["i", "block"], dtype="int64")
+    k = kept(pdf)
+    mult = k.value_counts().to_dict()
+    ref = {}
+    for i, j in itertools.combinations(sorted(set(pdf["i"])), 2):
+        n = sum(mult.get((i, b), 0) * mult.get((j, b), 0) for b in set(k["block"]))
+        if n:
+            ref[(i, j)] = n
+    assert got(pdf) == ref
+
+    distinct = pdf.drop_duplicates()
+    sets = kept(distinct).groupby("i")["block"].apply(set).to_dict()
+    inter = {
+        (i, j): len(sets[i] & sets[j])
+        for i, j in itertools.combinations(sorted(sets), 2)
+        if sets[i] & sets[j]
+    }
+    assert got(distinct) == inter
 
 
 def test_weighted_sample_tie_eviction_matches_global_rank(spark, monkeypatch):

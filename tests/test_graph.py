@@ -16,7 +16,7 @@ from entity_extractor_spark.operators.canonicalize import (
     canonical_entities,
     connected_components,
 )
-from entity_extractor_spark.operators.graph import build_edges, build_nodes, salted_count
+from entity_extractor_spark.operators.graph import build_edges, build_nodes
 from entity_extractor_spark.operators.mentions import extract_mentions
 from entity_extractor_spark.operators.predicates import (
     all_triples,
@@ -153,15 +153,6 @@ def test_co_mention_pairs_exact(spark):
         (r["subj"], r["obj"]) for r in turn_entity_triples(m, emap).filter(co_mentions).collect()
     }
     assert got2 == {("A", "X")}
-
-
-def test_salted_count_equals_plain_groupby(spark):
-    # skewed: one hot key with 5000 rows, 50 cold keys
-    rows = [("hot",)] * 5000 + [(f"k{i}",) for i in range(50)]
-    df = spark.createDataFrame(rows, "k string").repartition(8)
-    got = {r["k"]: r["weight"] for r in salted_count(df, ["k"]).collect()}
-    exp = {r["k"]: r["cnt"] for r in df.groupBy("k").agg(F.count("*").alias("cnt")).collect()}
-    assert got == exp
 
 
 def test_build_nodes_and_edges(spark):
@@ -370,8 +361,7 @@ def test_salted_collect_list_matches_plain(spark):
 
 def test_fuzzy_alias_pairs_edit_classes(spark):
     """Deletion-neighborhood blocking finds all three ed-1 edit classes
-    (deletion, insertion, substitution), rejects ed-2, and the hot-block
-    guard drops pairs only when enabled."""
+    (deletion, insertion, substitution) and rejects ed-2."""
     from entity_extractor_spark.operators.canonicalize import fuzzy_alias_pairs
 
     names = spark.createDataFrame(
@@ -395,6 +385,3 @@ def test_fuzzy_alias_pairs_edit_classes(spark):
     assert out[(1, 6)] == 0  # exact dup
     assert (2, 3) not in out  # ed("spak","sparks")=2
     assert not any(5 in k for k in out)
-    # guard: with max_block=1 every shared variant block is dropped
-    from entity_extractor_spark.operators.canonicalize import fuzzy_alias_pairs as fap
-    assert fap(names, max_block=1).count() == 0

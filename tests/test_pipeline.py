@@ -200,6 +200,21 @@ def test_pipeline_jobs_carry_stage_names(spark, corpus, tmp_path):
     assert {"mentions", "scored", "triples", "edges", "nodes"} <= set(labels), labels
 
 
+def test_pipeline_runs_without_pinned_threads(spark, corpus, tmp_path, monkeypatch):
+    """Outside PySpark's pinned-thread mode ``inheritable_thread_target``
+    returns its argument, here the session. The overlapped stages then
+    run as plain pool targets, and the build still writes every stage and
+    its manifest."""
+    from entity_extractor_spark import pipeline
+
+    monkeypatch.setattr(pipeline, "inheritable_thread_target", lambda f=None: f)
+    transcripts, gaz = corpus
+    root = str(tmp_path / "unpinned")
+    out = run_pipeline(spark, transcripts, gaz, root)
+    assert all(out[s].count() > 0 for s in STAGES), out
+    assert os.path.exists(os.path.join(root, "_RUN_MANIFEST.json"))
+
+
 def test_pipeline_failed_overlapped_stage_fails_the_build(spark, corpus, tmp_path, monkeypatch):
     """``scored`` runs beside triples -> edges. When it raises, the
     exception reaches the caller, ``scored`` is not marked done, and no
