@@ -34,7 +34,10 @@ SYNTH_CONVS = int(os.environ.get("SPARK_GRAFT_SYNTH_CONVS", "48000"))
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 # comma-separated subset of HEADLINE for targeted runs (e.g. the sf1
 # stress extension of a few new keys); unset = full artifact run. When
-# set, the flagship/kg synthetic-corpus sections are skipped too.
+# set, the flagship/kg synthetic-corpus sections are skipped too. Every
+# selected key runs in ONE JVM, so a key's time depends on the keys run
+# before it. For a per-key A/B, run one key per process
+# (SPARK_GRAFT_BENCH_ONLY=<key>), alternating the two sides.
 ONLY = [s for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if s]
 
 # relational + mention-scan core

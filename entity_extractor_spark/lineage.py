@@ -10,7 +10,10 @@ Design:
   key's min/max from the row-group statistics the writer already kept.
   No Spark job runs and no data page is read, so bookkeeping cost is
   per file, not per row. These are the fields an Iceberg manifest keeps
-  per data file (``record_count``, ``lower_bounds``, ``upper_bounds``);
+  per data file (``record_count``, ``lower_bounds``, ``upper_bounds``).
+  The footers are the only copy: a runner keeps each stage's rows in
+  memory, and a skipped stage re-reads the footers of the table it
+  reloads;
 * stage idempotence is marker-file based: a stage directory whose
   ``_STAGE_META.json`` matches the requested (stage, params, package
   source digest) fingerprint is trusted and skipped, so a re-run after
@@ -32,7 +35,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import threading
 import time
 from dataclasses import dataclass, field
@@ -49,7 +51,6 @@ from pyspark.sql.types import StructType
 from entity_extractor_spark.session import package_digest
 
 STAGE_META = "_STAGE_META.json"
-LINEAGE_FILE = "lineage.parquet"
 
 
 def _key_bounds(md: pq.FileMetaData, col: int) -> tuple[object, object]:
@@ -122,13 +123,12 @@ class StageRunner:
     # read once per runner (a lambda, so the module global is looked up
     # at construction): every stage it runs is fingerprinted with it
     code: str = field(init=False, default_factory=lambda: package_digest())
+    # each stage's lineage rows, from the footers of its written or reloaded table
+    _lineage: dict[str, pa.Table] = field(init=False, repr=False, default_factory=dict)
     _lock: threading.Lock = field(init=False, repr=False, default_factory=threading.Lock)
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
-
-    def _lineage_dir(self, stage: str) -> str:
-        return os.path.join(self.root, "_lineage", stage)
 
     def _done_meta(self, stage: str, params: dict | None) -> dict | None:
         """The stage's marker when a completed run with this fingerprint
@@ -185,19 +185,17 @@ class StageRunner:
         out = self._dir(stage)
         meta = self._done_meta(stage, params)
         if meta is not None:
+            loaded = self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(out)
+            self._lineage[stage] = lineage_rows(loaded, stage, key_col)
             self._record({"stage": stage, "skipped": True})
-            return self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(out)
+            return loaded
         t0 = time.perf_counter()
         df = build()
         if partition_by:
             df = df.repartition(F.col(partition_by))
         df.write.mode("overwrite").parquet(out)
         loaded = self.spark.read.schema(df.schema).parquet(out)
-        lin = lineage_rows(loaded, stage, key_col)
-        lin_dir = self._lineage_dir(stage)
-        shutil.rmtree(lin_dir, ignore_errors=True)
-        os.makedirs(lin_dir)
-        pq.write_table(lin, os.path.join(lin_dir, LINEAGE_FILE))
+        lin = self._lineage[stage] = lineage_rows(loaded, stage, key_col)
         n = pc.sum(lin["n_rows"]).as_py() or 0
         self._record(
             {
@@ -228,8 +226,5 @@ class StageRunner:
 
     def lineage(self) -> DataFrame:
         """The lineage rows of the stages this runner ran or skipped."""
-        tables = [
-            pq.read_table(os.path.join(self._lineage_dir(m["stage"]), LINEAGE_FILE))
-            for m in self.run_metrics
-        ]
+        tables = [self._lineage[m["stage"]] for m in self.run_metrics]
         return self.spark.createDataFrame(pa.concat_tables(tables, promote_options="default"))

@@ -70,36 +70,44 @@ def build_nodes(triples: DataFrame) -> DataFrame:
     """nodes(node_id, kind, canonical_name, mention_count) from the
     (subj, pred, obj) triple table.
 
-    kind is derived from the id shape: ``tool:*`` -> tool, ``conv-*:n``
-    -> turn, ``conv-*`` -> conversation, else entity.
+    kind comes from where the node sits in its triples, not from the
+    shape of its id: a turn is the subj of ``mentions``, ``uses_tool`` or
+    ``replies_to`` or the obj of ``replies_to``, a tool is the obj of
+    ``uses_tool``, and every other node is an entity. Each end carries a
+    kind code (entity 0, tool 1, turn 2) and a node takes the largest
+    code any of its triples gives it, so kind is an aggregate and each
+    node keeps one row.
 
     One ``groupBy(node_id)`` over both ends of each triple gives the node
     universe and, since a ``mentions`` triple adds 1 to its obj, each
     node's mention count: the same table as a sum over the edge table's
     weights (a ``mentions`` edge's weight is its triple count), without
     waiting for the edges. One exchange, no distinct + count + join; the
-    sum map-side-combines, so a hot entity's partial rows stay one per
-    input partition.
+    sum and max map-side-combine, so a hot entity's partial rows stay one
+    per input partition.
     """
+    pred = F.col("pred")
     zero = F.lit(0).cast("long")
-    mentioned = (F.col("pred") == "mentions").cast("long")
+    mentioned = (pred == "mentions").cast("long")
+    subj_kind = F.when(pred.isin("mentions", "uses_tool", "replies_to"), 2).otherwise(0)
+    obj_kind = F.when(pred == "replies_to", 2).when(pred == "uses_tool", 1).otherwise(0)
     ends = triples.select(
         F.explode(
             F.array(
-                F.struct(F.col("subj").alias("node_id"), zero.alias("n")),
-                F.struct(F.col("obj").alias("node_id"), mentioned.alias("n")),
+                F.struct(
+                    F.col("subj").alias("node_id"), zero.alias("n"), subj_kind.alias("k")
+                ),
+                F.struct(
+                    F.col("obj").alias("node_id"), mentioned.alias("n"), obj_kind.alias("k")
+                ),
             )
         ).alias("e")
     )
-    kind = (
-        F.when(F.col("node_id").startswith("tool:"), "tool")
-        .when(F.col("node_id").rlike("^conv-[0-9]+:[0-9]+$"), "turn")
-        .when(F.col("node_id").rlike("^conv-[0-9]+$"), "conversation")
-        .otherwise("entity")
-    )
+    code = F.col("kind_code")
+    kind = F.when(code == 2, "turn").when(code == 1, "tool").otherwise("entity")
     return (
         ends.groupBy(F.col("e.node_id").alias("node_id"))
-        .agg(F.sum("e.n").alias("mention_count"))
+        .agg(F.sum("e.n").alias("mention_count"), F.max("e.k").alias("kind_code"))
         .select(
             "node_id",
             kind.alias("kind"),

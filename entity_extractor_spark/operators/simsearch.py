@@ -15,12 +15,20 @@ bucketing turned on the corpus itself. Their hot-bucket guard is the
 window count of ``operators/dedup.blocked_pairs``, written out here
 because the bucket join also carries the vectors.
 
-The cosine kernel is expressed two ways:
-* `cosine_expr` — pure Catalyst fold (zip_with + aggregate), used in the
-  driver-contract queries because DuckDB mirrors the exact fold order
-  (bit-identical doubles, verified in tests);
-* `cosine_topk_pandas` — Arrow-batched numpy matmul for the hot path
-  (one BLAS gemm per batch instead of per-row folds).
+The four top-k operators share one candidate -> verify -> rank core.
+`_top_k` is the one per-query window top-k, ranked by
+``(score desc, neighbor_id asc)``; `contract/curation._ANN_TAIL` is its
+DuckDB twin. `_cosine_topk` is the exact verify of brute force,
+sign-LSH and IVF: it projects both sides once (norms computed once per
+row), broadcasts the queries, joins on the caller's candidate key (or
+on every pair), drops each query from its own neighbours and scores
+`paired_cosine`. The callers differ only in the key they add: none,
+the LSH bucket, or the IVF cell. `sq8_topk` scores int8 codes instead
+and shares only the rank step.
+
+`cosine_expr` is the pure Catalyst cosine fold (zip_with + aggregate);
+DuckDB mirrors the exact fold order, so the contract queries hash-match
+bit for bit.
 
 Reference basis: cosine scoring at `core_pipeline/embed.py:86-102`,
 `score_filtered_contexts.py:59-60`; the reference ranks candidate
@@ -29,11 +37,7 @@ contexts by similarity but has no ANN index (driver-RAM dict lookups).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from entity_extractor_spark.functions.hashing import hyperplanes
@@ -82,49 +86,67 @@ def paired_cosine(qv: Column, cv: Column, qn: Column, cn: Column) -> Column:
     return F.when((qn > 0) & (cn > 0), _dot(qv, cv) / (qn * cn)).otherwise(F.lit(0.0))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, rank, neighbor_id, cos) — exact top-k by cosine.
-
-    ``queries`` is broadcast (the small side); the corpus is scanned once
-    with no shuffle before the per-query window; norms computed once per
-    row, not per pair.
-    """
-    from pyspark.sql import Window
-
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            norm_expr(F.col(vec_col)).alias("qn"),
-        )
-    )
-    scored = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-            norm_expr(F.col(vec_col)).alias("cn"),
-        )
-        .join(q, F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                paired_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+def _top_k(scored: DataFrame, k: int, by: str = "cos") -> DataFrame:
+    """Each query's ``k`` best rows of ``scored`` ranked by ``(by desc,
+    neighbor_id asc)``: (query_id, rank, neighbor_id, *rest), where rest
+    is ``scored``'s other columns in order. One window partitioned by
+    query_id, so its exchange is the only one a broadcast candidate join
+    leaves."""
+    rest = [c for c in scored.columns if c not in ("query_id", "neighbor_id")]
+    w = Window.partitionBy("query_id").orderBy(F.desc(by), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
+        .select("query_id", "rank", "neighbor_id", *rest)
     )
+
+
+def _cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    key: tuple[str, Column] | None = None,
+) -> DataFrame:
+    """(query_id, rank, neighbor_id, cos): exact cosine top-k over the
+    candidate pairs. ``key = (name, probes)``: each corpus row carries its
+    candidate key in column ``name``, ``probes`` is the array of keys a
+    query probes (an expression over the query's columns), and a
+    candidate is a corpus row whose key its query probes: an equi join,
+    so no cross product. With no ``key`` every corpus row is a candidate
+    of every query. A query is never its own neighbour.
+
+    ``queries`` is broadcast (the small side), so the corpus is scanned
+    once with no shuffle before the per-query window. Norms are computed
+    once per row, not per pair, and a query's before its probes are
+    exploded."""
+    norm = norm_expr(F.col("embedding"))
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        norm.alias("cn"),
+        *([key[0]] if key else []),
+    )
+    # withColumns, not select: ``probes`` may read any of the query's columns
+    q = queries.withColumns(
+        {"query_id": F.col("vec_id"), "qv": F.col("embedding"), "qn": norm}
+    )
+    not_self = F.col("neighbor_id") != F.col("query_id")
+    if key is None:
+        cand = c.join(F.broadcast(q), not_self)
+    else:
+        name, probes = key
+        q = q.withColumn(name, F.explode(probes))
+        cand = c.join(F.broadcast(q), name).filter(not_self)
+    cos = paired_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
+    return _top_k(cand.select("query_id", "neighbor_id", F.round(cos, 6).alias("cos")), k)
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """(query_id, rank, neighbor_id, cos) — exact top-k by cosine: every
+    corpus row is a candidate of every query, the baseline the ANN
+    indexes are measured against. The query side is broadcast, so the
+    corpus is scanned once with no shuffle before the per-query window."""
+    return _cosine_topk(corpus, queries, k)
 
 
 def lsh_bucket(vec: Column, dim: int, n_planes: int = N_PLANES, offset: int = 0) -> Column:
@@ -186,8 +208,6 @@ def lsh_topk(
     queries: DataFrame,
     dim: int,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = N_PLANES,
     probe_hamming: int = PROBE_HAMMING,
 ) -> DataFrame:
@@ -206,41 +226,13 @@ def lsh_topk(
     from probe_hamming=0 → 2, while scanning ~34% of buckets; on
     clusterable data the same defaults sit ≥0.9 (tests/test_curation).
     """
-    from pyspark.sql import Window
-
-    bc = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        lsh_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
-        norm_expr(F.col(vec_col)).alias("cn"),
-    )
     masks = F.lit([int(m) for m in probe_masks(n_planes, probe_hamming)]).cast("array<long>")
-    bq = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            lsh_bucket(F.col(vec_col), dim, n_planes).alias("_own"),
-            norm_expr(F.col(vec_col)).alias("qn"),
-        )
-        .withColumn("bucket", F.explode(F.transform(masks, lambda m: F.col("_own").bitwiseXOR(m))))
-        .drop("_own")
-    )
-    scored = (
-        bc.join(bq, "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                paired_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
+    bucket = lsh_bucket(F.col("embedding"), dim, n_planes)
+    return _cosine_topk(
+        corpus.withColumn("bucket", bucket),
+        queries.withColumn("_own", bucket),
+        k,
+        key=("bucket", F.transform(masks, lambda m: F.col("_own").bitwiseXOR(m))),
     )
 
 
@@ -288,8 +280,6 @@ def train_centroids(
     n_centroids: int = N_CENTROIDS,
     sample_size: int = 2048,
     n_iters: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Deterministic k-means centroid bank for IVF — the standard
     web-scale recipe: fit on a bounded sample, assign the full corpus
@@ -312,7 +302,7 @@ def train_centroids(
     import numpy as np
 
     s = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        corpus.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
         .withColumn("_h", F.md5(F.col("_id").cast("string")))
         .orderBy("_h")
         .limit(sample_size)
@@ -343,8 +333,6 @@ def train_centroids_local(
     n_centroids: int = N_CENTROIDS,
     sample_size: int = 2048,
     n_iters: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Driver-/oracle-side twin of :func:`train_centroids`: same
     content-hash sample order (md5 of the id string — what Spark's
@@ -358,9 +346,9 @@ def train_centroids_local(
     import numpy as np
     import pyarrow.parquet as pq
 
-    t = pq.read_table(parquet_path, columns=[id_col, vec_col])
-    ids = t.column(id_col).to_pylist()
-    vecs = t.column(vec_col).to_pylist()
+    t = pq.read_table(parquet_path, columns=["vec_id", "embedding"])
+    ids = t.column("vec_id").to_pylist()
+    vecs = t.column("embedding").to_pylist()
     order = sorted(
         range(len(ids)),
         key=lambda i: hashlib.md5(str(ids[i]).encode()).hexdigest(),
@@ -376,8 +364,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = N_CENTROIDS,
     n_probe: int = N_PROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse-quantize the corpus into
@@ -393,52 +379,23 @@ def ivf_topk(
     a 100 TB corpus instead of all of it, and recall is tuned by
     ``n_probe`` alone (no reindex). Assignment and probing are pure
     Catalyst folds over centroid literals; candidates come from an equi
-    join on ``cell`` (plan-asserted: no cartesian, no BNLJ).
+    join on ``cell`` (plan-asserted: no cartesian, no BNLJ). The
+    centroid scores ``_cs`` are a column of their own, so each row folds
+    them once even though the cell and the probe list read them twice.
     """
-    from pyspark.sql import Window
 
-    bc = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-            norm_expr(F.col(vec_col)).alias("cn"),
+    def with_cs(df: DataFrame) -> DataFrame:
+        return df.withColumn(
+            "_cs", centroid_scores(F.col("embedding"), dim, n_centroids, centroids)
         )
-        .withColumn("_cs", centroid_scores(F.col("cv"), dim, n_centroids, centroids))
-        .withColumn(
-            "cell", F.expr("CAST(array_position(_cs, array_max(_cs)) - 1 AS INT)")
-        )
-        .drop("_cs")
-    )
+
+    nearest = F.expr("CAST(array_position(_cs, array_max(_cs)) - 1 AS INT)")
     probe = F.expr(
         f"transform(slice(array_sort(transform(sequence(0, {n_centroids - 1}), "
-        f"i -> struct(-_qs[i] AS ns, i AS cid))), 1, {n_probe}), x -> CAST(x.cid AS INT))"
+        f"i -> struct(-_cs[i] AS ns, i AS cid))), 1, {n_probe}), x -> CAST(x.cid AS INT))"
     )
-    bq = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            norm_expr(F.col(vec_col)).alias("qn"),
-        )
-        .withColumn("_qs", centroid_scores(F.col("qv"), dim, n_centroids, centroids))
-        .withColumn("cell", F.explode(probe))
-        .drop("_qs")
-    )
-    scored = (
-        bc.join(bq, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                paired_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
+    return _cosine_topk(
+        with_cs(corpus).withColumn("cell", nearest), with_cs(queries), k, key=("cell", probe)
     )
 
 
@@ -518,8 +475,6 @@ def embedding_near_dups(
     2.59 → 3.15 s over 5 alternating pairs, 2 of 5 won). The hot-bucket
     guard is the same window count before the self-join.
     """
-    from pyspark.sql import Window
-
     b = corpus.select(
         F.col("vec_id").alias("_id"),
         F.col("embedding").alias("_v"),
@@ -587,13 +542,7 @@ def _int_dot(a: Column, b: Column) -> Column:
     return F.aggregate(prod, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
-def sq8_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """(query_id, rank, neighbor_id, score_q, cos_sq8) — top-k by INTEGER
     dot product of int8-quantized vectors.
 
@@ -606,19 +555,17 @@ def sq8_topk(
     oracle hash-matches. ``cos_sq8`` is the quantized-cosine estimate
     (int dot over the exact int-code norms, fixed op order). Plan shape
     matches brute_force_topk: broadcast query side, zero corpus shuffle,
-    per-query window top-k.
+    per-query window top-k (:func:`_top_k`, ranked by ``score_q``).
     """
-    from pyspark.sql import Window
-
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            sq8_quantize(F.col(vec_col)).alias("qq"),
+            F.col("vec_id").alias("query_id"),
+            sq8_quantize(F.col("embedding")).alias("qq"),
         ).withColumn("qn", F.sqrt(_int_dot(F.col("qq"), F.col("qq")).cast("double")))
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        sq8_quantize(F.col(vec_col)).alias("cq"),
+        F.col("vec_id").alias("neighbor_id"),
+        sq8_quantize(F.col("embedding")).alias("cq"),
     ).withColumn("cn", F.sqrt(_int_dot(F.col("cq"), F.col("cq")).cast("double")))
     scored = (
         c.join(q, F.col("neighbor_id") != F.col("query_id"))
@@ -636,55 +583,4 @@ def sq8_topk(
             ).alias("cos_sq8"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score_q", "cos_sq8")
-    )
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    query_vecs: list[tuple[int, list[float]]],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Hot-path exact top-k: one numpy gemm per Arrow batch, then a global
-    per-query top-k merge (partial top-k per partition, final on the
-    shuffled k·Q rows — never the full score matrix)."""
-    qids = [q[0] for q in query_vecs]
-    qm = np.asarray([q[1] for q in query_vecs], dtype=np.float64)
-    qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((qids, qn))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qnorm = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cn = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            sims = qnorm @ cn.T  # (Q, batch)
-            out = []
-            for qi, qid in enumerate(ids):
-                row = sims[qi]
-                top = np.argsort(-row, kind="stable")[: k + 1]
-                for ci in top:
-                    out.append((qid, int(pdf[id_col].iloc[ci]), float(row[ci])))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cos"])
-
-    from pyspark.sql import Window
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        partial.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
+    return _top_k(scored, k, by="score_q")

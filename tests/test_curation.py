@@ -62,14 +62,42 @@ def test_simhash_and_pairs(docs):
     assert pairs[(1, 2)] == 0
 
 
-def test_brute_vs_pandas_topk(spark):
-    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 3)
-    expr_rows = S.brute_force_topk(e, q, k=4).collect()
-    qvecs = [(r["vec_id"], list(r["embedding"])) for r in q.collect()]
-    np_rows = S.cosine_topk_pandas(e, qvecs, k=4).collect()
-    key = lambda rows: {(r["query_id"], r["rank"]): r["neighbor_id"] for r in rows}
-    assert key(expr_rows) == key(np_rows)
+def test_topk_ties_known_answer(spark):
+    """Duplicate and collinear vectors tie on cosine, and a zero vector
+    scores 0.0 against everything. Brute force, single-bucket LSH and
+    all-cell IVF see every corpus row as a candidate, so all three must
+    return the same rows: ties ranked by neighbor_id, every candidate
+    when k exceeds their count, and never the query itself."""
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [1.0, 0.0, 0.0, 0.0]),  # duplicate of 0
+        (2, [2.0, 0.0, 0.0, 0.0]),  # collinear with 0
+        (3, [0.0, 1.0, 0.0, 0.0]),
+        (4, [0.0, 3.0, 0.0, 0.0]),  # collinear with 3
+        (5, [1.0, 1.0, 0.0, 0.0]),
+        (6, [0.0, 0.0, 0.0, 0.0]),  # zero norm
+    ]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = e.filter(F.col("vec_id").isin(0, 3, 6))
+    half = 0.707107  # round(cos 45°, 6)
+    ranked = {
+        0: [(1, 1.0), (2, 1.0), (5, half), (3, 0.0), (4, 0.0), (6, 0.0)],
+        3: [(4, 1.0), (5, half), (0, 0.0), (1, 0.0), (2, 0.0), (6, 0.0)],
+        6: [(n, 0.0) for n in (0, 1, 2, 3, 4, 5)],
+    }
+    want = sorted(
+        (qid, rank, nid, cos)
+        for qid, hits in ranked.items()
+        for rank, (nid, cos) in enumerate(hits, start=1)
+    )
+    for op in (
+        S.brute_force_topk(e, q, k=10),
+        S.lsh_topk(e, q, dim=4, k=10, n_planes=0, probe_hamming=0),
+        S.ivf_topk(e, q, dim=4, k=10, n_probe=S.N_CENTROIDS),
+    ):
+        got = sorted(tuple(r) for r in op.collect())
+        assert got == want
+        assert all(qid != nid for qid, _, nid, _ in got)
 
 
 def test_lsh_topk_subset_of_bucket(spark):

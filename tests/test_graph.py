@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import functools
-import re
 
 import pandas as pd
 from hypothesis import given, settings
@@ -178,14 +177,17 @@ def test_build_nodes_and_edges(spark):
     assert dangling == 0
 
 
-def _node_kind(node_id: str) -> str:
-    if node_id.startswith("tool:"):
-        return "tool"
-    if re.fullmatch(r"conv-[0-9]+:[0-9]+", node_id):
-        return "turn"
-    if re.fullmatch(r"conv-[0-9]+", node_id):
-        return "conversation"
-    return "entity"
+def _node_kinds(tp: pd.DataFrame) -> dict[str, str]:
+    """Each node's kind from where it sits in the triples: turns are the
+    subj of mentions/uses_tool/replies_to or the obj of replies_to,
+    tools the obj of uses_tool, everything else an entity."""
+    turn_subj = tp["pred"].isin(["mentions", "uses_tool", "replies_to"])
+    turns = set(tp.loc[turn_subj, "subj"]) | set(tp.loc[tp["pred"] == "replies_to", "obj"])
+    tools = set(tp.loc[tp["pred"] == "uses_tool", "obj"])
+    return {
+        n: "turn" if n in turns else "tool" if n in tools else "entity"
+        for n in set(tp["subj"]) | set(tp["obj"])
+    }
 
 
 def test_build_nodes_from_edges_identical(spark):
@@ -204,9 +206,7 @@ def test_build_nodes_from_edges_identical(spark):
     triples = all_triples(tr, extract_mentions(tr, gaz), emap).cache()
     tp = triples.toPandas()
     counts = tp[tp["pred"] == "mentions"].groupby("obj").size()
-    want = sorted(
-        (n, _node_kind(n), n, int(counts.get(n, 0))) for n in set(tp["subj"]) | set(tp["obj"])
-    )
+    want = sorted((n, k, n, int(counts.get(n, 0))) for n, k in _node_kinds(tp).items())
     edges = build_edges(triples)
     got = sorted(map(tuple, build_nodes(triples).collect()))
     assert edges.filter((F.col("pred") == "mentions") & (F.col("weight") > 1)).count() > 0
@@ -263,6 +263,42 @@ def test_alias_terms_in_one_turn_known_answer(spark):
         "X": ("entity", 3), "C": ("entity", 1), "D": ("entity", 1),
         "A": ("entity", 0), "B": ("entity", 0),
         "conv-1:0": ("turn", 0), "conv-1:1": ("turn", 0), "conv-1:2": ("turn", 0),
+    }
+
+
+def test_node_kinds_do_not_depend_on_id_format(spark):
+    """Node kinds come from triple positions, so conversation ids of any
+    format type their turns: ``a1b2:0`` (a user turn only replied to) and
+    ``a1b2:2`` (a tool turn that mentions an entity) are turns, the tool
+    an assistant turn calls is a tool, and a term id shaped like a turn
+    id is still an entity."""
+    tr = to_spark(
+        spark,
+        pd.DataFrame(
+            {
+                "conv_id": ["a1b2"] * 3,
+                "turn_idx": pd.array([0, 1, 2], dtype="int32"),
+                "role": ["user", "assistant", "tool"],
+                "text": ["hello", "a", "b"],
+                "tool": [None, None, "grep"],
+                "ts": pd.to_datetime(["2026-01-01"] * 3),
+            }
+        ),
+    )
+    m = spark.createDataFrame(
+        [("a1b2", 1, "A"), ("a1b2", 2, "conv-9:9")],
+        "conv_id string, turn_idx int, term_id string",
+    )
+    emap = spark.createDataFrame(
+        [("A", "A"), ("conv-9:9", "conv-9:9")], "term_id string, entity_id string"
+    )
+    nodes = {
+        r["node_id"]: (r["kind"], r["mention_count"])
+        for r in build_nodes(all_triples(tr, m, emap)).collect()
+    }
+    assert nodes == {
+        "a1b2:0": ("turn", 0), "a1b2:1": ("turn", 0), "a1b2:2": ("turn", 0),
+        "tool:grep": ("tool", 0), "A": ("entity", 1), "conv-9:9": ("entity", 1),
     }
 
 

@@ -4,6 +4,8 @@ here, not in a 100 TB run."""
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -216,6 +218,21 @@ def test_salted_collect_is_two_stage(spark):
     df = spark.createDataFrame([("k", 1)], "k string, v int")
     plan = P.formatted_plan(salted_collect_list(df, ["k"], "v"))
     assert P.count_exchanges(plan) == 2, plan
+
+
+def test_brute_force_topk_broadcasts_queries(spark):
+    """Exact top-k broadcasts the query side into a nested-loop join, so
+    the corpus never shuffles: the one exchange is the rank window's
+    hashpartitioning(query_id)."""
+    from entity_extractor_spark.operators.simsearch import brute_force_topk
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = e.filter(F.col("vec_id") < 3)
+    plan = P.formatted_plan(brute_force_topk(e, q))
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert re.search(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[query_id#", plan), plan
+    assert P.count_exchanges(plan) == 1, plan
+    assert re.search(r"Arguments: hashpartitioning\(query_id#\d+L?, \d+\)", plan), plan
 
 
 def test_lsh_topk_no_cartesian(spark):
