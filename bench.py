@@ -243,7 +243,10 @@ def main() -> None:
     timings: dict[str, float] = {}
 
     # Warm the JVM (codegen, parquet footers) and every Python worker
-    # (Arrow path) once so per-query timings measure the plan.
+    # (Arrow path) once so per-query timings measure the plan. Kept for
+    # single-key runs too: skipping the two query warm-ups saved 1-3 s of
+    # a ~24 s process (sf0.1, local[4]) because the JIT work moved into
+    # the noop warm-up and the cold pass, and the timed passes ran slower.
     qs["value_counts"](spark, SF_DIR).count()
     qs["quality_scores"](spark, SF_DIR).count()
     from pyspark.sql import functions as F

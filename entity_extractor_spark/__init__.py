@@ -29,6 +29,7 @@ def __getattr__(name):
         "extract_mentions": "entity_extractor_spark.operators.mentions",
         "scan_mentions": "entity_extractor_spark.operators.mentions",
         "dedup_mentions": "entity_extractor_spark.operators.mentions",
+        "mention_context": "entity_extractor_spark.operators.mentions",
         "score_candidates": "entity_extractor_spark.operators.scoring",
         "connected_components": "entity_extractor_spark.operators.canonicalize",
         "canonical_entities": "entity_extractor_spark.operators.canonicalize",

@@ -49,12 +49,20 @@ class WordIndex:
             return idx
         return default  # gap between words or past the end → reference .get default
 
-    def window(self, match_start: int, match_end: int, window_words: int) -> str:
+    def bounds(self, match_start: int, match_end: int, window_words: int) -> tuple[int, int]:
+        """The half-open word range ``[lo, hi)`` into ``text.split()`` that
+        :meth:`window` joins; ``lo <= hi`` (the end word is never before
+        the start word)."""
         start_word = self.word_at(match_start, 0)
         end_word = self.word_at(match_end - 1, self.n - 1)
         lo = max(0, start_word - window_words)
         hi = min(self.n, end_word + window_words + 1)
+        return lo, hi
+
+    def window(self, match_start: int, match_end: int, window_words: int) -> str:
+        lo, hi = self.bounds(match_start, match_end, window_words)
         return " ".join(self.words[lo:hi])
+
 
 def extract_context_window(
     text: str, match_start: int, match_end: int, window_words: int = DEFAULT_WINDOW_WORDS

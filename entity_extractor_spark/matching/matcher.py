@@ -28,13 +28,15 @@ the candidate terms:
   phrases that start with a non-word char get that check
   unconditionally.
 
-Per-text cost is one tokenizer pass plus one dict probe per distinct
-token, with no per-char Python work. The first-word index has one
-measured worst case: the synth 4,000-term gazetteer, whose 12 name
-heads collapse 1,945 phrase keys onto 110 first words. Even there it
-runs within 10% of a per-char Aho-Corasick automaton (BENCH.md
-§Headline). Only surfaces that pass the prefilter run their (cached,
-compiled) occurrence regex on the original text to recover exact spans.
+Per-text cost is one tokenizer pass plus one set probe per distinct
+token (the key sets are frozensets, so an intersection walks the smaller
+side, never the whole gazetteer), with no per-char Python work. The
+first-word index has one measured worst case: the synth 4,000-term
+gazetteer, whose 12 name heads collapse 1,945 phrase keys onto 110 first
+words. Even there it runs within 10% of a per-char Aho-Corasick
+automaton (BENCH.md §Headline). Only surfaces that pass the prefilter
+run their (cached, compiled) occurrence regex on the original text to
+recover exact spans.
 The prefilter is exact (no recall loss): an IGNORECASE match of any
 surface implies lowered-substring containment (ASCII; documented limit).
 The hypothesis property suite pins both modes to the naive per-term
@@ -87,6 +89,12 @@ class GazetteerMatcher:
     # unconditional substring checks
     _phrase_first_word: dict[str, list[str]] = field(default_factory=dict)
     _phrase_no_word: list[str] = field(default_factory=list)
+    # the keys of _word_index and _phrase_first_word as frozensets: a
+    # set intersection with a set probes the smaller side, with a
+    # dict.keys() view it probes every gazetteer key. Derived, so
+    # rebuilt on unpickle rather than shipped
+    _word_keys: frozenset[str] = field(default_factory=frozenset)
+    _phrase_first_keys: frozenset[str] = field(default_factory=frozenset)
     # compiled-regex cache; rebuilt lazily per process, excluded from pickle
     _regex_cache: dict[tuple[str, str], re.Pattern] = field(default_factory=dict)
 
@@ -111,7 +119,12 @@ class GazetteerMatcher:
                 m._phrase_first_word.setdefault(mo.group(0), []).append(key)
             else:
                 m._phrase_no_word.append(key)
+        m._index_keys()
         return m
+
+    def _index_keys(self) -> None:
+        self._word_keys = frozenset(self._word_index)
+        self._phrase_first_keys = frozenset(self._phrase_first_word)
 
     def __getstate__(self):
         return {
@@ -129,6 +142,7 @@ class GazetteerMatcher:
         self._phrase_first_word = state["_phrase_first_word"]
         self._phrase_no_word = state["_phrase_no_word"]
         self._regex_cache = {}
+        self._index_keys()
 
     def _pattern(self, term_id: str, surface: str) -> re.Pattern:
         key = (term_id, surface)
@@ -150,9 +164,9 @@ class GazetteerMatcher:
         words = set(_WORD_RE.findall(haystack))
         tokens = set(_TOKEN_RE.findall(text)) if exact else words
         candidates: list[tuple[str, str]] = []
-        for tok in tokens.intersection(self._word_index.keys()):
+        for tok in tokens & self._word_keys:
             candidates.extend(self._word_index[tok])
-        for tok in words.intersection(self._phrase_first_word.keys()):
+        for tok in words & self._phrase_first_keys:
             for key in self._phrase_first_word[tok]:
                 if key in haystack:
                     candidates.extend(self._phrase_terms[key])

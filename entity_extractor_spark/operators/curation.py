@@ -27,7 +27,9 @@ ROW_KEY = ["conv_id", "term_id", "context"]
 
 
 def with_row_id(mentions: DataFrame) -> DataFrame:
-    """Stable row id = md5 of the UNIQUE-key tuple."""
+    """Stable row id = md5 of the UNIQUE-key tuple. The pipeline's stored
+    mention table keeps ``context`` as word bounds: re-derive it with
+    ``mentions.mention_context`` first."""
     return mentions.withColumn(
         "row_id", F.md5(F.concat_ws("\x1f", *[F.col(c) for c in ROW_KEY]))
     )

@@ -67,8 +67,8 @@ def build_edges(triples: DataFrame) -> DataFrame:
 
 
 def build_nodes(triples: DataFrame) -> DataFrame:
-    """nodes(node_id, kind, canonical_name, mention_count) from the
-    (subj, pred, obj) triple table.
+    """nodes(node_id, kind, mention_count) from the (subj, pred, obj)
+    triple table. A node's name is its id, stored once.
 
     kind comes from where the node sits in its triples, not from the
     shape of its id: a turn is the subj of ``mentions``, ``uses_tool`` or
@@ -111,7 +111,6 @@ def build_nodes(triples: DataFrame) -> DataFrame:
         .select(
             "node_id",
             kind.alias("kind"),
-            F.col("node_id").alias("canonical_name"),
             # a sum is nullable; the stored nodes schema is not
             F.coalesce("mention_count", F.lit(0)).cast("long").alias("mention_count"),
         )

@@ -21,6 +21,11 @@ table is stored by.
 Given the gazetteer's descriptions, the same pass also scores each span's
 context against its term's description (``similarity``), so the KG job
 runs one Python stage and its ``scored`` stage is a JVM projection.
+
+Each row carries its context twice: as the string and as its word bounds
+``ctx_lo``/``ctx_hi`` into ``text.split()``. A stored table can keep the
+bounds alone; :func:`mention_context` re-derives the string from them and
+the turn text, in the JVM.
 """
 
 from __future__ import annotations
@@ -37,8 +42,19 @@ from entity_extractor_spark.operators.scoring import charngram_cosine_arrays
 
 MENTION_SCHEMA = (
     "conv_id string, turn_idx int, term_id string, term_name string, "
-    "surface string, start int, end int, context string, match_location string"
+    "surface string, start int, end int, context string, ctx_lo int, ctx_hi int, "
+    "match_location string"
 )
+
+# the code points Python's ``str.split()`` splits on (``str.isspace``),
+# as a Java regex class: ``split(text, _PY_SPLIT_RE)`` minus its empty
+# strings is ``text.split()``
+_PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+_PY_SPLIT_RE = "[" + "".join(f"\\u{ord(c):04x}" for c in _PY_WHITESPACE) + "]+"
 
 
 def build_matcher_from_gazetteer(
@@ -76,6 +92,11 @@ def scan_mentions(
 ) -> DataFrame:
     """The raw per-occurrence scan (no flags): one row per matched span.
 
+    ``context`` is the span's ±``window_words`` word window and
+    ``ctx_lo``/``ctx_hi`` its half-open word range into ``text.split()``
+    (``WordIndex.bounds``), from which :func:`mention_context`
+    re-derives it.
+
     With ``descriptions`` (term_id -> description) each row also gets
     ``similarity``: the char-ngram cosine of its context against its
     term's description, computed once per Arrow batch by the same
@@ -89,7 +110,8 @@ def scan_mentions(
         m, nm, desc = bc.value
         for pdf in batches:
             conv_ids, turn_idxs, term_ids, term_names = [], [], [], []
-            surfaces, starts, ends, contexts, locations = [], [], [], [], []
+            surfaces, starts, ends, locations = [], [], [], []
+            contexts, ctx_los, ctx_his = [], [], []
             for conv_id, turn_idx, role, text in zip(
                 pdf["conv_id"].values, pdf["turn_idx"].values, pdf["role"].values, pdf["text"].values
             ):
@@ -107,7 +129,10 @@ def scan_mentions(
                     surfaces.append(s.text)
                     starts.append(s.start)
                     ends.append(s.end)
-                    contexts.append(widx.window(s.start, s.end, window_words))
+                    lo, hi = widx.bounds(s.start, s.end, window_words)
+                    contexts.append(" ".join(widx.words[lo:hi]))
+                    ctx_los.append(lo)
+                    ctx_his.append(hi)
                     locations.append(role)
             out = pd.DataFrame(
                 {
@@ -119,6 +144,8 @@ def scan_mentions(
                     "start": pd.Series(starts, dtype="int32"),
                     "end": pd.Series(ends, dtype="int32"),
                     "context": pd.Series(contexts, dtype="object"),
+                    "ctx_lo": pd.Series(ctx_los, dtype="int32"),
+                    "ctx_hi": pd.Series(ctx_his, dtype="int32"),
                     "match_location": pd.Series(locations, dtype="object"),
                 }
             )
@@ -196,4 +223,23 @@ def dedup_mentions(mentions: DataFrame) -> DataFrame:
         mentions.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def mention_context(mentions: DataFrame, transcripts: DataFrame) -> DataFrame:
+    """``mentions`` plus its ``context`` column, re-derived from the turn
+    text and the stored word bounds: the words ``[ctx_lo, ctx_hi)`` of
+    ``text.split()`` joined by one space, the string the scan computed
+    (``WordIndex.window``). For readers of a mention table stored
+    without ``context``, such as ``curation.with_row_id``.
+
+    JVM columns over one join on ``(conv_id, turn_idx)``: Java's
+    ``split`` on the class of Python's 29 whitespace code points, empty
+    strings removed, then ``slice`` and ``array_join``."""
+    text = transcripts.select("conv_id", "turn_idx", "text")
+    words = F.array_remove(F.split(F.col("text"), _PY_SPLIT_RE), "")
+    lo, hi = F.col("ctx_lo"), F.col("ctx_hi")
+    context = F.array_join(F.slice(words, lo + 1, hi - lo), " ")
+    return mentions.join(text, ["conv_id", "turn_idx"]).select(
+        *mentions.columns, context.alias("context")
     )

@@ -26,11 +26,14 @@ emitted span against its term's description when given the
 descriptions (``operators/mentions.scan_mentions``). Both run the same
 function, so their similarities are bit-identical by construction.
 
-Everything else is :func:`score_columns`: pure column arithmetic —
-whole-stage-codegen'd, shuffle-free, scale-independent, with Java's
-``lower``/``rlike`` semantics. The pipeline's ``scored`` stage is that
-projection over the mention table the scan already scored, so it runs
-no Python.
+Everything else is pure column arithmetic — whole-stage-codegen'd,
+shuffle-free, scale-independent, with Java's ``lower``/``rlike``
+semantics — in two steps: :func:`signal_columns` reads the span
+(``context``, ``surface``) and :func:`classify_columns` reads only the
+signals and ``similarity``. :func:`score_candidates` composes them. The
+pipeline runs the first in its mention stage, where ``context`` is in
+the plan, and its ``scored`` stage is the second over the stored
+mention table, so neither runs Python and ``context`` is never stored.
 """
 
 from __future__ import annotations
@@ -250,20 +253,24 @@ def determine_likelihood(similarity: Column, ner: Column, n_keywords: Column) ->
     )
 
 
-def score_columns(df: DataFrame) -> DataFrame:
-    """Append ``heuristic_keywords``, ``ner_signal``, ``composite_score``
-    and ``likelihood`` (FIXTURES.md §4) to a frame that carries
-    ``context``, ``surface`` and ``similarity``. JVM expressions only:
-    no Python stage, no exchange."""
-    kw = keyword_hits(F.col("context"))
-    return (
-        df.withColumn("heuristic_keywords", kw)
-        .withColumn("ner_signal", ner_signal(F.col("context"), F.col("surface")))
-        .withColumn(
-            "composite_score",
-            composite_score(F.col("ner_signal"), F.col("similarity"), F.size("heuristic_keywords")),
-        )
-        .withColumn("likelihood", assign_likelihood(F.col("composite_score")))
+def signal_columns(df: DataFrame) -> DataFrame:
+    """Append the span signals ``heuristic_keywords`` and ``ner_signal``
+    (FIXTURES.md §4) to a frame that carries ``context`` and
+    ``surface``. JVM expressions only: no Python stage, no exchange."""
+    return df.withColumn("heuristic_keywords", keyword_hits(F.col("context"))).withColumn(
+        "ner_signal", ner_signal(F.col("context"), F.col("surface"))
+    )
+
+
+def classify_columns(df: DataFrame) -> DataFrame:
+    """Append ``composite_score`` and ``likelihood`` (FIXTURES.md §4) to
+    a frame that carries ``similarity`` and the :func:`signal_columns`.
+    JVM expressions only: no Python stage, no exchange."""
+    score = composite_score(
+        F.col("ner_signal"), F.col("similarity"), F.size("heuristic_keywords")
+    )
+    return df.withColumn("composite_score", score).withColumn(
+        "likelihood", assign_likelihood(F.col("composite_score"))
     )
 
 
@@ -274,7 +281,9 @@ def score_candidates(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
     registry = F.broadcast(gazetteer.select("term_id", "description"))
     joined = mentions.join(registry, "term_id", "left")
     sim = charngram_cosine(F.col("context"), F.col("description"))
-    return score_columns(joined.withColumn("similarity", sim).drop("description"))
+    return classify_columns(
+        signal_columns(joined.withColumn("similarity", sim).drop("description"))
+    )
 
 
 LIKELIHOOD_RANKS = {"unlikely": 0, "somewhat likely": 1, "very likely": 2}

@@ -18,9 +18,17 @@ Scale shape (the plan you'd want at 10^12 turns):
   * transcripts arrive bucketed by conv_id (Iceberg bucket / repartition)
   * the mention scan is embarrassingly parallel (mapInPandas, no shuffle)
     and is the job's one Python pass: it also computes each span's
-    description similarity, so the scored stage is a JVM projection of
-    the mention table that stores the span key and the score columns
-    only (context, surface and the flags live once, in mentions)
+    description similarity. The mention stage adds the span signals
+    (keyword hits, NER stand-in) as JVM columns while ``context`` is
+    still in the plan, after the dedup that keys on it
+  * every fact is stored once. mentions keep ``context`` as its word
+    bounds ``ctx_lo``/``ctx_hi`` into the turn text, and no
+    ``term_name`` (the gazetteer's title of ``term_id``);
+    ``mentions.mention_context`` re-derives the context for readers.
+    The scored stage is a codegen'd projection of the stored mentions
+    that stores the span key plus ``composite_score`` and
+    ``likelihood``; FIXTURES.md §4's table is mentions joined to it on
+    the span key. nodes store no copy of ``node_id``
   * the mention stage crosses ONE exchange, extract_mentions' AQE-sized
     conv_id repartition, which the flag window, the mention dedup window
     and the stored table's clustering all reuse (subset rule)
@@ -49,11 +57,27 @@ from entity_extractor_spark.lineage import StageRunner
 # the KG job's stages in pipeline order
 STAGES = ("mentions", "scored", "entity_map", "triples", "edges", "nodes")
 
-# the scored stage's columns: the span key and FIXTURES.md §4's scores
-SCORED_COLS = [
-    "conv_id", "turn_idx", "term_id", "start", "end",
-    "similarity", "heuristic_keywords", "ner_signal", "composite_score", "likelihood",
-]
+# the mention table's span key: one row per key
+SPAN_KEY = ["conv_id", "turn_idx", "term_id", "start", "end"]
+# the scored stage's columns: the span key and the two classify columns;
+# FIXTURES.md §4's scored_candidates is mentions joined to it on SPAN_KEY
+SCORED_COLS = [*SPAN_KEY, "composite_score", "likelihood"]
+
+
+def mention_table(transcripts: DataFrame, gazetteer: pd.DataFrame, similarity: bool) -> DataFrame:
+    """The mention stage's table: the deduplicated mentions, plus the span
+    signals when the scan scores ``similarity``, computed while
+    ``context`` is in the plan. ``context`` and ``term_name`` are then
+    dropped; both are re-derivable, the context from ``ctx_lo``/``ctx_hi``
+    and the turn text (``mentions.mention_context``), the name from the
+    gazetteer's title of ``term_id``."""
+    from entity_extractor_spark.operators import scoring
+    from entity_extractor_spark.operators.mentions import dedup_mentions, extract_mentions
+
+    m = dedup_mentions(extract_mentions(transcripts, gazetteer, similarity=similarity))
+    if similarity:
+        m = scoring.signal_columns(m)
+    return m.drop("context", "term_name")
 
 
 def run_pipeline(
@@ -73,11 +97,10 @@ def run_pipeline(
     group and description. Every stage's result is awaited before the
     manifest is written, so a failed stage fails the call and leaves no
     manifest."""
+    from entity_extractor_spark.operators import scoring
     from entity_extractor_spark.operators.canonicalize import canonical_entities
     from entity_extractor_spark.operators.graph import build_edges, build_nodes
-    from entity_extractor_spark.operators.mentions import dedup_mentions, extract_mentions
     from entity_extractor_spark.operators.predicates import all_triples
-    from entity_extractor_spark.operators.scoring import score_columns
 
     runner = StageRunner(spark, out_root, order=STAGES)
     params = {"n_terms": int(len(gazetteer))}
@@ -99,7 +122,7 @@ def run_pipeline(
 
         mentions = runner.run(
             "mentions",
-            lambda: dedup_mentions(extract_mentions(transcripts, gazetteer, similarity=similarity)),
+            lambda: mention_table(transcripts, gazetteer, similarity),
             # the scan's schema depends on it: a table stored without
             # similarity must not be resumed for a run that scores
             params={**params, "similarity": similarity},
@@ -107,11 +130,11 @@ def run_pipeline(
         )
 
         if similarity:
-            # the scan scored similarity; the rest is JVM columns, joined back
-            # to mentions' context/surface/flags on the span key when needed
+            # mentions carry similarity and the signals; classifying them
+            # is a projection, joined back to mentions on the span key
             beside(
                 "scored",
-                lambda: score_columns(mentions).select(*SCORED_COLS),
+                lambda: scoring.classify_columns(mentions).select(*SCORED_COLS),
                 key_col="conv_id",
             )
 

@@ -206,13 +206,13 @@ def test_build_nodes_from_edges_identical(spark):
     triples = all_triples(tr, extract_mentions(tr, gaz), emap).cache()
     tp = triples.toPandas()
     counts = tp[tp["pred"] == "mentions"].groupby("obj").size()
-    want = sorted((n, k, n, int(counts.get(n, 0))) for n, k in _node_kinds(tp).items())
+    want = sorted((n, k, int(counts.get(n, 0))) for n, k in _node_kinds(tp).items())
     edges = build_edges(triples)
     got = sorted(map(tuple, build_nodes(triples).collect()))
     assert edges.filter((F.col("pred") == "mentions") & (F.col("weight") > 1)).count() > 0
     triples.unpersist()
     assert got == want
-    assert {k for _, k, _, _ in got} == {"tool", "turn", "entity"}
+    assert {k for _, k, _ in got} == {"tool", "turn", "entity"}
 
 
 def test_alias_terms_in_one_turn_known_answer(spark):

@@ -148,3 +148,18 @@ def test_no_leading_word_phrases(mode, tc):
     m = GazetteerMatcher.build(terms, mode=mode)
     assert len(m._phrase_no_word) >= 2
     _assert_find_matches_naive(m, terms, text, mode)
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_key_sets_are_frozensets_after_pickle(mode):
+    """``find`` intersects the haystack's tokens with frozensets of the
+    index keys, so the probe walks the smaller side. Intersecting with a
+    ``dict.keys()`` view would probe every gazetteer key per text. The
+    sets are not pickled: unpickling rebuilds them, equal to the keys."""
+    terms = [("t0", ["alpha"]), ("t1", ["beta gamma"]), ("t2", ["- x"])] + _PHRASE_FILLER
+    built = GazetteerMatcher.build(terms, mode=mode)
+    for m in (built, pickle.loads(pickle.dumps(built))):
+        assert type(m._word_keys) is frozenset and type(m._phrase_first_keys) is frozenset
+        assert m._word_keys == set(m._word_index)
+        assert m._phrase_first_keys == set(m._phrase_first_word)
+    assert "_word_keys" not in built.__getstate__()

@@ -224,7 +224,7 @@ def test_pipeline_failed_overlapped_stage_fails_the_build(spark, corpus, tmp_pat
     def broken(df):
         raise RuntimeError("scoring failed")
 
-    monkeypatch.setattr(scoring, "score_columns", broken)
+    monkeypatch.setattr(scoring, "classify_columns", broken)
     transcripts, gaz = corpus
     root = str(tmp_path / "failed")
     with pytest.raises(RuntimeError, match="scoring failed"):
@@ -242,16 +242,28 @@ def _bag(df, cols) -> Counter:
 
 
 def test_pipeline_stage_tables_match_operator_composition(spark, corpus, tmp_path):
-    """The pipeline scores inside the mention scan and writes ``scored``
-    as the span key plus the score columns. Its stage tables must equal
-    the operator composition: ``mentions`` minus ``similarity`` is
-    ``dedup_mentions(extract_mentions(...))``, and ``scored`` (alone and
-    joined back to ``mentions`` on the span key) is ``score_candidates``
-    over it, with bit-equal similarities. The two most-mentioned terms
-    get a null and a 2-byte description, which both score 0.0."""
-    from entity_extractor_spark.operators.mentions import dedup_mentions, extract_mentions
+    """The pipeline stores every fact once: ``mentions`` keep ``context``
+    as its word bounds and no ``term_name``, and carry ``similarity``
+    and the span signals; ``scored`` is the span key plus the classify
+    columns. With the dropped columns re-derived (``context`` by
+    ``mention_context``, ``term_name`` from the gazetteer's titles) every
+    stage table equals the operator composition as a multiset:
+    ``mentions`` is ``dedup_mentions(extract_mentions(...))``, ``mentions``
+    joined to ``scored`` on the span key is ``score_candidates`` over it
+    (FIXTURES.md §4, bit-equal similarities), and ``entity_map``,
+    ``triples``, ``edges`` and ``nodes`` are their operators over those
+    mentions. The two most-mentioned terms get a null and a 2-byte
+    description, which both score 0.0."""
+    from entity_extractor_spark.operators.canonicalize import canonical_entities
+    from entity_extractor_spark.operators.graph import build_edges, build_nodes
+    from entity_extractor_spark.operators.mentions import (
+        dedup_mentions,
+        extract_mentions,
+        mention_context,
+    )
+    from entity_extractor_spark.operators.predicates import all_triples
     from entity_extractor_spark.operators.scoring import score_candidates
-    from entity_extractor_spark.pipeline import SCORED_COLS
+    from entity_extractor_spark.pipeline import SCORED_COLS, SPAN_KEY
 
     transcripts, gaz = corpus
     expected_m = dedup_mentions(extract_mentions(transcripts, gaz))
@@ -269,16 +281,35 @@ def test_pipeline_stage_tables_match_operator_composition(spark, corpus, tmp_pat
         expected_m, spark.createDataFrame(gaz[["term_id", "description"]])
     )
 
+    signals = ["similarity", "heuristic_keywords", "ner_signal"]
     m_cols = expected_m.columns
-    assert sorted(out["mentions"].columns) == sorted(m_cols + ["similarity"])
-    assert _bag(out["mentions"], m_cols) == _bag(expected_m, m_cols)
+    stored = [c for c in m_cols if c not in ("context", "term_name")]
+    assert sorted(out["mentions"].columns) == sorted(stored + signals)
+    titles = spark.createDataFrame(gaz[["term_id", "title"]]).select(
+        "term_id", F.coalesce("title", F.lit("")).alias("term_name")
+    )
+    mentions = mention_context(out["mentions"], transcripts).join(F.broadcast(titles), "term_id")
+    assert _bag(mentions, m_cols) == _bag(expected_m, m_cols)
+
     assert out["scored"].columns == SCORED_COLS
     assert _bag(out["scored"], SCORED_COLS) == _bag(expected_s, SCORED_COLS)
-    joined = out["mentions"].drop("similarity").join(out["scored"], SCORED_COLS[:5])
-    assert _bag(joined, expected_s.columns) == _bag(expected_s, expected_s.columns)
-    sims = out["scored"].filter(F.col("term_id").isin(hot)).select("term_id", "similarity")
+    view = mentions.join(out["scored"], SPAN_KEY)
+    assert view.count() == out["mentions"].count()
+    assert _bag(view, expected_s.columns) == _bag(expected_s, expected_s.columns)
+    sims = out["mentions"].filter(F.col("term_id").isin(hot)).select("term_id", "similarity")
     assert {(r[0], r[1]) for r in sims.distinct().collect()} == {(hot[0], 0.0), (hot[1], 0.0)}
-    assert out["scored"].filter(F.col("similarity") > 0).count() > 0
+    assert out["mentions"].filter(F.col("similarity") > 0).count() > 0
+
+    entity_map = canonical_entities(gaz)
+    triples = all_triples(transcripts, expected_m, entity_map)
+    for stage, want in (
+        ("entity_map", entity_map),
+        ("triples", triples),
+        ("edges", build_edges(triples)),
+        ("nodes", build_nodes(triples)),
+    ):
+        assert out[stage].columns == want.columns, stage
+        assert _bag(out[stage], want.columns) == _bag(want, want.columns), stage
 
 
 def test_stage_runner_records_from_many_threads(spark, tmp_path):

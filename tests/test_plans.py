@@ -113,31 +113,46 @@ def test_scoring_is_single_pass(spark):
 
 
 def test_scored_stage_is_a_jvm_projection(spark, tmp_path):
-    """The pipeline's scored stage: the mention scan computes
+    """The pipeline's mention and scored stages: the mention scan computes
     ``similarity`` inside its one Python pass (no separate Python eval
-    node), and ``score_columns`` over the parquet mention table is a
+    node); the mention stage's signal projection is whole-stage
+    codegen'd and adds no exchange to the scan's one; and
+    ``classify_columns`` over the parquet mention table is a
     whole-stage-codegen'd projection with no Python eval node and no
-    exchange."""
+    exchange, reading only the span key, ``similarity`` and the
+    signals."""
     import re
 
     from entity_extractor_spark.operators.mentions import extract_mentions
-    from entity_extractor_spark.operators.scoring import score_columns
-    from entity_extractor_spark.pipeline import SCORED_COLS
+    from entity_extractor_spark.operators.scoring import classify_columns
+    from entity_extractor_spark.pipeline import SCORED_COLS, SPAN_KEY, mention_table
     from entity_extractor_spark.synth import SynthConfig, make_gazetteer, make_transcripts, to_spark
 
     cfg = SynthConfig(seed=5, n_terms=8, n_convs=10)
     gaz = make_gazetteer(cfg)
-    m = extract_mentions(to_spark(spark, make_transcripts(cfg, gaz)), gaz, similarity=True)
-    scan_plan = P.formatted_plan(m)
+    transcripts = to_spark(spark, make_transcripts(cfg, gaz))
+    scan_plan = P.formatted_plan(extract_mentions(transcripts, gaz, similarity=True))
     assert "EvalPython" not in scan_plan and "MapInPandas" in scan_plan, scan_plan
+    m = mention_table(transcripts, gaz, similarity=True)
+    assert P.count_exchanges(P.formatted_plan(m)) == 1
+    # codegen shows in AQE's final plan only: run the stage first
+    m.collect()
+    stage_plan = P.formatted_plan(m)
+    assert "EvalPython" not in stage_plan, stage_plan
+    assert re.search(
+        r"\(\d+\) Project \[codegen id : \d+\]\nOutput \[\d+\]: \[[^\]]*\bheuristic_keywords#",
+        stage_plan,
+    ), stage_plan
     m.write.parquet(str(tmp_path / "mentions"))
-    scored = score_columns(spark.read.parquet(str(tmp_path / "mentions"))).select(*SCORED_COLS)
+    scored = classify_columns(spark.read.parquet(str(tmp_path / "mentions"))).select(*SCORED_COLS)
     plan = P.formatted_plan(scored)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
     assert "Exchange" not in plan, plan
     # an interpreted expression (e.g. a higher-order function) drops its
     # Project out of codegen: the tree then shows "Project (n)", not "* Project (n)"
     assert not re.search(r"(?m)^[\s+\-:]*Project \(\d+\)", plan), plan
+    read = re.findall(r"(\w+):", re.search(r"ReadSchema: (.*)", plan).group(1))
+    assert read == SPAN_KEY + ["similarity", "heuristic_keywords", "ner_signal"], plan
 
 
 def test_topk_uses_take_ordered(spark):
